@@ -8,7 +8,9 @@ DuckDB-oracle SQL twins.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import json
+from collections.abc import Callable, Iterable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -24,18 +26,40 @@ def entry(spark: SparkSession) -> DataFrame:
     events = load_table(spark, SMOKE_SF_DIR, "events")
     return events_market_summary(events)
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md section 2.
+def _round(path: Path) -> int:
+    return int(path.stem.removeprefix("CORRECTNESS_r"))
 
-    Rotation is re-applied here (idempotent) so the driver's first-50
-    window is correct regardless of module IMPORT order: if
-    registry_llmdata is imported before registry (their import is
-    circular), the module-end rotation would have run over a partially
-    populated registry."""
-    registry._rotate_for_driver()
-    return dict(registry.QUERIES)
+def correctness_files() -> list[Path]:
+    """The committed driver results beside this file, oldest round first."""
+    files = Path(__file__).resolve().parent.glob("CORRECTNESS_r*.json")
+    return sorted(files, key=_round)
+
+def driver_order(
+    names: Iterable[str], files: Iterable[Path] | None = None
+) -> list[str]:
+    """Order ``names`` for the driver, which hash-checks only the first 50.
+
+    A query is green in a round when its row there has ``hash_match`` true
+    and no ``err``.  Never-green queries come first, in the given order;
+    the rest follow from the oldest last-green round to the newest, ties
+    broken by position in that round's file (the driver's own order).
+    """
+    last_green: dict[str, tuple[int, int]] = {}
+    for path in correctness_files() if files is None else files:
+        for pos, (name, row) in enumerate(json.loads(path.read_text()).items()):
+            if row.get("hash_match") is True and row.get("err") is None:
+                last_green[name] = (_round(path), pos)
+    names = list(names)
+    never = [n for n in names if n not in last_green]
+    green = sorted((n for n in names if n in last_green), key=last_green.__getitem__)
+    return never + green
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every registered query, stalest driver check first (``driver_order``)."""
+    return {n: registry.QUERIES[n] for n in driver_order(registry.QUERIES)}
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL twin for each oracle-checkable query."""
-    registry._rotate_for_driver()
-    return dict(registry.ORACLE_SQL)
+    """DuckDB-runnable ANSI SQL twin for each oracle-checkable query, in
+    the same order as ``queries()``."""
+    return {n: registry.ORACLE_SQL[n] for n in driver_order(registry.QUERIES)
+            if n in registry.ORACLE_SQL}

@@ -33,6 +33,7 @@ from ..functions.hashing import (
     perm_params,
     shingles_expr,
 )
+from ..session import session_parallelism
 
 # Hot-bucket cap: a (band-hash | shingle) bucket holding more ids than
 # this is dropped BEFORE pair expansion.  Pair blowup inside a bucket is
@@ -57,7 +58,7 @@ def _spread(df: DataFrame) -> DataFrame:
     partitions and AQE's coalescer re-merges any over-split output, so the
     cost is one pass-through shuffle that the CPU-bound projection
     amortizes."""
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    return df.repartition(session_parallelism(df.sparkSession))
 
 def _pairs_within_bucket(buckets: DataFrame, ids_col: str = "ids") -> DataFrame:
     """Expand a sorted doc-id array column into (doc_a < doc_b) pairs.
@@ -704,10 +705,11 @@ def minhash_jaccard_estimate(
     per-row-expensive work -- so the shingling + signature projection
     runs only over candidate docs, in ONE shared pass (the shingle array
     feeds both the k-min signature and the distinct-shingle set), not
-    the five full-corpus passes a naive four-way join costs.  The two
-    feature joins key on that filtered frame; the corpus itself never
-    shuffles, and the exact Jaccard runs ONLY on banding survivors,
-    never all-pairs.  |A∪B| is computed as
+    the five full-corpus passes a naive four-way join costs.  The pairs
+    explode to one (pair, doc) row per side, join those features once,
+    and pivot back to (a, b) with ``max_by``/``min_by``; the corpus
+    itself never shuffles, and the exact Jaccard runs ONLY on banding
+    survivors, never all-pairs.  |A∪B| is computed as
     |A|+|B|-|A∩B| so only the intersection's array pass runs per pair.
     Two empty shingle sets are byte-identical content: Jaccard 1.0 by
     definition, never a zero division."""

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.numeric import qround
+from ..session import session_parallelism
 
 def _safe_corr(x: str, y: str):
     """Pearson correlation that returns NULL (not DIVIDE_BY_ZERO) for a
@@ -278,7 +279,7 @@ def _chunked_trailing(
         # partition at bench scale, serializing the window it exists to
         # parallelize.
         .repartition(
-            df.sparkSession.sparkContext.defaultParallelism,
+            session_parallelism(df.sparkSession),
             *part_cols,
             "__chunk",
         )
@@ -1212,75 +1213,21 @@ def _rolling_vol_stack(
     bars -> log returns -> per-horizon rolling stddev (full windows
     only), stacked to (symbol, horizon, rv) rows.
 
-    Parallelism (guide s2.5/s2.6): a bounded-horizon sliding frame is
-    row-local, but ``partitionBy(symbol)`` caps the window stage at
-    |symbols| tasks -- one billion-minute symbol history is one
-    straggler task, and Spark recomputes a moving frame from scratch
-    per row (max(horizons) x |bars| buffer visits).  The stddev pass
-    therefore runs per (symbol, CHUNK): rows are split into fixed
-    ``chunk_rows`` blocks by their per-symbol row number (one cheap
-    O(1)-per-row window pass), each block is prepended with the
-    previous block's last max(h)-1 rows as context-only carries, and a
-    frame is emitted only when COUNT over it equals the horizon --
-    exactly the global "rn >= h" full-window rule, over exactly the
-    same h-row frame in the same order, so every stddev_samp fold is
-    IEEE-identical to the single-partition formulation while the stage
-    parallelism scales with data volume instead of symbol count.  The
-    log-return lag stays a single per-symbol pass (it is O(1) per row
-    and needs the true predecessor across any calendar gap); the tiny
-    returns frame is lineage-cut so the chunk and carry branches read
-    it once."""
-    max_h = max(horizons)
-    if chunk_rows <= max_h:
-        # ValueError, not assert: stripped under python -O, and a
-        # violated precondition silently corrupts seam rows.
-        raise ValueError(
-            f"_rolling_vol_stack: chunk_rows ({chunk_rows}) must exceed"
-            f" max(horizons) ({max_h}) so one carry block covers a frame"
-        )
+    The stddev frames run per (symbol, row-block) via
+    ``_chunked_trailing``; the log-return lag rides its ``pre`` hook,
+    so it sees the true predecessor across every block seam.  Each
+    symbol's first bar has a NULL return, which ``count`` skips, so no
+    frame holding it reaches ``count == h``: the emitted frames and
+    every stddev_samp fold match the one-partition-per-symbol form."""
     bars = _minute_bars(events).filter(F.col("close") > 0)
-    w = Window.partitionBy("symbol").orderBy("minute_window")
-    ret = F.log(F.col("close") / F.lag("close").over(w))
-    # NOTE: the per-symbol returns need one more window pass (the lag
-    # crosses calendar gaps, O(1)/row); the chunk duplication below is
-    # the one-pass explode(array(own, next)) form -- no union branch, no
-    # checkpoint of the returns frame (r14, the _chunked_trailing
-    # rewrite rationale).
-    with_ret = bars.select(
-        "symbol",
-        F.row_number().over(w).alias("rn"),
-        ret.alias("r"),
-    ).filter(F.col("r").isNotNull())
-    # rn comes from the pre-filter bar series, so per-symbol rn is
-    # gap-free EXCEPT for the dropped first bar -- blocks still hold at
-    # most chunk_rows rows and tails carry max_h - 1 rows forward, which
-    # is all the full-window rule needs.
-    blk = (F.col("rn") - 1) - ((F.col("rn") - 1) % chunk_rows)
-    tail = (F.col("rn") - 1) % chunk_rows >= chunk_rows - (max_h - 1)
-    chunked = (
-        with_ret.select(
-            "symbol",
-            "rn",
-            "r",
-            F.explode(
-                F.when(tail, F.array(blk, blk + chunk_rows)).otherwise(
-                    F.array(blk)
-                )
-            ).alias("chunk"),
-        )
-        .withColumn("carry", F.col("chunk") != blk)
-        # explicit pinned-count (symbol, chunk) exchange -- see
-        # _chunked_trailing: hashpartitioning(symbol) would silently
-        # satisfy the window's clustering (serial per symbol), and an
-        # unpinned repartition is AQE-coalescible by BYTES, which
-        # serializes this CPU-bound window stage at small inputs
-        .repartition(
-            bars.sparkSession.sparkContext.defaultParallelism,
-            "symbol",
-            "chunk",
-        )
+    rows, wc = _chunked_trailing(
+        bars.select("symbol", "minute_window", "close"),
+        ["symbol"],
+        ["minute_window"],
+        max(horizons),
+        chunk_rows,
+        pre=lambda w: [F.log(F.col("close") / F.lag("close").over(w)).alias("r")],
     )
-    wc = Window.partitionBy("symbol", "chunk").orderBy("rn")
     cols = []
     for h in horizons:
         wf = wc.rowsBetween(-(h - 1), 0)
@@ -1289,7 +1236,7 @@ def _rolling_vol_stack(
                 F.count("r").over(wf) == h, F.stddev_samp("r").over(wf)
             ).alias(f"rv_{h}")
         )
-    rolled = chunked.select("symbol", "carry", *cols).filter(~F.col("carry"))
+    rolled = rows.select("symbol", "__carry", *cols).filter(~F.col("__carry"))
     return rolled.select(
         "symbol",
         F.expr(
@@ -1315,8 +1262,6 @@ def volatility_cones(events: DataFrame, horizons: tuple = (5, 20, 60)) -> DataFr
     percentiles aggregate at (symbol x horizon) cardinality.  Exact
     percentile is the oracle twin; KLL at 100 TB as usual."""
     stacked = _rolling_vol_stack(events, horizons)
-    from ..functions.numeric import qround
-
     return (
         stacked.groupBy("symbol", "horizon")
         .agg(
@@ -1358,8 +1303,6 @@ def volatility_cones_approx(
     must land between the exact quantiles at p +/- 0.01, a real
     rank-error assertion with 100x headroom over the sketch's 1e-4
     guarantee.  Same shared single window sort as the exact cone."""
-    from ..functions.numeric import qround
-
     stacked = _rolling_vol_stack(events, horizons)
     approx = F.percentile_approx("rv", [0.25, 0.5, 0.75], 10000)
     # ONE exact percentile aggregate for all nine quantiles (3 bands x

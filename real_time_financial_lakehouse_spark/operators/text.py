@@ -763,15 +763,23 @@ def bm25_search(
     (conditional sums -- the query-term list is a compile-time constant,
     so tf per term is a column, not a join); every other frame (N,
     avgdl, df per term, the postings unpivot) is a marginal of that
-    doc-cardinality aggregate, whose exchange subtree Spark's
-    ReuseExchange collapses to a single execution.  The former shape
+    doc-cardinality aggregate, which an eager ``localCheckpoint`` cuts
+    so all three read one materialized copy.  The former shape
     re-tokenized the corpus once per consumer (4 scans in the plan) and
     shuffle-joined postings back to the dl table; now nothing
     corpus-sized is ever joined or re-read.  Top-N is
     TakeOrderedAndProject, never a global sort.  ln() on both engines,
-    quantized at the boundary."""
+    quantized at the boundary.  Repeated query terms count once; an
+    empty query returns no rows."""
     from ..functions.numeric import qround
 
+    qlist = list(dict.fromkeys(query_terms))
+    if not qlist:
+        return documents.select(
+            "doc_id",
+            F.lit(0).cast("long").alias("n_matched_terms"),
+            F.lit(None).cast("double").alias("bm25"),
+        ).limit(0)
     terms = (
         _spread(documents.select("doc_id", "text"))
         .select(
@@ -780,7 +788,6 @@ def bm25_search(
         )
         .filter(F.length("term") >= 3)
     )
-    qlist = list(query_terms)
     # Eager lineage cut on the NARROW per-doc aggregate (doc_id + k + 1
     # longs -- the guide-s8 "lightweight proxy", never text): its three
     # consumers (stats, df marginal, postings unpivot) prune DIFFERENT
@@ -799,11 +806,13 @@ def bm25_search(
         F.count(F.lit(1)).cast("double").alias("n_docs"),
         F.avg("dl").alias("avgdl"),
     )
-    stack_args = ", ".join(f"'{t}', __tf_{i}" for i, t in enumerate(qlist))
+    stack_args = [
+        c for i, t in enumerate(qlist) for c in (F.lit(t), F.col(f"__tf_{i}"))
+    ]
     tf_tbl = per_doc.select(
         "doc_id",
         "dl",
-        F.expr(f"stack({len(qlist)}, {stack_args}) AS (term, tf)"),
+        F.stack(F.lit(len(qlist)), *stack_args).alias("term", "tf"),
     ).filter(F.col("tf") > 0)
     df_tbl = tf_tbl.groupBy("term").agg(
         F.count(F.lit(1)).cast("double").alias("df")

@@ -2759,557 +2759,6 @@ def q_winsorize_values(spark: SparkSession, sf_dir: str) -> DataFrame:
 # LLM-data-pipeline registrations (dedup / similarity / text / multimodal)
 from . import registry_llmdata  # noqa: E402,F401
 
-# --------------------------------------------------------------------------
-# Driver-verification rotation.
-#
-# The correctness driver hash-checks the FIRST 50 entries of ``queries()``
-# (observed: CORRECTNESS_r01 and _r02 each contain exactly the first 50
-# registration-order names).  With 120+ registered queries, a fixed order
-# would leave the tail permanently unverified by the external gate, so each
-# round we rotate the not-yet-driver-verified queries to the front.  Every
-# query -- regardless of position -- is still checked every round by the
-# local sf0.001/sf0.01 parity suite (tests/test_oracle_parity.py), which
-# runs the identical DuckDB comparison.  See VERIFICATION.md for the
-# round-by-round union of driver-verified names.
-
-# Green (rows+schema+hash) in CORRECTNESS_r01 and _r02:
-_DRIVER_VERIFIED_R1_R2 = [
-    "gold_market_summary", "minute_ohlc", "daily_rollup_totals",
-    "value_percentiles", "event_type_pivot", "gold_ctas",
-    "partitioned_day_rollup", "gold_csv_roundtrip", "parse_props_json",
-    "bronze_normalize", "fill_and_flag", "interval_shift",
-    "format_and_time", "json_roundtrip", "silver_sliding_window",
-    "training_filter", "union_all_buckets", "distinct_user_event_pairs",
-    "users_intersect", "users_except", "latest_20_events", "sma_5",
-    "price_diff", "rsi_14", "last_prev_delta", "pricing_summary",
-    "shipping_priority", "regional_revenue", "returned_item_report",
-    "promo_revenue_share", "order_priority_counts", "brand_margin",
-    "customers_with_orders", "customers_without_orders",
-    "latest_order_asof", "streaming_silver_roundtrip", "sessionize_users",
-    "trailing_range_avg", "distinct_user_counts", "streaming_sessionize",
-    "streaming_dedup", "ema_per_symbol", "streaming_ema_stateful",
-    "ols_volatility_price", "ml_price_prediction",
-    "top_orders_per_customer", "customer_order_distribution",
-    "small_order_revenue", "large_volume_customers",
-    "priority_line_counts",
-]
-
-# Round-3 front: the 50 unverified queries the driver should check this
-# round, highest-value families first (the round-1 verdict called out the
-# LLM-data layer and the late TPC-H/OLAP/streaming additions).
-_ROUND3_FRONT = [
-    # dedup / similarity ladder
-    "dedup_exact", "minhash_signatures", "lsh_candidate_pairs",
-    "ngram_jaccard_pairs", "simhash_fingerprints", "dedup_clusters",
-    "fuzzy_dedup_keep", "cosine_topk", "ann_ivf_topk",
-    "dedup_embedding_cosine", "embedding_norms", "incremental_dedup",
-    # text analysis
-    "token_stats", "text_quality", "lang_id", "bpe_token_stats",
-    "winnow_fingerprints", "doc_fingerprints", "top_terms",
-    "media_feature_summary", "repetition_stats", "quality_gate",
-    "vocab_coverage", "token_length_histogram", "word_entropy",
-    "tf_idf_terms",
-    # training-pipeline ops
-    "stratified_sample", "grouped_head_sample", "normalize_corpus",
-    "contamination_check", "pack_sequences", "mixture_sample",
-    "cluster_assign", "user_zscores",
-    # TPC-H / OLAP shapes flagged in the round-1 verdict
-    "nation_activity", "cube_totals", "grouping_sets_activity",
-    "merge_upsert", "value_band_summary", "segment_activity_salted",
-    "disjunctive_predicate_revenue", "supplier_part_counts",
-    "idle_rich_customers", "symbol_bounds", "user_histories",
-    "event_type_unpivot", "user_state_history",
-    # streaming joins
-    "streaming_enriched_segments", "streaming_click_purchase",
-    "streaming_click_purchase_outer",
-]
-
-# Green (rows+schema+hash, or rows-only where no oracle by design) in
-# CORRECTNESS_r03: all of _ROUND3_FRONT except user_histories (red: the
-# driver's canonicalizer could not hash its then-array<long> output; the
-# query now emits a joined string and is re-fronted for r4).
-_DRIVER_VERIFIED_R3 = [n for n in _ROUND3_FRONT if n != "user_histories"]
-
-# Round-4 front: the re-shaped user_histories plus every remaining
-# never-driver-checked query (round-2 TPC-H shapes, the technical
-# indicator suite, sketches, watermarked streaming, versioned-table /
-# layout / analytics additions from round 3) = exactly 50.
-_ROUND4_FRONT = [
-    "user_histories",
-    # streaming (watermarked dedup / tumbling / rollups / MERGE)
-    "streaming_dedup_watermarked", "streaming_tumbling_counts",
-    "streaming_windowed_rollup", "streaming_symbol_stats",
-    "streaming_incremental_gold", "streaming_table_changes",
-    # sketches
-    "distinct_user_counts_approx", "value_percentiles_approx",
-    # late TPC-H shapes
-    "forecast_revenue", "min_cost_part_supplier", "volume_shipping",
-    "market_share", "product_profit", "important_parts",
-    "top_supplier_revenue", "dominant_part_suppliers",
-    "waiting_order_suppliers",
-    # technical indicators
-    "vwap_daily", "bollinger_bands", "max_drawdown", "bar_gaps",
-    "symbol_correlations", "daily_return_volatility", "atr_14",
-    "stochastic_oscillator", "obv", "beta_vs_market", "macd_summary",
-    "donchian_channels",
-    # windows / ranking / export
-    "order_rank_percentiles", "sorted_export_events",
-    "weighted_symbol_price", "rolling_median", "winsorize_values",
-    "resample_ffill", "hourly_from_minute_rollup",
-    "latest_order_asof_tolerant",
-    # versioned tables / layout
-    "versioned_gold_changes", "versioned_gold_time_travel",
-    "zorder_events_layout",
-    # analytics
-    "funnel_counts", "retention_cohorts",
-    # LLM-data round-3 additions
-    "ann_ivf_kmeans_topk", "chunk_documents", "edit_distance_pairs",
-    "term_positions", "simhash_near_pairs", "unigram_logprob",
-    "pca_embeddings",
-]
-
-# Green in CORRECTNESS_r04: all of _ROUND4_FRONT except the four err
-# rows (pca_embeddings crashed the driver canonicalizer on its
-# then-array<double> column; the three sketch queries had no oracle and
-# recorded err: no_oracle).  All four were re-shaped for r5 -- scalar
-# certificate outputs with real oracle twins -- and are re-fronted.
-_ROUND4_ERR = [
-    "pca_embeddings", "distinct_user_counts_approx",
-    "value_percentiles_approx", "ann_ivf_kmeans_topk",
-]
-_DRIVER_VERIFIED_R4 = [n for n in _ROUND4_FRONT if n not in _ROUND4_ERR]
-
-# Round-5 front: the four re-shaped r4 err rows first (the judge checks
-# they come back clean), then 46 of the 58 never-driver-checked
-# oracle-exact queries -- retrieval/ANN, versioned-table, dedup-audit,
-# microstructure and diagnostics families prioritized.  The 12 deferred
-# names (simple indicator/window shapes, all locally parity-green) plus
-# rows-only bpe_train_merges queue for r6.
-_ROUND5_FRONT = _ROUND4_ERR + [
-    # retrieval / ANN / embeddings
-    "bm25_search", "hybrid_rrf_search", "ann_pq_adc_topk",
-    "ann_ivfpq_topk", "ann_hyperplane_topk", "retrieve_rerank",
-    "quantize_embeddings", "label_centroids", "semantic_dedup_keep",
-    # dedup audits / pipeline ops
-    "minhash_jaccard_estimate", "bloom_incremental_dedup",
-    "dedup_keep_priority", "source_overlap_matrix", "boilerplate_strip",
-    "redact_pii", "token_budget_mixture", "weighted_sample_per_source",
-    "shard_manifest", "dataset_split_counts", "corpus_summary",
-    # text / language-model analysis
-    "bigram_logprob", "ngram_novelty", "cross_entropy_eval",
-    "heavy_hitters_cms", "kmv_distinct_estimate", "zipf_fit",
-    "benford_check", "png_media_features",
-    # versioned tables / layout / joins
-    "versioned_delete_where", "versioned_append_evolution",
-    "versioned_restore", "bucketed_revenue_join",
-    # streaming
-    "streaming_user_cms", "streaming_seasonal_anomaly",
-    # microstructure / finance
-    "order_flow_imbalance", "kyle_lambda", "dollar_bars",
-    "volatility_cones", "cci_20", "return_autocorr",
-    # profiling / analytics
-    "profile_events", "key_skew_profile", "selfjoin_size_estimate",
-    "event_gap_stats", "anomaly_episodes", "user_transition_matrix",
-]
-
-# Green in CORRECTNESS_r05: the entire round-5 front, 50/50 (rows +
-# schema + hash) -- including the four re-shaped r4 err rows.
-_DRIVER_VERIFIED_R5 = list(_ROUND5_FRONT)
-
-# Round-6 front: the 38-query r6 queue from VERIFICATION.md (the 12
-# indicator/window shapes deferred from r5, every round-5 addition, the
-# re-shaped ml_price_prediction re-check, and rows-only-no-more
-# bpe_train_merges under its exactly-unrolled oracle) plus the first 12
-# round-5-continuation queries = exactly 50.  The remaining 27
-# continuation queries queue for r7.
-_ROUND6_FRONT = [
-    # deferred indicator / window shapes (r5 deferral list)
-    "term_positions_udtf", "shared_window_pairs", "debounce_events",
-    "quality_deciles", "twap_daily", "engulfing_patterns",
-    "pivot_points", "williams_r_14", "range_volatility", "mad_outliers",
-    "skyline_days", "seasonal_baseline",
-    # round-5 additions
-    "jpeg_media_features", "wav_media_features", "expectation_report",
-    "psi_drift", "streaming_psi_drift", "streaming_expectation_gate",
-    "volatility_cones_approx", "bpe_encode_report",
-    "embedding_dim_profile", "ann_index_delta_report",
-    "bipower_jump_stats", "ts_monotonicity_report", "custom_source_gold",
-    "streaming_custom_source_gold", "custom_sink_roundtrip",
-    "versioned_compaction", "tpch_refresh_cycle", "pairs_spread_zscore",
-    "dedup_funnel", "ses_forecast", "event_pagerank", "customer_rfm",
-    "session_event_pmi", "embedding_outliers", "bpe_train_merges",
-    # re-check: rows-only in r1/r2 under its old shape; now emits the
-    # closed-form OLS prediction + mllib_close certificate
-    "ml_price_prediction",
-    # first 12 round-5-continuation queries (r7 takes the rest)
-    "amihud_illiquidity", "roll_spread", "var_cvar_report",
-    "black_scholes_pricer", "holt_forecast", "heikin_ashi",
-    "cusum_changepoints", "hurst_exponent", "ri_orphans", "fd_check",
-    "order_window_activity", "knn_label_vote",
-]
-
-# Green in CORRECTNESS_r06 AND re-confirmed green by the (identical)
-# r07 window: the entire round-6 front, 50/50.
-_DRIVER_VERIFIED_R6_R7 = list(_ROUND6_FRONT)
-
-# Round-8 front: the 28 queries the driver has NEVER checked across
-# rounds 1-7 (the cumulative union of CORRECTNESS_r01..r07 is 244/272;
-# these are the missing 28, including the round-8-rebuilt
-# pca_power_iteration), plus the 22 oldest round-1 queries as
-# regression guards = exactly 50.  With this window green the
-# externally verified union reaches 272/272 for the first time.
-_ROUND8_FRONT = [
-    # never driver-checked (r6/r7 verdict item #2)
-    "pca_power_iteration", "centroid_silhouette", "kmeans_unrolled",
-    "nb_lang_classifier", "kama_adaptive_ma", "ulcer_index",
-    "domain_temperature_mixture", "session_graph_triangles",
-    "gif_media_features", "versioned_vacuum", "streaming_cusum_monitor",
-    "rolling_beta", "file_skipping_report", "drawdown_duration",
-    "cross_correlation_lags", "kmv_set_ops", "stl_weekly_decompose",
-    "funnel_time_to_convert", "shipping_delay_stats", "revenue_gini",
-    "scd2_point_in_time_join", "association_rules", "cohort_ltv",
-    "ks_two_sample", "bootstrap_mean_ci", "copurchase_pairs",
-    "ichimoku_cloud", "target_encoding_loo",
-    # round-1 regression guards (oldest driver-green queries)
-    "gold_market_summary", "minute_ohlc", "daily_rollup_totals",
-    "value_percentiles", "event_type_pivot", "gold_ctas",
-    "partitioned_day_rollup", "gold_csv_roundtrip", "parse_props_json",
-    "bronze_normalize", "fill_and_flag", "interval_shift",
-    "format_and_time", "json_roundtrip", "silver_sliding_window",
-    "training_filter", "union_all_buckets", "distinct_user_event_pairs",
-    "users_intersect", "users_except", "latest_20_events", "sma_5",
-]
-
-# Green in CORRECTNESS_r08: the entire round-8 front, 50/50 -- the
-# externally verified union reached 272/272 pre-round-8 queries.
-_DRIVER_VERIFIED_R8 = list(_ROUND8_FRONT)
-
-# Round-9 front: the 24 round-8 additions the driver has NEVER checked
-# (parity-swept at sf0.001+sf0.01 but outside every driver window so
-# far; min_variance_portfolio fronted only after its moment-quantization
-# de-flake proved 20x-consecutive green at both sf points), plus the 26
-# oldest-verified round-1/2 queries that were NOT in the r8 guard half
-# (last externally checked in CORRECTNESS_r01/r02, 7+ rounds ago) = 50.
-# With this window green the verified union reaches 296/296 of the
-# pre-round-9 registry.  ml_price_prediction is excluded from the guard
-# half (re-verified r6) and priority_line_counts queues for r10.
-#
-_ROUND9_FRONT = [
-    # never driver-checked round-8 additions
-    "adx_14", "almgren_chriss_schedule", "aroon_10", "bs_greeks",
-    "customer_rfm_approx", "dp_noise_counts", "ewma_riskmetrics_vol",
-    "hard_negative_mining", "jl_projection_distortion",
-    "kalman_price_smooth", "keltner_channels",
-    "matryoshka_truncation_report", "mfi_14", "min_variance_portfolio",
-    "quality_deciles_approx", "readability_scores", "spearman_ic_daily",
-    "split_leakage_embeddings", "streaming_kalman_level",
-    "streaming_vpin", "supertrend", "versioned_clone_divergence",
-    "video_media_features", "vpin_toxicity",
-    # oldest-verified regression guards (r1/r2 vintage, age rotation)
-    "price_diff", "rsi_14", "last_prev_delta", "pricing_summary",
-    "shipping_priority", "regional_revenue", "returned_item_report",
-    "promo_revenue_share", "order_priority_counts", "brand_margin",
-    "customers_with_orders", "customers_without_orders",
-    "latest_order_asof", "streaming_silver_roundtrip",
-    "sessionize_users", "trailing_range_avg", "distinct_user_counts",
-    "streaming_sessionize", "streaming_dedup", "ema_per_symbol",
-    "streaming_ema_stateful", "ols_volatility_price",
-    "top_orders_per_customer", "customer_order_distribution",
-    "small_order_revenue", "large_volume_customers",
-]
-
-# CORRECTNESS_r09.json came back 50/50 green on exactly _ROUND9_FRONT,
-# so all of it is externally verified as of round 9.
-_DRIVER_VERIFIED_R9 = list(_ROUND9_FRONT)
-
-# ROUND-10 FRONT (retired; green 50/50 in CORRECTNESS_r10): the 19
-# dual-sf parity-verified at creation, r9 freeze sweep 630/630, and
-# flake-shaken 20x at BOTH sf points before fronting per the
-# VERIFICATION.md rule (760/760 green, 2026-08-15, see VERIFICATION.md
-# round-10 section) -- plus the 31 stalest external checks by the age
-# policy: priority_line_counts (r1-vintage, last externally checked in
-# CORRECTNESS_r01) and the first 30 of the r3-vintage block in
-# _DRIVER_VERIFIED_R3 order.  With this window green the externally
-# verified union reaches 315/315 -- every query registered before
-# round 10 driver-checked at least once.
-#
-# ROUND-11 QUEUE (per the age policy, do not activate early): the 17
-# round-10 in-round additions first (bipower_variation_jumps,
-# variance_ratio, intraday_seasonality, drawdown_episodes,
-# historical_var_cvar, ngram_novelty_rate, l_diversity_report,
-# pii_density_by_source, shard_skew_report, streaming_minute_ohlc,
-# return_moments_profile, cross_sectional_momentum,
-# lsh_banding_efficiency, implied_vol_newton, streaming_kmv_distinct,
-# quality_filter_funnel, packing_efficiency_sweep --
-# all dual-sf parity-verified and
-# 20x-flake-shaken at creation), then the r3-vintage remainder in
-# _DRIVER_VERIFIED_R3 order (pack_sequences, mixture_sample,
-# cluster_assign, user_zscores, nation_activity, cube_totals,
-# grouping_sets_activity, merge_upsert, value_band_summary, ...)
-# filling the remaining 33 slots.
-_ROUND10_FRONT = [
-    # never driver-checked round-9 additions (flake-shaken 20x dual-sf)
-    "corwin_schultz_spread", "triple_barrier_labels", "sortino_ratio",
-    "spread_half_life", "har_rv_regression", "volume_profile",
-    "turnover_hhi", "omega_ratio", "calmar_ratio", "updown_capture",
-    "gap_fill_probability", "retrieval_mrr_ndcg",
-    "semdedup_threshold_sweep", "tokenizer_fertility",
-    "streaming_turnover_hhi", "mutual_information_profile",
-    "k_anonymity_report", "dedup_cluster_histogram",
-    "ngram_coverage_curve",
-    # stalest external checks: the lone r1-vintage straggler ...
-    "priority_line_counts",
-    # ... and the first 30 of the r3-vintage block (last checked
-    # CORRECTNESS_r03, 7 rounds ago), in r3-front order
-    "dedup_exact", "minhash_signatures", "lsh_candidate_pairs",
-    "ngram_jaccard_pairs", "simhash_fingerprints", "dedup_clusters",
-    "fuzzy_dedup_keep", "cosine_topk", "ann_ivf_topk",
-    "dedup_embedding_cosine", "embedding_norms", "incremental_dedup",
-    "token_stats", "text_quality", "lang_id", "bpe_token_stats",
-    "winnow_fingerprints", "doc_fingerprints", "top_terms",
-    "media_feature_summary", "repetition_stats", "quality_gate",
-    "vocab_coverage", "token_length_histogram", "word_entropy",
-    "tf_idf_terms", "stratified_sample", "grouped_head_sample",
-    "normalize_corpus", "contamination_check",
-]
-
-# CORRECTNESS_r10.json came back 50/50 green on exactly _ROUND10_FRONT,
-# so all of it is externally verified as of round 10; the cumulative
-# union covers every query registered before round 10.
-_DRIVER_VERIFIED_R10 = list(_ROUND10_FRONT)
-
-# ROUND-11 FRONT (active): the 17 round-10 in-round additions -- all
-# dual-sf parity-verified and 20x flake-shaken at creation, re-shaken
-# 20x dual-sf this round after the advisor fixes (implied_vol_newton
-# strike clamp, streaming_minute_ohlc BIGINT micro-unit totals; see
-# VERIFICATION.md round-11 section) -- plus the 33 stalest external
-# checks by the age policy: the 19-query r3-vintage remainder (last
-# checked CORRECTNESS_r03, 8 rounds ago) in _DRIVER_VERIFIED_R3 order,
-# then the first 14 of the r4-vintage block (last checked
-# CORRECTNESS_r04, 7 rounds ago) in _ROUND4_FRONT order.  With this
-# window green the externally verified union reaches 332/332 -- every
-# query registered before round 11 driver-checked at least once.
-#
-# ROUND-12 QUEUE (ACTIVATED below as _ROUND12_FRONT in round 12): the
-# 23 round-11 in-round additions first (all 20x dual-sf shaken at
-# creation/freeze): ljung_box_autocorr, kupiec_var_backtest,
-# tail_dependence_matrix, window_funnel_stages,
-# embedding_centroid_drift, streaming_value_quantiles,
-# runs_test_randomness, realized_kernel_vol, cdar_conditional_drawdown,
-# js_divergence_drift, t_closeness_report, dedup_precision_recall_audit,
-# code_prose_classifier, treynor_information_ratios,
-# lee_ready_tick_classification, streaming_session_merge, mode_per_user,
-# trigram_interpolated_logprob, garch_filter_vol,
-# hayashi_yoshida_covariance, kendall_tau_matrix,
-# calendar_anomaly_report, newey_west_tstat;
-# then the r4-vintage remainder in _ROUND4_FRONT order
-# (dominant_part_suppliers, waiting_order_suppliers, vwap_daily,
-# bollinger_bands, max_drawdown, bar_gaps, symbol_correlations,
-# daily_return_volatility, atr_14, stochastic_oscillator, obv,
-# beta_vs_market, macd_summary, donchian_channels,
-# order_rank_percentiles, sorted_export_events, weighted_symbol_price,
-# rolling_median, winsorize_values, resample_ffill,
-# hourly_from_minute_rollup, latest_order_asof_tolerant,
-# versioned_gold_changes, versioned_gold_time_travel,
-# zorder_events_layout, funnel_counts, retention_cohorts,
-# chunk_documents, edit_distance_pairs, term_positions,
-# simhash_near_pairs, unigram_logprob -- 32 names), then the
-# r5-vintage block in _ROUND5_FRONT order (pca_embeddings,
-# distinct_user_counts_approx, value_percentiles_approx,
-# ann_ivf_kmeans_topk, bm25_search, hybrid_rrf_search, ...) filling
-# the remaining slots.
-_ROUND11_FRONT = [
-    # never driver-checked round-10 additions (re-shaken 20x dual-sf
-    # this round, post-advisor-fix)
-    "bipower_variation_jumps", "variance_ratio", "intraday_seasonality",
-    "drawdown_episodes", "historical_var_cvar", "return_moments_profile",
-    "cross_sectional_momentum", "implied_vol_newton",
-    "ngram_novelty_rate", "l_diversity_report", "pii_density_by_source",
-    "shard_skew_report", "quality_filter_funnel",
-    "packing_efficiency_sweep", "lsh_banding_efficiency",
-    "streaming_minute_ohlc", "streaming_kmv_distinct",
-    # stalest external checks: the r3-vintage remainder (last checked
-    # CORRECTNESS_r03), in r3-front order
-    "pack_sequences", "mixture_sample", "cluster_assign", "user_zscores",
-    "nation_activity", "cube_totals", "grouping_sets_activity",
-    "merge_upsert", "value_band_summary", "segment_activity_salted",
-    "disjunctive_predicate_revenue", "supplier_part_counts",
-    "idle_rich_customers", "symbol_bounds", "event_type_unpivot",
-    "user_state_history", "streaming_enriched_segments",
-    "streaming_click_purchase", "streaming_click_purchase_outer",
-    # ... and the first 14 of the r4-vintage block (last checked
-    # CORRECTNESS_r04), in r4-front order
-    "user_histories", "streaming_dedup_watermarked",
-    "streaming_tumbling_counts", "streaming_windowed_rollup",
-    "streaming_symbol_stats", "streaming_incremental_gold",
-    "streaming_table_changes", "forecast_revenue",
-    "min_cost_part_supplier", "volume_shipping", "market_share",
-    "product_profit", "important_parts", "top_supplier_revenue",
-]
-
-# CORRECTNESS_r11.json came back 50/50 green on exactly _ROUND11_FRONT
-# (rows + schema + hash vs the DuckDB oracle), so all of it is
-# externally verified as of round 11; the cumulative union covers every
-# query registered before round 11 (332/332 per the round-11 verdict).
-_DRIVER_VERIFIED_R11 = list(_ROUND11_FRONT)
-
-# ROUND-12 FRONT (retired; CORRECTNESS_r12 came back 50/50 green on
-# exactly this window): the 23 round-11 in-round additions -- the
-# only registry names never driver-checked, all dual-sf parity-verified
-# and 20x flake-shaken at creation/freeze -- plus the 27 stalest
-# external checks by the age policy: the head of the r4-vintage
-# remainder (last checked CORRECTNESS_r04, 8 rounds ago) in
-# _ROUND4_FRONT order.  With this window green the externally verified
-# union reaches 355/355 -- every query registered before round 12
-# driver-checked at least once.
-#
-# ROUND-13 QUEUE (ACTIVATED below as _ROUND13_FRONT, exactly as
-# documented here at the round-12 freeze): the
-# round-12 in-round additions first (all 20x dual-sf shaken at
-# creation/freeze): kendall_tau_windowed, range_vol_estimators,
-# cornish_fisher_var, return_sign_markov, downside_beta,
-# trade_duration_profile, round_number_clustering,
-# intra_label_cosine_dispersion, length_quantile_bands,
-# streaming_mode_per_user, streaming_range_vol, cointegration_screen,
-# embedding_outlier_report, pairs_spread_backtest; then the r4-vintage
-# remainder tail
-# (chunk_documents, edit_distance_pairs, term_positions,
-# simhash_near_pairs, unigram_logprob -- 5 names), then the r5-vintage
-# block in _ROUND5_FRONT order (pca_embeddings,
-# distinct_user_counts_approx, value_percentiles_approx,
-# ann_ivf_kmeans_topk, bm25_search, hybrid_rrf_search, ...) filling
-# the remaining slots.
-_ROUND12_FRONT = [
-    # never driver-checked round-11 additions (dual-sf shaken 20x at
-    # creation; re-verified in the round-11 judge's own oracle run)
-    "ljung_box_autocorr", "kupiec_var_backtest", "tail_dependence_matrix",
-    "window_funnel_stages", "embedding_centroid_drift",
-    "streaming_value_quantiles", "runs_test_randomness",
-    "realized_kernel_vol", "cdar_conditional_drawdown",
-    "js_divergence_drift", "t_closeness_report",
-    "dedup_precision_recall_audit", "code_prose_classifier",
-    "treynor_information_ratios", "lee_ready_tick_classification",
-    "streaming_session_merge", "mode_per_user",
-    "trigram_interpolated_logprob", "garch_filter_vol",
-    "hayashi_yoshida_covariance", "kendall_tau_matrix",
-    "calendar_anomaly_report", "newey_west_tstat",
-    # stalest external checks: the first 27 of the r4-vintage remainder
-    # (last checked CORRECTNESS_r04), in r4-front order
-    "dominant_part_suppliers", "waiting_order_suppliers", "vwap_daily",
-    "bollinger_bands", "max_drawdown", "bar_gaps", "symbol_correlations",
-    "daily_return_volatility", "atr_14", "stochastic_oscillator", "obv",
-    "beta_vs_market", "macd_summary", "donchian_channels",
-    "order_rank_percentiles", "sorted_export_events",
-    "weighted_symbol_price", "rolling_median", "winsorize_values",
-    "resample_ffill", "hourly_from_minute_rollup",
-    "latest_order_asof_tolerant", "versioned_gold_changes",
-    "versioned_gold_time_travel", "zorder_events_layout",
-    "funnel_counts", "retention_cohorts",
-]
-
-# CORRECTNESS_r12.json came back 50/50 green on exactly _ROUND12_FRONT
-# (rows + schema + hash vs the DuckDB oracle), so the externally
-# verified union now covers every query registered before round 12
-# (355/355 per the round-12 verdict's independent recount).
-_DRIVER_VERIFIED_R12 = list(_ROUND12_FRONT)
-
-# ROUND-13 FRONT (active): exactly the queue documented above at the
-# round-12 freeze -- the 14 round-12 in-round additions (the only
-# registry names never driver-checked; all 20x dual-sf shaken at
-# creation/freeze and 14/14 green in the round-12 judge's own oracle
-# run), then the 5-name r4-vintage remainder tail, then the head of the
-# r5-vintage block (last fronted CORRECTNESS_r05, 8 rounds ago) in
-# _ROUND5_FRONT order filling the window to 50.  With this green the
-# externally verified union reaches 369/369 -- every query registered
-# before round 13 driver-checked at least once.
-#
-# ROUND-14 QUEUE (per the age policy, do not activate early): the
-# round-13 in-round additions first (each 20x dual-sf shaken at
-# creation: ann_recall_curve, rank_biased_overlap,
-# ivf_nprobe_recall_curve, streaming_label_centroids,
-# mmr_diversified_topk, component_var_decomposition,
-# epps_effect_curve, hill_tail_index, heaps_law_fit,
-# query_likelihood_search, permutation_entropy,
-# granger_causality_pairs, pacf_durbin_levinson, lexical_richness
-# -- 14 names); then
-# the r5-vintage remainder in _ROUND5_FRONT order
-# (order_flow_imbalance, kyle_lambda, dollar_bars, volatility_cones,
-# cci_20, return_autocorr, profile_events, key_skew_profile,
-# selfjoin_size_estimate, event_gap_stats, anomaly_episodes,
-# user_transition_matrix, versioned_delete_where,
-# versioned_append_evolution, versioned_restore, bucketed_revenue_join,
-# streaming_user_cms, streaming_seasonal_anomaly -- 18 names); then the
-# r6-vintage block in _ROUND6_FRONT order (term_positions_udtf,
-# shared_window_pairs, debounce_events, quality_deciles, twap_daily,
-# engulfing_patterns, ...) filling the remaining slots.
-_ROUND13_FRONT = [
-    # never driver-checked round-12 additions
-    "kendall_tau_windowed", "range_vol_estimators", "cornish_fisher_var",
-    "return_sign_markov", "downside_beta", "trade_duration_profile",
-    "round_number_clustering", "intra_label_cosine_dispersion",
-    "length_quantile_bands", "streaming_mode_per_user",
-    "streaming_range_vol", "cointegration_screen",
-    "embedding_outlier_report", "pairs_spread_backtest",
-    # r4-vintage remainder tail (last checked CORRECTNESS_r04)
-    "chunk_documents", "edit_distance_pairs", "term_positions",
-    "simhash_near_pairs", "unigram_logprob",
-    # r5-vintage block head (last fronted CORRECTNESS_r05), in
-    # _ROUND5_FRONT order: the 4 re-shaped r4-err certificates, the
-    # retrieval/ANN family, dedup audits, pipeline ops, text/LM analysis
-] + _ROUND5_FRONT[:31]
-
-assert len(_ROUND13_FRONT) == 50, len(_ROUND13_FRONT)
-
-# CORRECTNESS_r13.json came back 50/50 green on exactly _ROUND13_FRONT
-# (rows + schema + hash vs the DuckDB oracle) -- the externally verified
-# union covers every query registered before round 13.
-_DRIVER_VERIFIED_R13 = list(_ROUND13_FRONT)
-
-# ROUND-14 FRONT (active): exactly the queue documented above at the
-# round-13 freeze -- the 14 round-13 in-round additions (the only
-# registry names never driver-checked; the round-13 optimization judge
-# explicitly asked for external coverage of the four build-tail members
-# granger_causality_pairs / lexical_richness / pacf_durbin_levinson /
-# permutation_entropy, verdict item #8), then the r5-vintage remainder
-# (last fronted CORRECTNESS_r05) in _ROUND5_FRONT order, then the head
-# of the r6-vintage block in _ROUND6_FRONT order filling the window to
-# 50.  With this green the externally verified union reaches 383/383 --
-# every registered query driver-checked at least once.
-_ROUND14_FRONT = [
-    # never driver-checked round-13 additions
-    "ann_recall_curve", "rank_biased_overlap", "ivf_nprobe_recall_curve",
-    "streaming_label_centroids", "mmr_diversified_topk",
-    "component_var_decomposition", "epps_effect_curve", "hill_tail_index",
-    "heaps_law_fit", "query_likelihood_search", "permutation_entropy",
-    "granger_causality_pairs", "pacf_durbin_levinson", "lexical_richness",
-    # r5-vintage remainder (19 names, last checked CORRECTNESS_r05)
-] + _ROUND5_FRONT[31:] + _ROUND6_FRONT[:17]
-
-assert len(_ROUND14_FRONT) == 50, len(_ROUND14_FRONT)
-
-
-def _rotate_for_driver() -> None:
-    front = [n for n in _ROUND14_FRONT if n in QUERIES]
-    verified_names = (
-        _DRIVER_VERIFIED_R1_R2 + _DRIVER_VERIFIED_R3 + _DRIVER_VERIFIED_R4
-        + _DRIVER_VERIFIED_R5 + _DRIVER_VERIFIED_R6_R7
-        + _DRIVER_VERIFIED_R8 + _DRIVER_VERIFIED_R9 + _DRIVER_VERIFIED_R10
-        + _DRIVER_VERIFIED_R11 + _DRIVER_VERIFIED_R12 + _DRIVER_VERIFIED_R13
-    )
-    placed = set(front) | set(verified_names)
-    rest_unverified = [n for n in QUERIES if n not in placed]
-    verified = [n for n in verified_names if n in QUERIES and n not in front]
-    order = front + rest_unverified + verified
-    for d in (QUERIES, ORACLE_SQL):
-        reordered = {n: d[n] for n in order if n in d}
-        d.clear()
-        d.update(reordered)
-
-# NB: _rotate_for_driver() is invoked at the very END of this module --
-# round-4-continuation queries register below this point, and the round-5
-# front names several of them, so rotating here would silently leave them
-# out of the driver's first-50 window.
-
 
 _PROFILE_COLS = ["event_id", "event_type", "props", "ts", "user_id", "value"]
 _PROFILE_ORACLE = "\nUNION ALL\n".join(
@@ -10130,7 +9579,3 @@ def _pacf_sql() -> str:
 def q_pacf_durbin_levinson(spark: SparkSession, sf_dir: str) -> DataFrame:
     return finance.pacf_durbin_levinson(_events(spark, sf_dir))
 
-
-# All registrations (including registry_llmdata's and the late blocks
-# above) are complete -- order the registry for the external driver gate.
-_rotate_for_driver()

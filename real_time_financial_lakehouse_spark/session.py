@@ -30,6 +30,12 @@ def default_parallelism() -> int:
         return max(1, int(env))
     return os.cpu_count() or 8
 
+def session_parallelism(spark: SparkSession) -> int:
+    """The running session's ``spark.default.parallelism``: the partition
+    count the operators pin their CPU-bound repartitions to.  The only
+    ``defaultParallelism`` read, which Spark Connect does not support."""
+    return spark.sparkContext.defaultParallelism
+
 def get_spark(
     app_name: str = "rtfl-spark",
     master: str | None = None,

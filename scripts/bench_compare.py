@@ -36,8 +36,11 @@ def main() -> int:
             movers.append((r_adj, q, oq[q], nq[q]))
     print(f"common={len(common)} old_total={o['value']} new_total={n['value']}")
     print(f"canary old={ocan} new={ncan} host_adj={adj:.4f}")
-    gm = math.exp(sum(logs) / len(logs))
-    print(f"raw geomean new/old = {gm:.4f}; canary-adjusted = {gm/adj:.4f}")
+    if logs:
+        gm = math.exp(sum(logs) / len(logs))
+        print(f"raw geomean new/old = {gm:.4f}; canary-adjusted = {gm/adj:.4f}")
+    else:
+        print("no common queries")
     print(f"\nmovers (canary-adjusted ratio beyond {args.thresh}x):")
     for r_adj, q, a, b in sorted(movers):
         print(f"  {r_adj:6.2f}x  {q}: {a:.3f} -> {b:.3f}")

@@ -749,6 +749,16 @@ def test_bm25_ranks_term_rich_docs_and_saturates_tf(spark):
     # multi-term coverage beats single-term tf spam (k1 saturation)
     assert by_id[0]["bm25"] > by_id[2]["bm25"]
     assert by_id[0]["bm25"] > by_id[1]["bm25"]
+    # a repeated term counts once
+    repeated = tx.bm25_search(docs, query_terms=("hash", "join", "hash", "scan"))
+    assert repeated.collect() == rows
+    # an empty query is an empty frame with the normal schema
+    empty = tx.bm25_search(docs, query_terms=())
+    assert empty.schema == tx.bm25_search(docs).schema
+    assert empty.collect() == []
+    # a quote inside a term is data, not SQL
+    quoted = tx.bm25_search(docs, query_terms=("hash", "o'clock")).collect()
+    assert {r["doc_id"] for r in quoted} == {0, 1, 2}
 
 
 # ---------------------------------------------------------------------------
