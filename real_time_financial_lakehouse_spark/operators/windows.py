@@ -388,97 +388,110 @@ def event_pagerank(
     graph this ranks the "gravity" of each state (which state the
     process keeps returning to), the same centrality a 100 TB user/item
     graph pipeline computes -- here at event-type cardinality so every
-    iteration is exactly checkable.
+    iteration is exactly checkable.  ``n_iter=0`` returns the uniform
+    1/N start vector; ``d`` outside [0, 1] or a negative ``n_iter``
+    raises ``ValueError``.
 
-    Scale: the corpus-sized work is ONE window lag + ONE partial-agg
-    groupBy (building the edge list); every PageRank iteration after
-    that runs at node/edge cardinality -- rank state joins the edge
-    list, aggregates inflow per target, adds teleport + dangling mass.
-    The node/edge frames are CUT from the corpus lineage with eager
-    localCheckpoints (the dedup.min_label_components discipline) before
-    the loop: without the cut each unrolled iteration re-embeds the
-    full scan+window subtree, and driver-side analysis of the resulting
-    plan (measured 682 KB of formatted physical plan at 5 iterations)
-    dominates the query -- the corpus is read twice (edge list + node
-    set), never per iteration."""
-    from pyspark.sql import Window as W
+    Scale: the corpus is scanned ONCE -- one window lag and one
+    partial-agg groupBy to (from_type, to_type) counts, at most
+    |types|^2 rows.  Each user's first event keeps its NULL from_type,
+    so the same counts carry the node set (every event is the to_type
+    of its own row).  The counts collapse into ONE row, and the node
+    set, edge weights and all ``n_iter`` power iterations are array
+    expressions over that row: a single ``aggregate`` fold at node
+    cardinality, exploded back to one row per node.  No join, no driver
+    round trip, no Spark job while the frame is built, and the plan
+    does not grow with ``n_iter``.  A NULL event_type is a node whose
+    inflow is dropped (the oracle's NULL-key join does the same)."""
+    if not 0.0 <= d <= 1.0:
+        raise ValueError(f"event_pagerank: damping d must be in [0, 1], got {d}")
+    if n_iter < 0:
+        raise ValueError(f"event_pagerank: n_iter must be >= 0, got {n_iter}")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    counts = (
+        events.select(
+            F.lag("event_type").over(w).alias("from_type"),
+            F.col("event_type").alias("to_type"),
+        )
+        .groupBy("from_type", "to_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    c = F.col("c")
+    nodes = F.col("nodes")
 
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    steps = (
-        events.withColumn("from_type", F.lag("event_type").over(w))
-        .filter(F.col("from_type").isNotNull())
-        .select("from_type", F.col("event_type").alias("to_type"))
-    )
-    # ONE corpus-lineage cut at edge cardinality (|types|^2 max):
-    # out_tot and edges re-derive from the checkpointed counts per
-    # reference -- tiny joins/aggs, linear plan growth -- so the loop
-    # never pays an extra materialization job for them
-    counts = steps.groupBy("from_type", "to_type").agg(
-        F.count(F.lit(1)).alias("n")
-    ).localCheckpoint(eager=True)
-    out_tot = counts.groupBy("from_type").agg(F.sum("n").alias("tot"))
-    edges = counts.join(out_tot, "from_type").select(
-        "from_type",
-        "to_type",
-        (F.col("n").cast("double") / F.col("tot")).alias("w"),
-    )
-    nodes = events.select(
-        F.col("event_type").alias("node")
-    ).distinct().localCheckpoint(eager=True)  # node cardinality
-    n_nodes = nodes.count()  # node-cardinality metadata (like a manifest)
-    if n_nodes == 0:  # empty feed: an empty report, not a zero division
-        return events.sparkSession.createDataFrame(
-            [], "node string, pagerank double, n_in_edges long, n_out_edges long"
-        )
-    ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("pr"))
-    for _ in range(n_iter):
-        inflow = (
-            ranks.join(edges, ranks["node"] == edges["from_type"])
-            .groupBy(F.col("to_type").alias("node"))
-            .agg(F.sum(F.col("pr") * F.col("w")).alias("s"))
-        )
-        dangling = (
-            ranks.join(out_tot, ranks["node"] == out_tot["from_type"], "left_anti")
-            .agg(F.coalesce(F.sum("pr"), F.lit(0.0)).alias("m"))
-        )
-        # per-iteration lineage cut: `ranks` feeds BOTH inflow and the
-        # dangling mass, so without the cut each iteration's plan embeds
-        # two copies of the previous one (2^n_iter growth -- measured
-        # 240 KB of physical plan at 5 iterations even with the base
-        # frames checkpointed); with it every pass is one constant-size
-        # node-cardinality plan
-        ranks = (
-            nodes.join(inflow, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    F.lit((1.0 - d) / n_nodes)
-                    + F.lit(d)
-                    * (F.coalesce(F.col("s"), F.lit(0.0)) + F.col("m") / n_nodes)
-                ).alias("pr"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    from ..functions.numeric import qround
+    def out_of(v):
+        return F.filter(c, lambda x: x["from_type"] == v)
 
-    in_edges = edges.groupBy(F.col("to_type").alias("node")).agg(
-        F.count(F.lit(1)).alias("n_in_edges")
+    graph = counts.agg(
+        F.collect_list(F.struct("from_type", "to_type", "n")).alias("c")
+    ).select(
+        c, F.array_sort(F.array_distinct(F.transform(c, lambda x: x["to_type"]))).alias("nodes")
     )
-    out_edges = edges.groupBy(F.col("from_type").alias("node")).agg(
-        F.count(F.lit(1)).alias("n_out_edges")
+    # per-node out-weight total and out-degree; a 0 total marks a
+    # dangling node (the NULL node is one: first events never become edges)
+    graph = graph.select(
+        c,
+        nodes,
+        F.transform(
+            nodes,
+            lambda v: F.aggregate(out_of(v), F.lit(0).cast("bigint"), lambda a, x: a + x["n"]),
+        ).alias("out_tot"),
+        F.transform(nodes, lambda v: F.size(out_of(v)).cast("bigint")).alias("n_out"),
     )
-    return (
-        ranks.join(in_edges, "node", "left")
-        .join(out_edges, "node", "left")
-        .select(
-            "node",
-            qround(F.col("pr"), 6).alias("pagerank"),
-            F.coalesce(F.col("n_in_edges"), F.lit(0)).alias("n_in_edges"),
-            F.coalesce(F.col("n_out_edges"), F.lit(0)).alias("n_out_edges"),
+
+    # one entry per node: its in-edges as (source position, weight)
+    def in_edge(x):
+        src = F.array_position(nodes, x["from_type"]).cast("int")
+        return F.struct(
+            src.alias("src"),
+            (x["n"].cast("double") / F.element_at("out_tot", src)).alias("w"),
         )
-        .orderBy("node")
+
+    graph = graph.select(
+        nodes,
+        "out_tot",
+        "n_out",
+        F.transform(
+            nodes,
+            lambda v: F.transform(
+                F.filter(c, lambda x: (x["to_type"] == v) & x["from_type"].isNotNull()),
+                in_edge,
+            ),
+        ).alias("ins"),
     )
+    n = F.greatest(F.size(nodes), F.lit(1)).cast("double")
+
+    def step(pr, _):
+        m = F.aggregate(
+            F.zip_with(pr, "out_tot", lambda p, o: F.when(o == 0, p).otherwise(0.0)),
+            F.lit(0.0),
+            lambda a, x: a + x,
+        )
+        return F.transform(
+            "ins",
+            lambda es: F.lit(1.0 - d) / n
+            + F.lit(d)
+            * (
+                F.aggregate(
+                    es,
+                    F.lit(0.0),
+                    lambda a, e: a + F.element_at(pr, e["src"]) * e["w"],
+                )
+                + m / n
+            ),
+        )
+
+    # array_repeat, not sequence: sequence(1, 0) counts down to [1, 0]
+    ranks = F.aggregate(
+        F.array_repeat(F.lit(0), n_iter), F.array_repeat(F.lit(1.0) / n, F.size(nodes)), step
+    )
+    row = F.arrays_zip(
+        nodes.alias("node"),
+        F.transform(ranks, lambda p: qround(p, 6)).alias("pagerank"),
+        F.transform("ins", lambda es: F.size(es).cast("bigint")).alias("n_in_edges"),
+        F.col("n_out").alias("n_out_edges"),
+    )
+    return graph.select(F.inline(row)).orderBy("node")
 
 
 def session_event_pmi(events: DataFrame, gap_min: int = 30) -> DataFrame:

@@ -600,6 +600,71 @@ def test_event_pagerank_known_graph(spark):
     assert out["A"]["n_out_edges"] == 1 and out["A"]["n_in_edges"] == 1
 
 
+
+def _twin_graph_events(path: str) -> None:
+    """Events parquet for the twin-parity graph: a self-loop (A->A), a
+    dangling node (D: in-edges only), a source-only node (S: out-edges
+    only), and a NULL event_type (B->NULL leaks mass; NULL->C is no
+    edge)."""
+    import pandas as pd
+
+    seqs = {
+        1: ["A", "A", "A", "B", "D"],
+        2: ["S", "A", "B"],
+        3: ["B", None, "C"],
+        4: ["A", "B", "A", "D"],
+        5: ["S", "B"],
+    }
+    rows = [
+        (uid * 100 + i, pd.Timestamp("2024-01-01") + pd.Timedelta(minutes=i), uid, t, 1.0, None)
+        for uid, seq in seqs.items()
+        for i, t in enumerate(seq)
+    ]
+    pd.DataFrame(
+        rows, columns=["event_id", "ts", "user_id", "event_type", "value", "props"]
+    ).astype({"props": "string"}).to_parquet(path, index=False)
+
+
+@pytest.mark.parametrize("d,n_iter", [(0.85, 5), (0.6, 0), (1.0, 3)])
+def test_event_pagerank_matches_twin_on_edge_case_graph(spark, tmp_path, d, n_iter):
+    """Spark's in-plan fold equals the DuckDB twin on a graph with every
+    edge case at once.  The NULL node is a dangling node whose inflow is
+    dropped on both engines, so the ranks sum to less than 1 by exactly
+    the mass sent along B->NULL; pin that."""
+    import duckdb
+
+    from real_time_financial_lakehouse_spark.operators.windows import event_pagerank
+    from real_time_financial_lakehouse_spark.oracle import compare_frames
+    from real_time_financial_lakehouse_spark.registry import _pagerank_oracle_sql
+
+    path = str(tmp_path / "events.parquet")
+    _twin_graph_events(path)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')")
+    twin = con.execute(_pagerank_oracle_sql(d, n_iter)).fetchdf()
+    got = event_pagerank(spark.read.parquet(path), d=d, n_iter=n_iter).toPandas()
+    assert compare_frames(got, twin) == []
+    out = {r.node: r for r in got.itertuples()}
+    assert set(out) == {"A", "B", "C", "D", "S", None}
+    assert out["S"].n_in_edges == 0 and out["S"].n_out_edges == 2
+    assert out["D"].n_out_edges == 0 and out["A"].n_in_edges == 3  # A, S, B -> A
+    assert out[None].n_in_edges == 0 and out[None].n_out_edges == 0
+    if n_iter == 0:
+        assert all(r.pagerank == pytest.approx(1 / 6, abs=1e-6) for r in out.values())
+    else:
+        assert sum(r.pagerank for r in out.values()) < 1.0 - 1e-3
+
+
+def test_event_pagerank_rejects_bad_parameters(spark):
+    """Out-of-range damping or a negative iteration count raises instead
+    of returning a plausible-looking rank vector."""
+    from real_time_financial_lakehouse_spark.operators.windows import event_pagerank
+
+    ev = load_table(spark, SF_SMOKE, "events")
+    for kw in ({"d": 1.5}, {"d": -0.1}, {"n_iter": -3}):
+        with pytest.raises(ValueError):
+            event_pagerank(ev, **kw)
+
 def test_ses_forecast_matches_reference_fold(spark):
     """The SES level and backtest MAE must equal a reference in-memory
     fold for a known series; a single-day symbol reports NULL MAE."""

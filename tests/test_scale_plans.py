@@ -1359,3 +1359,32 @@ def test_pairs_backtest_is_fold_at_pair_cardinality(spark):
     assert "BroadcastNestedLoopJoin" not in plan
     assert "BatchEvalPython" not in plan
     assert plan.count("Scan parquet") == 2, plan.count("Scan parquet")
+
+
+def test_lazy_queries_launch_no_job_while_built(spark):
+    """event_pagerank, cosine_topk and dedup_exact build as pure plans:
+    constructing them runs no Spark job, so an eager cut (a
+    localCheckpoint, a driver-side count) added to any of them fails
+    here.  Table handles are warmed first -- the first read of a parquet
+    path runs one schema job in the catalog, not in the query.  An empty
+    feed gives event_pagerank's full schema through the plan itself."""
+    from real_time_financial_lakehouse_spark import registry
+    from real_time_financial_lakehouse_spark.catalog import load_tables
+    from real_time_financial_lakehouse_spark.operators.windows import event_pagerank
+
+    load_tables(spark, SF_SMOKE)
+    sc = spark.sparkContext
+    group = "lazy-build-guard"
+    sc.setJobGroup(group, "build only")
+    try:
+        for name in ("event_pagerank", "cosine_topk", "dedup_exact"):
+            registry.QUERIES[name](spark, SF_SMOKE)
+        empty = event_pagerank(load_table(spark, SF_SMOKE, "events").limit(0))
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert empty.schema.simpleString() == (
+        "struct<node:string,pagerank:double,n_in_edges:bigint,n_out_edges:bigint>"
+    )
+    assert empty.count() == 0
