@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from ..operators.silver import sliding_window_agg
 from ..scratch import scratch_dir
+from . import drain, drain_merge, shard_stream
 
 def silver_query(
     bronze: DataFrame,
@@ -155,23 +156,13 @@ def silver_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     same SQL oracle as the batch sliding-window query."""
 
     out_dir = scratch_dir("rtfl_silver_out_")
-    ckpt_dir = scratch_dir("rtfl_silver_ckpt_")
-    from . import pinned_state_partitions
-
-    with pinned_state_partitions(spark) as ss:
-        q = run_silver_stream(
-            events_stream(ss, sf_dir), out_dir, ckpt_dir, available_now=True
-        )
-        q.awaitTermination()
-    silver_cols = (
-        "window_start timestamp, window_end timestamp, symbol string, "
-        "volatility double, average_price double, n_events bigint"
+    empty = drain(
+        spark,
+        lambda ss: silver_query(events_stream(ss, sf_dir)),
+        make_batch_processor(out_dir),
+        output_mode="update",
     )
-    if not any(f.endswith(".parquet") for f in os.listdir(out_dir)):
-        # an empty drained stream writes no files; that is an empty
-        # silver table, not an unreadable one
-        return spark.createDataFrame([], silver_cols)
-    return spark.read.parquet(out_dir).select(
+    return spark.read.schema(empty.schema).parquet(out_dir).select(
         "window_start", "window_end", "symbol", "volatility", "average_price", "n_events"
     )
 
@@ -185,25 +176,13 @@ def streaming_dedup_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     unbounded here because the fixture drain is finite (availableNow).
     Result must equal the plain events table -- the SQL oracle."""
 
-    out_dir = scratch_dir("rtfl_dedup_out_")
-    ckpt_dir = scratch_dir("rtfl_dedup_ckpt_")
-    from . import pinned_state_partitions
+    return drain(
+        spark, lambda ss: _doubled_events(ss, sf_dir).dropDuplicates(["event_id"])
+    ).select("event_id", "ts", "user_id", "event_type", "value")
 
-    with pinned_state_partitions(spark) as ss:
-        doubled = events_stream(ss, sf_dir).union(events_stream(ss, sf_dir))
-        deduped = doubled.dropDuplicates(["event_id"])
-        q = (
-            deduped.writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out_dir).select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
+def _doubled_events(ss: SparkSession, sf_dir: str) -> DataFrame:
+    """The events stream unioned with itself: every row arrives twice."""
+    return events_stream(ss, sf_dir).union(events_stream(ss, sf_dir))
 
 def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling event-time windows in streaming mode (the reference uses
@@ -218,13 +197,9 @@ def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..functions.numeric import qround
 
-    out_dir = scratch_dir("rtfl_tumble_out_")
-    ckpt_dir = scratch_dir("rtfl_tumble_ckpt_")
-    from . import pinned_state_partitions
-
-    with pinned_state_partitions(spark) as ss:
+    def build(ss: SparkSession) -> DataFrame:
         ev = events_stream(ss, sf_dir).withWatermark("ts", "1 minute")
-        agg = (
+        return (
             ev.groupBy(F.window("ts", "1 hour"), "event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
@@ -237,16 +212,8 @@ def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "total_value",
             )
         )
-        q = (
-            agg.writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out_dir).orderBy("window_start", "symbol")
+
+    return drain(spark, build).orderBy("window_start", "symbol")
 
 def streaming_dedup_watermarked_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``dropDuplicatesWithinWatermark``: the bounded-state form of the
@@ -260,27 +227,12 @@ def streaming_dedup_watermarked_roundtrip(spark: SparkSession, sf_dir: str) -> D
     arrives inside the watermark, so the result still equals the plain
     events table -- same oracle as streaming_dedup."""
 
-    out_dir = scratch_dir("rtfl_dedup_wm_out_")
-    ckpt_dir = scratch_dir("rtfl_dedup_wm_ckpt_")
-    from . import pinned_state_partitions
-
-    with pinned_state_partitions(spark) as ss:
-        doubled = events_stream(ss, sf_dir).union(events_stream(ss, sf_dir))
-        deduped = doubled.withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark(
-            ["event_id"]
-        )
-        q = (
-            deduped.writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out_dir).select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
+    return drain(
+        spark,
+        lambda ss: _doubled_events(ss, sf_dir)
+        .withWatermark("ts", "10 minutes")
+        .dropDuplicatesWithinWatermark(["event_id"]),
+    ).select("event_id", "ts", "user_id", "event_type", "value")
 
 def streaming_windowed_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chained event-time window aggregation in ONE streaming query:
@@ -300,17 +252,13 @@ def streaming_windowed_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..functions.numeric import qround
 
-    out_dir = scratch_dir("rtfl_rollup_out_")
-    ckpt_dir = scratch_dir("rtfl_rollup_ckpt_")
-    from . import pinned_state_partitions
-
-    with pinned_state_partitions(spark) as ss:
+    def build(ss: SparkSession) -> DataFrame:
         ev = events_stream(ss, sf_dir).withWatermark("ts", "1 minute")
         minute = ev.groupBy(F.window("ts", "1 minute"), "event_type").agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum("value").alias("sum_value"),
         )
-        five = (
+        return (
             minute.groupBy(F.window("window", "5 minutes"), "event_type")
             .agg(
                 F.sum("n_events").alias("n_events"),
@@ -325,16 +273,8 @@ def streaming_windowed_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "total_value",
             )
         )
-        q = (
-            five.writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out_dir).orderBy("window_start", "symbol")
+
+    return drain(spark, build).orderBy("window_start", "symbol")
 
 def streaming_incremental_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end incremental lakehouse loop: the events stream drains in
@@ -357,57 +297,17 @@ def streaming_incremental_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
     per commit; at billions of keys you shard the gold table by key
     range so each batch rewrites only touched shards."""
 
-    from ..operators import versioned
-
-    src_dir = _shared_event_shards(spark, sf_dir)
-    table_dir = os.path.join(scratch_dir("rtfl_incgold_tbl_"), "gold")
-    ckpt_dir = scratch_dir("rtfl_incgold_ckpt_")
-
-    events = _catalog_load(spark, sf_dir)
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        part = batch_df.groupBy(F.col("event_type").alias("symbol")).agg(
+    gold = _merge_events(
+        spark,
+        sf_dir,
+        lambda df: df.groupBy(F.col("event_type").alias("symbol")).agg(
             F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value")
-        )
-        if versioned.table_versions(table_dir):
-            prev = versioned.read_version(batch_df.sparkSession, table_dir)
-            merged = (
-                prev.unionByName(part)
-                .groupBy("symbol")
-                .agg(
-                    F.sum("n_events").alias("n_events"),
-                    F.sum("sum_value").alias("sum_value"),
-                )
-            )
-        else:
-            merged = part
-        versioned.idempotent_commit(
-            merged, table_dir, app_id="rtfl_incremental_gold", batch_id=batch_id
-        )
-
-    from . import pinned_state_partitions
-
-    with pinned_state_partitions(spark) as ss:
-        stream = (
-            ss.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(src_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(_merge)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    if not versioned.table_versions(table_dir):
-        # zero micro-batches (empty source): the gold table was never
-        # committed -- an empty snapshot, not a read error
-        return spark.createDataFrame(
-            [], "symbol string, n_events long, total_value double"
-        )
-    gold = versioned.read_version(spark, table_dir)
+        ),
+        lambda u: u.groupBy("symbol").agg(
+            F.sum("n_events").alias("n_events"), F.sum("sum_value").alias("sum_value")
+        ),
+        "rtfl_incremental_gold",
+    )
     return gold.select(
         "symbol",
         F.col("n_events").cast("long").alias("n_events"),
@@ -420,6 +320,23 @@ def _catalog_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import load_table
 
     return load_table(spark, sf_dir, "events")
+
+def _merge_events(
+    spark: SparkSession,
+    sf_dir: str,
+    partial: Callable[[DataFrame], DataFrame],
+    fold: Callable[[DataFrame], DataFrame],
+    app_id: str,
+) -> DataFrame:
+    """``drain_merge`` over the shared md5 shards of the events table."""
+    return drain_merge(
+        spark,
+        _shared_event_shards(spark, sf_dir),
+        _catalog_load(spark, sf_dir).schema,
+        partial,
+        fold,
+        app_id,
+    )
 
 
 _SHARD_CACHE: dict[tuple[str, int], str] = {}
@@ -497,73 +414,43 @@ def streaming_user_cms(
     batch; compaction is a no-op."""
     from ..functions.hashing import md5_long
 
-    src_dir = _shared_event_shards(spark, sf_dir)
     sketch_dir = scratch_dir("rtfl_cms_sketch_")
-    ckpt_dir = scratch_dir("rtfl_cms_ckpt_")
-
     events = _catalog_load(spark, sf_dir)
 
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        cells = (
-            batch_df.select(
-                "user_id",
-                F.explode(F.array(*[F.lit(j) for j in range(depth)])).alias("j"),
+    def _bucketed(df: DataFrame, *cols: str) -> DataFrame:
+        return df.select(
+            *cols, F.explode(F.array(*[F.lit(j) for j in range(depth)])).alias("j")
+        ).withColumn(
+            "bucket",
+            md5_long(
+                F.concat_ws(":", F.col("j").cast("string"), F.col("user_id").cast("string")),
+                hexdigits=7,
             )
-            .withColumn(
-                "bucket",
-                md5_long(
-                    F.concat_ws(
-                        ":", F.col("j").cast("string"), F.col("user_id").cast("string")
-                    ),
-                    hexdigits=7,
-                )
-                % width,
-            )
+            % width,
+        )
+
+    def _cells(df: DataFrame) -> DataFrame:
+        return (
+            _bucketed(df, "user_id")
             .groupBy("j", "bucket")
             .agg(F.count(F.lit(1)).alias("cell_total"))
         )
-        cells.write.mode("overwrite").parquet(
+
+    def _fold(batch_df: DataFrame, batch_id: int) -> None:
+        _cells(batch_df).write.mode("overwrite").parquet(
             os.path.join(sketch_dir, f"batch={batch_id}")
         )
 
-    from . import pinned_state_partitions
-
-    with pinned_state_partitions(spark) as ss:
-        stream = (
-            ss.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(src_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(_fold)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
+    src_dir = _shared_event_shards(spark, sf_dir)
+    empty = drain(spark, lambda ss: shard_stream(ss, events.schema, src_dir), _fold)
     sketch = (
-        spark.read.option("basePath", sketch_dir)
-        .parquet(os.path.join(sketch_dir, "batch=*"))
+        spark.read.schema(_cells(empty).schema)
+        .parquet(sketch_dir)
         .groupBy("j", "bucket")
         .agg(F.sum("cell_total").alias("cell_total"))
     )
     exact = events.groupBy("user_id").agg(F.count(F.lit(1)).alias("exact_count"))
-    pairs = exact.select(
-        "user_id",
-        "exact_count",
-        F.explode(F.array(*[F.lit(j) for j in range(depth)])).alias("j"),
-    ).withColumn(
-        "bucket",
-        md5_long(
-            F.concat_ws(
-                ":", F.col("j").cast("string"), F.col("user_id").cast("string")
-            ),
-            hexdigits=7,
-        )
-        % width,
-    )
+    pairs = _bucketed(exact, "user_id", "exact_count")
     return (
         pairs.join(F.broadcast(sketch), ["j", "bucket"])
         .groupBy("user_id")
@@ -603,56 +490,18 @@ def streaming_turnover_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from ..functions.numeric import qround
-    from ..operators import versioned
 
-    src_dir = _shared_event_shards(spark, sf_dir)
-    table_dir = os.path.join(scratch_dir("rtfl_hhi_tbl_"), "dv_state")
-    ckpt_dir = scratch_dir("rtfl_hhi_ckpt_")
-
-    events = _catalog_load(spark, sf_dir)
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        qty = F.get_json_object(F.col("props"), "$.k").cast("double")
-        part = batch_df.groupBy(
+    qty = F.get_json_object(F.col("props"), "$.k").cast("double")
+    state = _merge_events(
+        spark,
+        sf_dir,
+        lambda df: df.groupBy(
             F.date_trunc("day", F.col("ts")).alias("day"),
             F.col("event_type").alias("symbol"),
-        ).agg(F.sum(F.col("value") * qty).alias("dv"))
-        if versioned.table_versions(table_dir):
-            prev = versioned.read_version(batch_df.sparkSession, table_dir)
-            merged = (
-                prev.unionByName(part)
-                .groupBy("day", "symbol")
-                .agg(F.sum("dv").alias("dv"))
-            )
-        else:
-            merged = part
-        versioned.idempotent_commit(
-            merged, table_dir, app_id="rtfl_streaming_hhi", batch_id=batch_id
-        )
-
-    from . import pinned_state_partitions
-
-    with pinned_state_partitions(spark) as ss:
-        stream = (
-            ss.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(src_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(_merge)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    if not versioned.table_versions(table_dir):
-        return spark.createDataFrame(
-            [],
-            "day timestamp, n_symbols long, hhi double,"
-            " effective_names double, top_share double",
-        )
-    state = versioned.read_version(spark, table_dir)
+        ).agg(F.sum(F.col("value") * qty).alias("dv")),
+        lambda u: u.groupBy("day", "symbol").agg(F.sum("dv").alias("dv")),
+        "rtfl_streaming_hhi",
+    )
     wd = Window.partitionBy("day")
     total_day = F.sum("dv").over(wd)
     shares = state.select(
@@ -698,13 +547,6 @@ def streaming_minute_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     is (minutes x symbols), the table a real deployment would shard by
     minute range."""
     from ..functions.numeric import qround
-    from ..operators import versioned
-
-    src_dir = _shared_event_shards(spark, sf_dir)
-    table_dir = os.path.join(scratch_dir("rtfl_sohlc_tbl_"), "bars")
-    ckpt_dir = scratch_dir("rtfl_sohlc_ckpt_")
-
-    events = _catalog_load(spark, sf_dir)
 
     okey = F.struct(F.col("open_ts"), F.col("open_eid"))
     ckey = F.struct(F.col("close_ts"), F.col("close_eid"))
@@ -736,56 +578,21 @@ def streaming_minute_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_trades"),
         )
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        part = _partial(batch_df)
-        if versioned.table_versions(table_dir):
-            prev = versioned.read_version(batch_df.sparkSession, table_dir)
-            merged = (
-                prev.unionByName(part)
-                .groupBy("symbol", "minute_window")
-                .agg(
-                    F.min_by(F.col("open_ts"), okey).alias("open_ts"),
-                    F.min_by(F.col("open_eid"), okey).alias("open_eid"),
-                    F.min_by(F.col("open_v"), okey).alias("open_v"),
-                    F.max("high_v").alias("high_v"),
-                    F.min("low_v").alias("low_v"),
-                    F.max_by(F.col("close_ts"), ckey).alias("close_ts"),
-                    F.max_by(F.col("close_eid"), ckey).alias("close_eid"),
-                    F.max_by(F.col("close_v"), ckey).alias("close_v"),
-                    F.sum("sum_v_u").alias("sum_v_u"),
-                    F.sum("n_trades").alias("n_trades"),
-                )
-            )
-        else:
-            merged = part
-        versioned.idempotent_commit(
-            merged, table_dir, app_id="rtfl_streaming_ohlc", batch_id=batch_id
+    def _fold(merged: DataFrame) -> DataFrame:
+        return merged.groupBy("symbol", "minute_window").agg(
+            F.min_by(F.col("open_ts"), okey).alias("open_ts"),
+            F.min_by(F.col("open_eid"), okey).alias("open_eid"),
+            F.min_by(F.col("open_v"), okey).alias("open_v"),
+            F.max("high_v").alias("high_v"),
+            F.min("low_v").alias("low_v"),
+            F.max_by(F.col("close_ts"), ckey).alias("close_ts"),
+            F.max_by(F.col("close_eid"), ckey).alias("close_eid"),
+            F.max_by(F.col("close_v"), ckey).alias("close_v"),
+            F.sum("sum_v_u").alias("sum_v_u"),
+            F.sum("n_trades").alias("n_trades"),
         )
 
-    from . import pinned_state_partitions
-
-    with pinned_state_partitions(spark) as ss:
-        stream = (
-            ss.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(src_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(_merge)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    if not versioned.table_versions(table_dir):
-        return spark.createDataFrame(
-            [],
-            "symbol string, minute_window timestamp, open_price double,"
-            " high_price double, low_price double, close_price double,"
-            " total_value double, n_trades bigint",
-        )
-    state = versioned.read_version(spark, table_dir)
+    state = _merge_events(spark, sf_dir, _partial, _fold, "rtfl_streaming_ohlc")
     return state.select(
         "symbol",
         "minute_window",
@@ -826,14 +633,7 @@ def streaming_kmv_distinct(
     100 TB/day the state table is KBs."""
     from ..functions.hashing import md5_long
     from ..functions.numeric import qround
-    from ..operators import versioned
     from pyspark.sql import Window
-
-    src_dir = _shared_event_shards(spark, sf_dir)
-    table_dir = os.path.join(scratch_dir("rtfl_kmv_tbl_"), "sketch")
-    ckpt_dir = scratch_dir("rtfl_kmv_ckpt_")
-
-    events = _catalog_load(spark, sf_dir)
 
     def _bottom_k(df: DataFrame) -> DataFrame:
         w = Window.partitionBy("grp").orderBy("h")
@@ -843,43 +643,18 @@ def streaming_kmv_distinct(
             .select("grp", "h")
         )
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        part = _bottom_k(
-            batch_df.select(
+    state = _merge_events(
+        spark,
+        sf_dir,
+        lambda df: _bottom_k(
+            df.select(
                 F.col("event_type").alias("grp"),
                 md5_long(F.col("user_id").cast("string")).alias("h"),
             ).distinct()
-        )
-        if versioned.table_versions(table_dir):
-            prev = versioned.read_version(batch_df.sparkSession, table_dir)
-            merged = _bottom_k(prev.unionByName(part).distinct())
-        else:
-            merged = part
-        versioned.idempotent_commit(
-            merged, table_dir, app_id="rtfl_streaming_kmv", batch_id=batch_id
-        )
-
-    from . import pinned_state_partitions
-
-    with pinned_state_partitions(spark) as ss:
-        stream = (
-            ss.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(src_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(_merge)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    if not versioned.table_versions(table_dir):
-        return spark.createDataFrame(
-            [], "event_type string, n_kept bigint, kmv_estimate double"
-        )
-    state = versioned.read_version(spark, table_dir)
+        ),
+        lambda u: _bottom_k(u.distinct()),
+        "rtfl_streaming_kmv",
+    )
     sketch = state.groupBy("grp").agg(
         F.count(F.lit(1)).alias("n_kept"), F.max("h").alias("h_k")
     )
@@ -924,55 +699,16 @@ def streaming_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from ..functions.numeric import qround
-    from ..operators import versioned
 
-    src_dir = _shared_event_shards(spark, sf_dir)
-    table_dir = os.path.join(scratch_dir("rtfl_svq_tbl_"), "hist")
-    ckpt_dir = scratch_dir("rtfl_svq_ckpt_")
-
-    events = _catalog_load(spark, sf_dir)
-
-    def _partial(df: DataFrame) -> DataFrame:
-        return df.groupBy(
-            F.col("event_type").alias("symbol"), F.col("value")
-        ).agg(F.count(F.lit(1)).alias("cnt"))
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        part = _partial(batch_df)
-        if versioned.table_versions(table_dir):
-            prev = versioned.read_version(batch_df.sparkSession, table_dir)
-            merged = (
-                prev.unionByName(part)
-                .groupBy("symbol", "value")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-        else:
-            merged = part
-        versioned.idempotent_commit(
-            merged, table_dir, app_id="rtfl_streaming_svq", batch_id=batch_id
-        )
-
-    from . import pinned_state_partitions
-
-    with pinned_state_partitions(spark) as ss:
-        stream = (
-            ss.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(src_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(_merge)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    if not versioned.table_versions(table_dir):
-        return spark.createDataFrame(
-            [], "symbol string, p50 double, p90 double, p99 double"
-        )
-    state = versioned.read_version(spark, table_dir)
+    state = _merge_events(
+        spark,
+        sf_dir,
+        lambda df: df.groupBy(F.col("event_type").alias("symbol"), F.col("value")).agg(
+            F.count(F.lit(1)).alias("cnt")
+        ),
+        lambda u: u.groupBy("symbol", "value").agg(F.sum("cnt").alias("cnt")),
+        "rtfl_streaming_svq",
+    )
     wq = Window.partitionBy("symbol").orderBy("value")
     hist = state.withColumn("cum", F.sum("cnt").over(wq)).withColumn(
         "prev_cum", F.col("cum") - F.col("cnt")
@@ -1060,13 +796,6 @@ def streaming_session_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from ..functions.numeric import qround
-    from ..operators import versioned
-
-    src_dir = _shared_event_shards(spark, sf_dir)
-    table_dir = os.path.join(scratch_dir("rtfl_ssess_tbl_"), "sessions")
-    ckpt_dir = scratch_dir("rtfl_ssess_ckpt_")
-
-    events = _catalog_load(spark, sf_dir)
 
     gap = "INTERVAL 30 MINUTES"
 
@@ -1116,40 +845,9 @@ def streaming_session_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return _sessionize_intervals(rows)
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        part = _partial(batch_df)
-        if versioned.table_versions(table_dir):
-            prev = versioned.read_version(batch_df.sparkSession, table_dir)
-            merged = _sessionize_intervals(prev.unionByName(part))
-        else:
-            merged = part
-        versioned.idempotent_commit(
-            merged, table_dir, app_id="rtfl_streaming_sess", batch_id=batch_id
-        )
-
-    from . import pinned_state_partitions
-
-    with pinned_state_partitions(spark) as ss:
-        stream = (
-            ss.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(src_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(_merge)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    if not versioned.table_versions(table_dir):
-        return spark.createDataFrame(
-            [],
-            "user_id long, session_start timestamp, session_end timestamp,"
-            " n_events bigint, total_value double",
-        )
-    state = versioned.read_version(spark, table_dir)
+    state = _merge_events(
+        spark, sf_dir, _partial, _sessionize_intervals, "rtfl_streaming_sess"
+    )
     return state.select(
         "user_id",
         F.col("s_start").alias("session_start"),
@@ -1181,56 +879,17 @@ def streaming_mode_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per batch one partial-aggregated groupBy at state
     cardinality; the final rank sorts <= |types| rows per user."""
-    from ..operators import versioned
     from ..operators.rollup import mode_from_counts
 
-    src_dir = _shared_event_shards(spark, sf_dir)
-    table_dir = os.path.join(scratch_dir("rtfl_smode_tbl_"), "counts")
-    ckpt_dir = scratch_dir("rtfl_smode_ckpt_")
-
-    events = _catalog_load(spark, sf_dir)
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        part = batch_df.groupBy("user_id", "event_type").agg(
-            F.count(F.lit(1)).alias("n")
+    return mode_from_counts(
+        _merge_events(
+            spark,
+            sf_dir,
+            lambda df: df.groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("n")),
+            lambda u: u.groupBy("user_id", "event_type").agg(F.sum("n").alias("n")),
+            "rtfl_streaming_mode",
         )
-        if versioned.table_versions(table_dir):
-            prev = versioned.read_version(batch_df.sparkSession, table_dir)
-            merged = (
-                prev.unionByName(part)
-                .groupBy("user_id", "event_type")
-                .agg(F.sum("n").alias("n"))
-            )
-        else:
-            merged = part
-        versioned.idempotent_commit(
-            merged, table_dir, app_id="rtfl_streaming_mode", batch_id=batch_id
-        )
-
-    from . import pinned_state_partitions
-
-    with pinned_state_partitions(spark) as ss:
-        stream = (
-            ss.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(src_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(_merge)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    if not versioned.table_versions(table_dir):
-        return spark.createDataFrame(
-            [],
-            "user_id long, mode_event_type string, n_mode bigint,"
-            " n_total bigint, mode_share double",
-        )
-    state = versioned.read_version(spark, table_dir)
-    return mode_from_counts(state)
+    )
 
 
 def streaming_range_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1251,14 +910,7 @@ def streaming_range_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state is (symbols x days) -- calendar cardinality, never
     ticks; each merge joins bar-cardinality partials against
     same-cardinality state."""
-    from ..operators import versioned
     from ..operators.finance import _range_vol_from_ohlc
-
-    src_dir = _shared_event_shards(spark, sf_dir)
-    table_dir = os.path.join(scratch_dir("rtfl_srv_tbl_"), "dbars")
-    ckpt_dir = scratch_dir("rtfl_srv_ckpt_")
-
-    events = _catalog_load(spark, sf_dir)
 
     okey = F.struct(F.col("open_ts"), F.col("open_eid"))
     ckey = F.struct(F.col("close_ts"), F.col("close_eid"))
@@ -1283,53 +935,19 @@ def streaming_range_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        part = _partial(batch_df)
-        if versioned.table_versions(table_dir):
-            prev = versioned.read_version(batch_df.sparkSession, table_dir)
-            merged = (
-                prev.unionByName(part)
-                .groupBy("symbol", "day")
-                .agg(
-                    F.min_by(F.col("open_ts"), okey).alias("open_ts"),
-                    F.min_by(F.col("open_eid"), okey).alias("open_eid"),
-                    F.min_by(F.col("o"), okey).alias("o"),
-                    F.max("h").alias("h"),
-                    F.min("l").alias("l"),
-                    F.max_by(F.col("close_ts"), ckey).alias("close_ts"),
-                    F.max_by(F.col("close_eid"), ckey).alias("close_eid"),
-                    F.max_by(F.col("c"), ckey).alias("c"),
-                )
-            )
-        else:
-            merged = part
-        versioned.idempotent_commit(
-            merged, table_dir, app_id="rtfl_streaming_rv", batch_id=batch_id
+    def _fold(merged: DataFrame) -> DataFrame:
+        return merged.groupBy("symbol", "day").agg(
+            F.min_by(F.col("open_ts"), okey).alias("open_ts"),
+            F.min_by(F.col("open_eid"), okey).alias("open_eid"),
+            F.min_by(F.col("o"), okey).alias("o"),
+            F.max("h").alias("h"),
+            F.min("l").alias("l"),
+            F.max_by(F.col("close_ts"), ckey).alias("close_ts"),
+            F.max_by(F.col("close_eid"), ckey).alias("close_eid"),
+            F.max_by(F.col("c"), ckey).alias("c"),
         )
 
-    from . import pinned_state_partitions
-
-    with pinned_state_partitions(spark) as ss:
-        stream = (
-            ss.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(src_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(_merge)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    if not versioned.table_versions(table_dir):
-        return spark.createDataFrame(
-            [],
-            "symbol string, n_days bigint, parkinson_vol double,"
-            " garman_klass_vol double, rogers_satchell_vol double",
-        )
-    state = versioned.read_version(spark, table_dir)
+    state = _merge_events(spark, sf_dir, _partial, _fold, "rtfl_streaming_rv")
     return _range_vol_from_ohlc(state.select("symbol", "day", "o", "h", "l", "c"))
 
 
@@ -1358,12 +976,9 @@ def streaming_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid stage, which is itself fit_codebook's KMeans M-step)."""
     from ..functions.hashing import md5_long
     from ..functions.numeric import qround
-    from ..operators import versioned
     from ..operators.similarity import _as_double
 
     src_dir = scratch_dir("rtfl_scent_src_")
-    table_dir = os.path.join(scratch_dir("rtfl_scent_tbl_"), "sums")
-    ckpt_dir = scratch_dir("rtfl_scent_ckpt_")
 
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
     # Own shard fixture (derived frame, not the shared events copy):
@@ -1381,44 +996,16 @@ def streaming_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(gx).alias("gsum"), F.count(F.lit(1)).alias("n")
         )
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        part = _partial(batch_df)
-        if versioned.table_versions(table_dir):
-            prev = versioned.read_version(batch_df.sparkSession, table_dir)
-            merged = (
-                prev.unionByName(part)
-                .groupBy("label", "pos")
-                .agg(F.sum("gsum").alias("gsum"), F.sum("n").alias("n"))
-            )
-        else:
-            merged = part
-        versioned.idempotent_commit(
-            merged, table_dir, app_id="rtfl_streaming_cent", batch_id=batch_id
-        )
-
-    from . import pinned_state_partitions
-
-    with pinned_state_partitions(spark) as ss:
-        stream = (
-            ss.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(src_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(_merge)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    if not versioned.table_versions(table_dir):
-        return spark.createDataFrame(
-            [],
-            "label int, n_vectors bigint, centroid_norm double,"
-            " c0 double, c1 double, c2 double, c3 double",
-        )
-    state = versioned.read_version(spark, table_dir)
+    state = drain_merge(
+        spark,
+        src_dir,
+        emb.schema,
+        _partial,
+        lambda u: u.groupBy("label", "pos").agg(
+            F.sum("gsum").alias("gsum"), F.sum("n").alias("n")
+        ),
+        "rtfl_streaming_cent",
+    )
     m = F.col("gsum").cast("double") / (F.col("n").cast("double") * F.lit(1e8))
     return (
         state.groupBy("label")

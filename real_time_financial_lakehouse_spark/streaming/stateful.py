@@ -27,9 +27,13 @@ from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..functions.numeric import qround
 from ..scratch import scratch_dir
+from . import drain, drain_latest
+from .silver import events_stream
 
 EMA_ALPHA = 0.1
 
@@ -76,44 +80,12 @@ def ema_stream(events: DataFrame) -> DataFrame:
 def streaming_ema_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the stateful EMA over the events fixture as a genuine stream
     (availableNow), append each batch's update rows to parquet, and return
-    the LATEST row per symbol (max n_events) -- comparable to the batch
-    twin / SQL oracle."""
-
-    from .silver import events_stream
-
-    out_dir = scratch_dir("rtfl_ema_out_")
-    ckpt_dir = scratch_dir("rtfl_ema_ckpt_")
-
-    # file sinks are append-only; update-mode emissions land via
-    # foreachBatch batch-append -- the reference's silver sink shape
-    # (process_silver.py:82-93)
-    def _append(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out_dir)
-
-    from . import pinned_state_partitions
-
-    with pinned_state_partitions(spark) as ss:
-        q = (
-            ema_stream(events_stream(ss, sf_dir))
-            .writeStream.foreachBatch(_append)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    raw = spark.read.parquet(out_dir)
-    w = Window.partitionBy("symbol").orderBy(F.col("n_events").desc())
-    return (
-        raw.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "symbol",
-            "n_events",
-            (F.floor(F.col("ema_raw") * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias("ema"),
-        )
-        .orderBy("symbol")
-    )
+    the LATEST row per symbol -- comparable to the batch twin / SQL
+    oracle."""
+    latest = drain_latest(spark, lambda ss: ema_stream(events_stream(ss, sf_dir)))
+    return latest.select(
+        "symbol", "n_events", qround(F.col("ema_raw"), 6).alias("ema")
+    ).orderBy("symbol")
 
 def streaming_sessionize_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows in STREAMING mode: the same ``session_window``
@@ -123,18 +95,9 @@ def streaming_sessionize_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     expression, two execution modes; both check against the same
     gaps-and-islands SQL oracle."""
 
-    from pyspark.sql import functions as F
-
-    from ..functions.numeric import qround
-    from .silver import events_stream
-
-    out_dir = scratch_dir("rtfl_sess_out_")
-    ckpt_dir = scratch_dir("rtfl_sess_ckpt_")
-    from . import pinned_state_partitions
-
-    with pinned_state_partitions(spark) as ss:
+    def build(ss: SparkSession) -> DataFrame:
         ev = events_stream(ss, sf_dir).withWatermark("ts", "1 minute")
-        sessions = (
+        return (
             ev.groupBy(F.col("user_id"), F.session_window(F.col("ts"), "30 minutes"))
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
@@ -148,16 +111,8 @@ def streaming_sessionize_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
                 "total_value",
             )
         )
-        q = (
-            sessions.writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out_dir).orderBy("user_id", "session_start")
+
+    return drain(spark, build).orderBy("user_id", "session_start")
 
 def streaming_enrich_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static join: the events stream enriched row-by-row against
@@ -175,39 +130,54 @@ def streaming_enrich_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     streamed output an auditable bronze-style log.
     """
 
-    from pyspark.sql import functions as F
-
     from ..catalog import load_table
-    from ..functions.numeric import qround
-    from .silver import events_stream
 
-    out_dir = scratch_dir("rtfl_enrich_out_")
-    ckpt_dir = scratch_dir("rtfl_enrich_ckpt_")
-    from . import pinned_state_partitions
-
-    with pinned_state_partitions(spark) as ss:
+    def build(ss: SparkSession) -> DataFrame:
         ev = events_stream(ss, sf_dir)
         customer = load_table(ss, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-        enriched = ev.join(
+        return ev.join(
             F.broadcast(customer), ev["user_id"] == customer["c_custkey"]
         ).select("event_id", "user_id", "c_mktsegment", "value")
-        q = (
-            enriched.writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+
     return (
-        spark.read.parquet(out_dir)
+        drain(spark, build)
         .groupBy("c_mktsegment")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             qround(F.sum("value"), 2).alias("total_value"),
         )
         .orderBy("c_mktsegment")
+    )
+
+def _click_purchase_stream(ss: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """Watermarked clicks joined to the same user's purchases within the
+    following 2 hours; ``how`` is the join type."""
+    ev = events_stream(ss, sf_dir)
+    clicks = (
+        ev.filter(F.col("event_type") == "click")
+        .select(
+            F.col("user_id").alias("c_user"),
+            F.col("event_id").alias("click_id"),
+            F.col("ts").alias("click_ts"),
+        )
+        .withWatermark("click_ts", "1 minute")
+    )
+    purchases = (
+        ev.filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("user_id").alias("p_user"),
+            F.col("event_id").alias("purchase_id"),
+            F.col("ts").alias("purchase_ts"),
+            F.col("value").alias("purchase_value"),
+        )
+        .withWatermark("purchase_ts", "1 minute")
+    )
+    return clicks.join(
+        purchases,
+        (F.col("c_user") == F.col("p_user"))
+        & (F.col("purchase_ts") > F.col("click_ts"))
+        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 2 HOURS")),
+        how,
     )
 
 def streaming_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -226,55 +196,8 @@ def streaming_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame
     Scale: state is partitioned by user_id (the equi-key); per-key state
     holds only a 2-hour sliver of each side.
     """
-
-    from pyspark.sql import functions as F
-
-    from ..functions.numeric import qround
-    from .silver import events_stream
-
-    out_dir = scratch_dir("rtfl_ssj_out_")
-    ckpt_dir = scratch_dir("rtfl_ssj_ckpt_")
-    from . import pinned_state_partitions
-
-    with pinned_state_partitions(spark) as ss:
-        ev = events_stream(ss, sf_dir)
-        clicks = (
-            ev.filter(F.col("event_type") == "click")
-            .select(
-                F.col("user_id").alias("c_user"),
-                F.col("event_id").alias("click_id"),
-                F.col("ts").alias("click_ts"),
-            )
-            .withWatermark("click_ts", "1 minute")
-        )
-        purchases = (
-            ev.filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("user_id").alias("p_user"),
-                F.col("event_id").alias("purchase_id"),
-                F.col("ts").alias("purchase_ts"),
-                F.col("value").alias("purchase_value"),
-            )
-            .withWatermark("purchase_ts", "1 minute")
-        )
-        joined = clicks.join(
-            purchases,
-            (F.col("c_user") == F.col("p_user"))
-            & (F.col("purchase_ts") > F.col("click_ts"))
-            & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 2 HOURS")),
-            "inner",
-        )
-        q = (
-            joined.writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.read.parquet(out_dir)
+        drain(spark, lambda ss: _click_purchase_stream(ss, sf_dir, "inner"))
         .groupBy(F.col("c_user").alias("user_id"))
         .agg(
             F.count(F.lit(1)).alias("n_attributed"),
@@ -301,55 +224,8 @@ def streaming_click_purchase_outer(spark: SparkSession, sf_dir: str) -> DataFram
     user equi-key, 2-hour sliver per side); the outer rows add no state,
     only an emission rule on eviction.
     """
-
-    from pyspark.sql import functions as F
-
-    from ..functions.numeric import qround
-    from .silver import events_stream
-
-    out_dir = scratch_dir("rtfl_ssjo_out_")
-    ckpt_dir = scratch_dir("rtfl_ssjo_ckpt_")
-    from . import pinned_state_partitions
-
-    with pinned_state_partitions(spark) as ss:
-        ev = events_stream(ss, sf_dir)
-        clicks = (
-            ev.filter(F.col("event_type") == "click")
-            .select(
-                F.col("user_id").alias("c_user"),
-                F.col("event_id").alias("click_id"),
-                F.col("ts").alias("click_ts"),
-            )
-            .withWatermark("click_ts", "1 minute")
-        )
-        purchases = (
-            ev.filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("user_id").alias("p_user"),
-                F.col("event_id").alias("purchase_id"),
-                F.col("ts").alias("purchase_ts"),
-                F.col("value").alias("purchase_value"),
-            )
-            .withWatermark("purchase_ts", "1 minute")
-        )
-        joined = clicks.join(
-            purchases,
-            (F.col("c_user") == F.col("p_user"))
-            & (F.col("purchase_ts") > F.col("click_ts"))
-            & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 2 HOURS")),
-            "left_outer",
-        )
-        q = (
-            joined.writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.read.parquet(out_dir)
+        drain(spark, lambda ss: _click_purchase_stream(ss, sf_dir, "left_outer"))
         .groupBy(F.col("c_user").alias("user_id"))
         .agg(
             F.count("purchase_id").alias("n_attributed"),
@@ -467,17 +343,7 @@ def streaming_symbol_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     flushes (handleExpiredTimer) -- not exercised here because the
     fixture drain is a single batch."""
 
-    from .silver import events_stream
-
-    out_dir = scratch_dir("rtfl_tws_out_")
-    ckpt_dir = scratch_dir("rtfl_tws_ckpt_")
-
-    def _append(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out_dir)
-
-    from . import pinned_state_partitions
-
-    with pinned_state_partitions(spark) as ss:
+    def build(ss: SparkSession) -> DataFrame:
         ev = events_stream(ss, sf_dir).select(F.col("event_type"), F.col("value"))
         if has_transform_with_state_support():
             # the new-state-API operator requires the RocksDB state store
@@ -487,7 +353,7 @@ def streaming_symbol_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "spark.sql.streaming.stateStore.providerClass",
                 "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
             )
-            stats = ev.groupBy("event_type").transformWithStateInPandas(
+            return ev.groupBy("event_type").transformWithStateInPandas(
                 _make_symbol_stats_processor(),
                 outputStructType=TWS_OUTPUT_SCHEMA,
                 outputMode="Update",
@@ -497,32 +363,20 @@ def streaming_symbol_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             # identical fold through the legacy arbitrary-state API
             from pyspark.sql.streaming.state import GroupStateTimeout
 
-            stats = ev.groupBy("event_type").applyInPandasWithState(
-                _stats_fold_legacy,
-                outputStructType=TWS_OUTPUT_SCHEMA,
-                stateStructType=TWS_STATE_SCHEMA,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        q = (
-            stats.writeStream.foreachBatch(_append)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
+        return ev.groupBy("event_type").applyInPandasWithState(
+            _stats_fold_legacy,
+            outputStructType=TWS_OUTPUT_SCHEMA,
+            stateStructType=TWS_STATE_SCHEMA,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
-        q.awaitTermination()
-    raw = spark.read.parquet(out_dir)
-    w = Window.partitionBy("symbol").orderBy(F.col("n_events").desc())
+
     return (
-        raw.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        drain_latest(spark, build)
         .select(
             "symbol",
             "n_events",
-            (F.floor(F.col("total_value") * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
-                "total_value"
-            ),
+            qround(F.col("total_value"), 6).alias("total_value"),
             "min_value",
             "max_value",
         )
@@ -546,20 +400,10 @@ def streaming_seasonal_anomaly_roundtrip(spark: SparkSession, sf_dir: str) -> Da
     expression (ANSI DIVIDE_BY_ZERO applies to doubles); a zero-variance
     baseline cell can never flag.
     """
-    from pyspark.sql import functions as F
+    from ..catalog import load_table
+    from ..operators.rollup import hourly_symbol_stats
 
-    from ..functions.numeric import qround
-    from .silver import events_stream
-
-    out_dir = scratch_dir("rtfl_anom_out_")
-    ckpt_dir = scratch_dir("rtfl_anom_ckpt_")
-    from . import pinned_state_partitions
-
-    with pinned_state_partitions(spark) as ss:
-        from ..catalog import load_table
-
-        from ..operators.rollup import hourly_symbol_stats
-
+    def build(ss: SparkSession) -> DataFrame:
         hist = load_table(ss, sf_dir, "events")
         base = hourly_symbol_stats(hist).select(
             F.col("symbol").alias("b_symbol"),
@@ -576,25 +420,15 @@ def streaming_seasonal_anomaly_roundtrip(spark: SparkSession, sf_dir: str) -> Da
             F.col("std_v") != 0,
             F.abs((F.col("value") - F.col("mean_v")) / F.col("std_v")),
         )
-        flagged = scored.select(
+        return scored.select(
             F.col("event_type").alias("symbol"),
             F.hour("ts").alias("hour_of_day"),
             az.alias("az"),
         ).filter(F.col("az") > 3.0)
-        q = (
-            flagged.writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    sunk = spark.read.schema(
-        "symbol string, hour_of_day int, az double"
-    ).parquet(out_dir)
+
     return (
-        sunk.groupBy("symbol", "hour_of_day")
+        drain(spark, build)
+        .groupBy("symbol", "hour_of_day")
         .agg(
             F.count(F.lit(1)).alias("n_anomalies"),
             qround(F.max("az"), 6).alias("max_abs_z"),
@@ -622,70 +456,54 @@ def streaming_psi_drift_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     contribution is a visible row set)."""
     from ..catalog import load_table
     from ..operators.profiling import psi_from_cells
-    from . import pinned_state_partitions
-    from .silver import events_stream
 
     n_bins = 10
     out_dir = scratch_dir("rtfl_psi_out_")
-    ckpt_dir = scratch_dir("rtfl_psi_ckpt_")
-    with pinned_state_partitions(spark) as ss:
-        hist = load_table(ss, sf_dir, "events").filter(F.col("value").isNotNull())
-        b = hist.agg(
-            F.floor(
-                (F.min(F.unix_micros("ts")) + F.max(F.unix_micros("ts"))) / 2
+    hist = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
+    b = hist.agg(
+        F.floor((F.min(F.unix_micros("ts")) + F.max(F.unix_micros("ts"))) / 2)
+        .cast("long")
+        .alias("mid_us"),
+        F.min("value").alias("vmin"),
+        F.max("value").alias("vmax"),
+    ).collect()[0]
+    mid_us, vmin, vmax = b["mid_us"], b["vmin"], b["vmax"]
+
+    def bin_expr():
+        if vmax is None or vmin is None or vmax == vmin:
+            return F.lit(0).cast("int")
+        return (
+            F.least(
+                F.floor(
+                    (F.col("value") - F.lit(vmin))
+                    / (F.lit(vmax) - F.lit(vmin))
+                    * n_bins
+                ),
+                F.lit(n_bins - 1),
             )
-            .cast("long")
-            .alias("mid_us"),
-            F.min("value").alias("vmin"),
-            F.max("value").alias("vmax"),
-        ).collect()[0]
-        mid_us, vmin, vmax = b["mid_us"], b["vmin"], b["vmax"]
-
-        def bin_expr():
-            if vmax is None or vmin is None or vmax == vmin:
-                return F.lit(0).cast("int")
-            return (
-                F.least(
-                    F.floor(
-                        (F.col("value") - F.lit(vmin))
-                        / (F.lit(vmax) - F.lit(vmin))
-                        * n_bins
-                    ),
-                    F.lit(n_bins - 1),
-                )
-                .cast("int")
-            )
-
-        ev = events_stream(ss, sf_dir).filter(
-            F.col("value").isNotNull() & (F.unix_micros("ts") > F.lit(mid_us))
-        )
-        binned = ev.select(
-            F.col("event_type").alias("symbol"), bin_expr().alias("bin")
+            .cast("int")
         )
 
-        def sink(batch_df: DataFrame, batch_id: int) -> None:
-            (
-                batch_df.groupBy("symbol", "bin")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-                .write.mode("append")
-                .parquet(out_dir)
-            )
+    def counts(df: DataFrame) -> DataFrame:
+        return df.groupBy("symbol", "bin").agg(F.count(F.lit(1)).alias("cnt"))
 
-        q = (
-            binned.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        counts(batch_df).write.mode("append").parquet(out_dir)
 
-        ref_cells = (
-            hist.filter(F.unix_micros("ts") <= F.lit(mid_us))
-            .select(F.col("event_type").alias("symbol"), bin_expr().alias("bin"))
-            .groupBy("symbol", "bin")
-            .agg(F.count(F.lit(1)).alias("n_ref"))
-        )
-    partials = spark.read.schema("symbol string, bin int, cnt long").parquet(out_dir)
+    empty = drain(
+        spark,
+        lambda ss: events_stream(ss, sf_dir)
+        .filter(F.col("value").isNotNull() & (F.unix_micros("ts") > F.lit(mid_us)))
+        .select(F.col("event_type").alias("symbol"), bin_expr().alias("bin")),
+        sink,
+    )
+    ref_cells = (
+        hist.filter(F.unix_micros("ts") <= F.lit(mid_us))
+        .select(F.col("event_type").alias("symbol"), bin_expr().alias("bin"))
+        .groupBy("symbol", "bin")
+        .agg(F.count(F.lit(1)).alias("n_ref"))
+    )
+    partials = spark.read.schema(counts(empty).schema).parquet(out_dir)
     cur_cells = partials.groupBy("symbol", "bin").agg(F.sum("cnt").alias("n_cur"))
     cells = (
         ref_cells.join(cur_cells, ["symbol", "bin"], "full_outer")
@@ -715,21 +533,15 @@ def streaming_expectation_gate_roundtrip(
     split writes are two append sinks fed by ONE foreachBatch pass
     (batch_df cached per micro-batch so the pass is not recomputed per
     sink).  The report aggregates at (status x reason) cardinality."""
-    from ..functions.numeric import qround
-    from .silver import events_stream
+    from ..operators.rollup import EVENT_TYPES  # the one contract enum
 
     ok_dir = scratch_dir("rtfl_gate_ok_")
     bad_dir = scratch_dir("rtfl_gate_bad_")
-    ckpt_dir = scratch_dir("rtfl_gate_ckpt_")
-    from ..operators.rollup import EVENT_TYPES  # the one contract enum
-
-    enum = tuple(EVENT_TYPES)
-
     reason = (
         F.when(F.col("value").isNull(), F.lit("value_null"))
         .when(F.col("value") < 0, F.lit("value_negative"))
         .when(F.col("user_id").isNull(), F.lit("user_null"))
-        .when(~F.col("event_type").isin(*enum), F.lit("bad_event_type"))
+        .when(~F.col("event_type").isin(*EVENT_TYPES), F.lit("bad_event_type"))
     )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -750,36 +562,15 @@ def streaming_expectation_gate_roundtrip(
         finally:
             tagged.unpersist()
 
-    from . import pinned_state_partitions
-
-    with pinned_state_partitions(spark) as ss:
-        ev = events_stream(ss, sf_dir)
-        q = (
-            ev.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    # the events fixture schema -- identical by design to the custom
-    # tick connector's contract, so reuse the one definition
-    from ..sources.tick_source import TICK_SCHEMA
-
-    ok = spark.read.schema(TICK_SCHEMA).parquet(ok_dir)
-    try:
-        bad = spark.read.schema(TICK_SCHEMA + ", fail_reason string").parquet(
-            bad_dir
-        )
-    except Exception:  # noqa: BLE001 - a fully-clean feed writes no shards
-        bad = None
+    empty = drain(spark, lambda ss: events_stream(ss, sf_dir), sink)
+    ok = spark.read.schema(empty.schema).parquet(ok_dir)
+    bad = spark.read.schema(empty.withColumn("fail_reason", reason).schema).parquet(bad_dir)
     passed = ok.agg(
         F.lit("passed").alias("status"),
         F.lit("").alias("reason"),
         F.count(F.lit(1)).alias("n_rows"),
         qround(F.coalesce(F.sum("value"), F.lit(0.0)), 6).alias("total_value"),
     ).select("status", "reason", "n_rows", "total_value")
-    if bad is None:
-        return passed.orderBy("status", "reason")
     failed = (
         bad.groupBy(F.lit("quarantined").alias("status"),
                     F.col("fail_reason").alias("reason"))
@@ -877,40 +668,13 @@ def streaming_cusum_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     stateful monitor over the events fixture as a genuine stream, append
     update rows per micro-batch, return the latest row per symbol --
     comparable bit-for-bit to the window-identity SQL oracle."""
-    from .silver import events_stream
-
-    out_dir = scratch_dir("rtfl_cusum_out_")
-    ckpt_dir = scratch_dir("rtfl_cusum_ckpt_")
-
-    def _append(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out_dir)
-
-    from . import pinned_state_partitions
-
-    with pinned_state_partitions(spark) as ss:
-        q = (
-            cusum_stream(events_stream(ss, sf_dir))
-            .writeStream.foreachBatch(_append)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    raw = spark.read.parquet(out_dir)
-    w = Window.partitionBy("symbol").orderBy(F.col("n_events").desc())
     return (
-        raw.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        drain_latest(spark, lambda ss: cusum_stream(events_stream(ss, sf_dir)))
         .select(
             "symbol",
             "n_events",
-            (F.floor(F.col("sp_raw") * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
-                "cusum_pos"
-            ),
-            (F.floor(F.col("sn_raw") * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
-                "cusum_neg"
-            ),
+            qround(F.col("sp_raw"), 6).alias("cusum_pos"),
+            qround(F.col("sn_raw"), 6).alias("cusum_neg"),
             "n_alarms_pos",
             "n_alarms_neg",
         )
@@ -1028,47 +792,15 @@ def streaming_kalman_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     append update rows per batch, return the LATEST row per symbol --
     column-compatible with the batch twin's recursive-CTE oracle
     (kalman_price_smooth)."""
-    from .silver import events_stream
-
-    out_dir = scratch_dir("rtfl_kalman_out_")
-    ckpt_dir = scratch_dir("rtfl_kalman_ckpt_")
-
-    # Stamp each update-mode emission with its micro-batch id: if a
-    # later batch merely refreshes the still-open day (no NEW day), two
-    # emissions tie on n_days with different provisional x/p/k, and an
-    # n_days-only ordering would pick between them nondeterministically.
-    def _append(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(out_dir)
-
-    from . import pinned_state_partitions
-
-    with pinned_state_partitions(spark) as ss:
-        q = (
-            kalman_stream(events_stream(ss, sf_dir))
-            .writeStream.foreachBatch(_append)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    raw = spark.read.parquet(out_dir)
-    w = Window.partitionBy("symbol").orderBy(
-        F.col("n_days").desc(), F.col("batch_id").desc()
-    )
-    q6 = lambda c: F.floor(F.col(c) * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     return (
-        raw.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        drain_latest(spark, lambda ss: kalman_stream(events_stream(ss, sf_dir)))
         .select(
             "symbol",
             "n_days",
-            q6("last_close").alias("last_close"),
-            q6("x_raw").alias("kalman_level"),
-            q6("p_raw").alias("error_cov"),
-            q6("k_raw").alias("kalman_gain"),
+            qround("last_close").alias("last_close"),
+            qround("x_raw").alias("kalman_level"),
+            qround("p_raw").alias("error_cov"),
+            qround("k_raw").alias("kalman_gain"),
         )
         .orderBy("symbol")
     )
@@ -1197,45 +929,14 @@ def streaming_vpin_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the streaming VPIN over the events fixture (availableNow) and
     return the LATEST row per symbol, column-compatible with the batch
     twin's oracle (vpin_toxicity)."""
-    from .silver import events_stream
-
-    out_dir = scratch_dir("rtfl_vpin_out_")
-    ckpt_dir = scratch_dir("rtfl_vpin_ckpt_")
-
-    # batch_id stamp: same tie-break discipline as the Kalman roundtrip
-    # (two emissions can tie on total_qty_raw when a batch refreshes
-    # only the sign carry / open-bucket split without adding quantity).
-    def _append(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(out_dir)
-
-    from . import pinned_state_partitions
-
-    with pinned_state_partitions(spark) as ss:
-        q = (
-            vpin_stream(events_stream(ss, sf_dir))
-            .writeStream.foreachBatch(_append)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    raw = spark.read.parquet(out_dir)
-    w = Window.partitionBy("symbol").orderBy(
-        F.col("total_qty_raw").desc(), F.col("batch_id").desc()
-    )
-    q6 = lambda c: F.floor(F.col(c) * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     return (
-        raw.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        drain_latest(spark, lambda ss: vpin_stream(events_stream(ss, sf_dir)))
         .select(
             "symbol",
             "n_buckets",
-            q6("vpin_raw").alias("vpin"),
-            q6("max_imb_raw").alias("max_imbalance"),
-            q6("total_qty_raw").alias("total_qty"),
+            qround("vpin_raw").alias("vpin"),
+            qround("max_imb_raw").alias("max_imbalance"),
+            qround("total_qty_raw").alias("total_qty"),
         )
         .orderBy("symbol")
     )

@@ -928,6 +928,18 @@ def test_queries_survive_fully_empty_tables(spark, tmp_path):
         "bipower_jump_stats", "ts_monotonicity_report",
         "wav_media_features", "ses_forecast", "event_pagerank",
         "pairs_spread_zscore", "customer_rfm", "session_event_pmi",
+        # every drained streaming twin but the expectation gate (below)
+        "streaming_user_cms", "streaming_click_purchase",
+        "streaming_click_purchase_outer", "streaming_cusum_monitor",
+        "streaming_dedup", "streaming_dedup_watermarked",
+        "streaming_ema_stateful", "streaming_enriched_segments",
+        "streaming_kalman_level", "streaming_kmv_distinct",
+        "streaming_label_centroids", "streaming_minute_ohlc",
+        "streaming_mode_per_user", "streaming_range_vol",
+        "streaming_session_merge", "streaming_sessionize",
+        "streaming_symbol_stats", "streaming_tumbling_counts",
+        "streaming_turnover_hhi", "streaming_value_quantiles",
+        "streaming_vpin", "streaming_windowed_rollup",
     ]:
         assert registry.QUERIES[name](spark, dst).count() == 0, name
     # benford_check intentionally emits its constant 1..9 digit spine on
@@ -943,6 +955,10 @@ def test_queries_survive_fully_empty_tables(spark, tmp_path):
     assert len(exp) == 8
     assert all(r["n_checked"] == 0 and r["n_failed"] == 0 and r["passed"]
                for r in exp)
+    # the streaming gate reports its "passed" side even when nothing
+    # passed: one zero-row line, and no quarantine lines
+    gate = registry.QUERIES["streaming_expectation_gate"](spark, dst).collect()
+    assert [(r["status"], r["n_rows"]) for r in gate] == [("passed", 0)]
 
 
 def test_funnel_is_order_sensitive(spark):

@@ -3,8 +3,8 @@
 * a symbol whose stream has produced only ONE trading day must not emit
   (the batch Kalman twin filters to >= 2 days);
 * a micro-batch that merely REFRESHES the still-open day produces a
-  second emission tying on n_days -- the roundtrip's (n_days, batch_id)
-  ordering must pick the fresher provisional state deterministically;
+  second emission tying on n_days -- the roundtrip's batch_id ordering
+  (streaming.drain_latest) must pick the fresher provisional state;
 * a tick missing ``props.$.k`` (NaN qty) must not poison the VPIN
   accumulators -- the batch twin's null-skipping sum semantics apply.
 """
@@ -115,6 +115,23 @@ def test_streaming_kalman_same_day_refresh_tiebreak(spark, tmp_path):
     assert r2["last_close"] == 99.0
     assert r2["x_raw"] == pytest.approx(batch["kalman_level"], abs=1e-6)
     assert r1["x_raw"] != pytest.approx(batch["kalman_level"], abs=1e-9)
+
+
+def test_drain_latest_keeps_the_newest_batch_on_a_tie(spark, tmp_path):
+    """The same-day refresh above, drained through ``drain_latest``: the
+    two emissions tie on n_days and the returned row is batch 2's."""
+    from real_time_financial_lakehouse_spark.streaming import drain_latest
+    from real_time_financial_lakehouse_spark.streaming.stateful import kalman_stream
+
+    def mk(eid, day, sec, v):
+        return (eid, dt.datetime(2024, 1, day, 0, 0, sec), 1, "s", v, "{}")
+
+    f1 = [mk(0, 1, 0, 100.0), mk(1, 2, 0, 95.0)]
+    f2 = [mk(2, 2, 30, 99.0)]
+    (row,) = drain_latest(
+        spark, lambda ss: kalman_stream(_two_file_stream(ss, tmp_path, f1, f2))
+    ).collect()
+    assert (row["symbol"], row["n_days"], row["last_close"]) == ("s", 2, 99.0)
 
 
 def test_streaming_vpin_nan_qty_does_not_poison_state(spark, tmp_path):
