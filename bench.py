@@ -133,6 +133,21 @@ def build_stdout_payload(
         "full": "BENCH_FULL.json",
     }
 
+def warm_up(spark, sf_dir: str) -> None:
+    """Warm the JVM paths the queries exercise (codegen, vectorized
+    parquet reader + footer cache, broadcast machinery) so per-query
+    numbers measure the plan, not one-time initialization."""
+    from pyspark.sql import functions as F
+
+    from real_time_financial_lakehouse_spark.catalog import load_tables
+
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    for df in load_tables(spark, sf_dir).values():
+        df.count()
+    small = spark.range(100).withColumnRenamed("id", "k")
+    spark.range(10_000).join(F.broadcast(small), F.col("id") == F.col("k")).count()
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -168,20 +183,8 @@ def main() -> None:
     # scripts/plan_audit.py) otherwise land in the captured tail.
     spark.sparkContext.setLogLevel("ERROR")
 
-    # Warm the JVM paths the queries exercise (codegen, vectorized parquet
-    # reader + footer cache, broadcast machinery) so per-query numbers
-    # measure the plan, not one-time initialization.
-    from pyspark.sql import functions as F
-
-    from real_time_financial_lakehouse_spark.catalog import load_tables
-
     t_warm = time.perf_counter()
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    tables = load_tables(spark, sf_dir)
-    for df in tables.values():
-        df.count()
-    small = spark.range(100).withColumnRenamed("id", "k")
-    spark.range(10_000).join(F.broadcast(small), F.col("id") == F.col("k")).count()
+    warm_up(spark, sf_dir)
     # Pre-warm each canary pin once (untimed) so the interleaved
     # timeline below samples HOST speed, not first-run whole-stage
     # codegen for the pin's plan.

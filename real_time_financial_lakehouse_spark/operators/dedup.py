@@ -383,9 +383,16 @@ def min_label_components(
     by the LSH ladder (``dedup_clusters``) and the embedding-space
     semantic dedup (similarity.semantic_dedup_keep) -- the loop's scale
     properties (edge-subgraph iteration, lineage cuts) are documented on
-    ``dedup_clusters`` and apply to any caller."""
-    import warnings
+    ``dedup_clusters`` and apply to any caller.
 
+    Raises ``ValueError`` for ``max_iter < 1`` and ``RuntimeError`` when
+    labels still change on the last allowed pass: a chain of d hops needs
+    d passes plus one that changes nothing, and unconverged labels are
+    only upper bounds, never a valid clustering."""
+    if max_iter < 1:
+        raise ValueError(
+            f"min_label_components: max_iter must be >= 1, got {max_iter}"
+        )
     # Mirror the DIRECTED edges in ONE pass -- explode(array(fwd, rev))
     # emits both directions from a single scan of the upstream pair
     # index (the former union-of-two-branches needed a persist + count
@@ -448,12 +455,11 @@ def min_label_components(
         if changed == 0:
             break
     if changed > 0:
-        warnings.warn(
+        raise RuntimeError(
             f"min_label_components: not converged after {max_iter} passes "
             f"({changed} labels still changing) -- a duplicate chain deeper "
-            f"than max_iter exists; returned labels are an upper bound. "
-            f"Raise max_iter or switch to star-contraction.",
-            stacklevel=2,
+            f"than max_iter exists. Raise max_iter or switch to "
+            f"star-contraction."
         )
     # isolated nodes (no candidate edge) are their own cluster; they join
     # the loop's output exactly once, corpus-sized but single-pass

@@ -6,6 +6,12 @@ the other indicators a market-data gold layer serves -- VWAP, Bollinger
 bands, max drawdown, inter-bar gaps -- all as built-in window/aggregate
 expressions (JVM codegen, no UDF), each with an exact DuckDB twin.
 
+One rule, one helper: a bar's open/close is its first/last tick by
+(ts, event_id) -- ``_tick_order``, used only through ``_open`` /
+``_close``.  ``_daily_closes`` is the single place the (symbol, day)
+close frame is built (optionally over positive ticks only), and
+``_daily_log_returns`` the single daily log-return stage on top of it.
+
 Scale notes per operator in the docstrings; the common shape is one
 shuffle on the symbol (tiny cardinality here, salted/AQE-handled when a
 symbol is hot) and window frames bounded by row counts, so state per
@@ -28,6 +34,37 @@ def _safe_corr(x: str, y: str):
     oracle parity stays hash-identical on the fixtures)."""
     denom = F.stddev_pop(x) * F.stddev_pop(y)
     return F.when(denom != 0, qround(F.covar_pop(x, y) / denom, 6))
+
+
+def _tick_order():
+    """The module's one tick order: (ts, event_id).  event_id is the
+    fixture's unique, engine-stable tiebreak for same-ts ticks."""
+    return F.struct(F.col("ts"), F.col("event_id"))
+
+
+def _open():
+    """First value of the group in tick order (windowless min_by)."""
+    return F.min_by(F.col("value"), _tick_order())
+
+
+def _close():
+    """Last value of the group in tick order (windowless max_by)."""
+    return F.max_by(F.col("value"), _tick_order())
+
+
+def _daily_closes(
+    events: DataFrame, *extra, positive_only: bool = False
+) -> DataFrame:
+    """(symbol, day, c, *extra): a day's close is its last tick in
+    ``_tick_order``; ``positive_only`` counts only ticks with value > 0.
+    The single place for the daily-close rule -- the oracle twins'
+    shared daily-close CTEs mirror it.  ``extra`` aggregates ride in the
+    same partial-aggregable groupBy (one shuffle at day granularity)."""
+    src = events.filter(F.col("value") > 0) if positive_only else events
+    return src.groupBy(
+        F.col("event_type").alias("symbol"),
+        F.date_trunc("day", F.col("ts")).alias("day"),
+    ).agg(_close().alias("c"), *extra)
 
 
 def vwap_daily(events: DataFrame) -> DataFrame:
@@ -184,7 +221,6 @@ def _minute_bars(events: DataFrame) -> DataFrame:
     arithmetic on them and quantize only at the output boundary, so both
     engines run the identical IEEE sequence.  min_by/max_by keep the
     open/close semantics windowless (one partial-aggregable shuffle)."""
-    key = F.struct(F.col("ts"), F.col("event_id"))
     qty = F.get_json_object(F.col("props"), "$.k").cast("double")
     return events.groupBy(
         F.col("event_type").alias("symbol"),
@@ -192,7 +228,7 @@ def _minute_bars(events: DataFrame) -> DataFrame:
     ).agg(
         F.max("value").alias("high"),
         F.min("value").alias("low"),
-        F.max_by(F.col("value"), key).alias("close"),
+        _close().alias("close"),
         F.sum(qty).alias("vol"),
     )
 
@@ -747,14 +783,10 @@ def engulfing_patterns(events: DataFrame) -> DataFrame:
     tick) cardinality, O(1) state."""
     from pyspark.sql import Window
 
-    key = F.struct(F.col("ts"), F.col("event_id"))
     bars = events.groupBy(
         F.col("event_type").alias("symbol"),
         F.date_trunc("minute", F.col("ts")).alias("minute"),
-    ).agg(
-        F.min_by(F.col("value"), key).alias("open"),
-        F.max_by(F.col("value"), key).alias("close"),
-    )
+    ).agg(_open().alias("open"), _close().alias("close"))
     w = Window.partitionBy("symbol").orderBy("minute")
     po, pc = F.lag("open").over(w), F.lag("close").over(w)
     bullish = (
@@ -784,20 +816,19 @@ def engulfing_patterns(events: DataFrame) -> DataFrame:
 
 def _daily_bars(events: DataFrame, positive_only: bool = False) -> DataFrame:
     """Internal daily OHLC frame: open/high/low/close per (symbol, day),
-    open/close resolved windowlessly via min_by/max_by on (ts, event_id)
+    open/close resolved windowlessly via ``_open`` / ``_close``
     -- one partial-aggregable shuffle at day granularity, same shape as
     ``_minute_bars``.  ``positive_only`` drops non-positive ticks first
     (required by log-range volatility estimators; mirrored in oracles)."""
     src = events.filter(F.col("value") > 0) if positive_only else events
-    key = F.struct(F.col("ts"), F.col("event_id"))
     return src.groupBy(
         F.col("event_type").alias("symbol"),
         F.date_trunc("day", F.col("ts")).alias("day"),
     ).agg(
-        F.min_by(F.col("value"), key).alias("open"),
+        _open().alias("open"),
         F.max("value").alias("high"),
         F.min("value").alias("low"),
-        F.max_by(F.col("value"), key).alias("close"),
+        _close().alias("close"),
         F.count(F.lit(1)).alias("n_ticks"),
     )
 
@@ -1071,14 +1102,13 @@ def dollar_bars(events: DataFrame, bucket_dollars: float = 250_000.0) -> DataFra
         (F.col("value") * qty).alias("dollars"),
         F.floor(cum / F.lit(bucket_dollars)).alias("bar_id"),
     )
-    key = F.struct(F.col("ts"), F.col("event_id"))
     return (
         ticks.groupBy("symbol", "bar_id")
         .agg(
-            F.min_by(F.col("value"), key).alias("open_raw"),
+            _open().alias("open_raw"),
             F.max("value").alias("high_raw"),
             F.min("value").alias("low_raw"),
-            F.max_by(F.col("value"), key).alias("close_raw"),
+            _close().alias("close_raw"),
             F.sum("dollars").alias("dv"),
             F.count(F.lit(1)).alias("n_ticks"),
             F.min("ts").alias("bar_start"),
@@ -1553,15 +1583,8 @@ def amihud_illiquidity(events: DataFrame) -> DataFrame:
     partial-aggregable shuffle), one lag window per symbol at day
     cardinality, one final groupBy to symbol cardinality -- nothing
     data-sized after the first exchange."""
-    key = F.struct(F.col("ts"), F.col("event_id"))
     qty = F.get_json_object(F.col("props"), "$.k").cast("double")
-    daily = events.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("day", F.col("ts")).alias("day"),
-    ).agg(
-        F.max_by(F.col("value"), key).alias("c"),
-        F.sum(F.col("value") * qty).alias("dv"),
-    )
+    daily = _daily_closes(events, F.sum(F.col("value") * qty).alias("dv"))
     w = Window.partitionBy("symbol").orderBy("day")
     ret = F.col("c") / F.lag("c").over(w) - F.lit(1.0)
     valid = daily.select("symbol", "dv", ret.alias("r")).filter(
@@ -1627,11 +1650,7 @@ def var_cvar_report(events: DataFrame) -> DataFrame:
     Scale: day-granularity rollup, one lag window, then a rank window at
     (symbol x day) cardinality bounded by WindowGroupLimit-style early
     cutoff on the k smallest -- all state is per-symbol day counts."""
-    key = F.struct(F.col("ts"), F.col("event_id"))
-    daily = events.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("day", F.col("ts")).alias("day"),
-    ).agg(F.max_by(F.col("value"), key).alias("c"))
+    daily = _daily_closes(events)
     w = Window.partitionBy("symbol").orderBy("day")
     rets = daily.select(
         "symbol",
@@ -1686,11 +1705,7 @@ def _bs_priced(
     strike / annualized sigma from daily closes, then d1/d2/N(d1)/N(d2)
     as projection columns -- the identical expression text the oracle
     runs, so both consumers stay hash-exact."""
-    key = F.struct(F.col("ts"), F.col("event_id"))
-    daily = events.filter(F.col("value") > 0).groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("day", F.col("ts")).alias("day"),
-    ).agg(F.max_by(F.col("value"), key).alias("c"))
+    daily = _daily_closes(events, positive_only=True)
     w = Window.partitionBy("symbol").orderBy("day")
     lr = daily.select(
         "symbol",
@@ -2076,11 +2091,7 @@ def ulcer_index(events: DataFrame) -> DataFrame:
 
     Scale: one day-granularity rollup, one running-max window over the
     symbol partition (O(1) state), one symbol-cardinality aggregate."""
-    key = F.struct(F.col("ts"), F.col("event_id"))
-    daily = events.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("day", F.col("ts")).alias("day"),
-    ).agg(F.max_by(F.col("value"), key).alias("c"))
+    daily = _daily_closes(events)
     w = Window.partitionBy("symbol").orderBy("day").rowsBetween(
         Window.unboundedPreceding, 0
     )
@@ -2118,11 +2129,7 @@ def rolling_beta(events: DataFrame, n: int = 10) -> DataFrame:
     Scale: daily returns per symbol (one rollup + one lag window), a
     broadcast join of the |days|-row market series, then one shared
     (symbol, day) sort serving all four trailing-moment frames."""
-    key = F.struct(F.col("ts"), F.col("event_id"))
-    daily = events.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("day", F.col("ts")).alias("day"),
-    ).agg(F.max_by(F.col("value"), key).alias("c"))
+    daily = _daily_closes(events)
     w = Window.partitionBy("symbol").orderBy("day")
     rets = daily.select(
         "symbol",
@@ -2165,11 +2172,7 @@ def drawdown_duration(events: DataFrame) -> DataFrame:
     Scale: one day rollup, one shared (symbol, day) sort serving the
     running-max, lag, and cumulative-spell windows (O(1) state each),
     one symbol-cardinality aggregate."""
-    key = F.struct(F.col("ts"), F.col("event_id"))
-    daily = events.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("day", F.col("ts")).alias("day"),
-    ).agg(F.max_by(F.col("value"), key).alias("c"))
+    daily = _daily_closes(events)
     w = Window.partitionBy("symbol").orderBy("day")
     cum = w.rowsBetween(Window.unboundedPreceding, 0)
     flagged = daily.select(
@@ -2225,11 +2228,7 @@ def cross_correlation_lags(events: DataFrame, max_lag: int = 3) -> DataFrame:
     is |symbols|^2 x |lags| x |days| built by TWO broadcast joins (the
     return table re-keyed by shifted day), aggregated in moment form at
     pair-lag cardinality -- no per-pair passes, one shuffle."""
-    key = F.struct(F.col("ts"), F.col("event_id"))
-    daily = events.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("day", F.col("ts")).alias("day"),
-    ).agg(F.max_by(F.col("value"), key).alias("c"))
+    daily = _daily_closes(events)
     w = Window.partitionBy("symbol").orderBy("day")
     rets = daily.select(
         "symbol",
@@ -2328,11 +2327,7 @@ def bootstrap_mean_ci(events: DataFrame, n_boot: int = 200) -> DataFrame:
     Scale: the series collapses to one array row per symbol; the B
     resample means are per-row array folds (B x n index hashes inside
     codegen), and the rank selection runs at |symbol x B| cardinality."""
-    key = F.struct(F.col("ts"), F.col("event_id"))
-    daily = events.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("day", F.col("ts")).alias("day"),
-    ).agg(F.max_by(F.col("value"), key).alias("c"))
+    daily = _daily_closes(events)
     w = Window.partitionBy("symbol").orderBy("day")
     rets = daily.select(
         "symbol",
@@ -2744,11 +2739,7 @@ def ewma_riskmetrics_vol(events: DataFrame) -> DataFrame:
     Scale: one day-cardinality close rollup, one symbol-cardinality
     groupBy holding the day array; the fold is scalar work inside a
     |symbol|-row frame."""
-    key = F.struct(F.col("ts"), F.col("event_id"))
-    daily = events.filter(F.col("value") > 0).groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("day", F.col("ts")).alias("day"),
-    ).agg(F.max_by(F.col("value"), key).alias("c"))
+    daily = _daily_closes(events, positive_only=True)
     series = daily.groupBy("symbol").agg(
         F.expr("transform(array_sort(collect_list(struct(day, c))), s -> s.c)")
         .alias("xs")
@@ -2785,11 +2776,7 @@ def kalman_price_smooth(events: DataFrame) -> DataFrame:
 
     Scale: day-cardinality rollup then a |symbol|-row fold -- the
     sequential recursion never touches trade cardinality."""
-    key = F.struct(F.col("ts"), F.col("event_id"))
-    daily = events.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("day", F.col("ts")).alias("day"),
-    ).agg(F.max_by(F.col("value"), key).alias("c"))
+    daily = _daily_closes(events)
     series = daily.groupBy("symbol").agg(
         F.expr("transform(array_sort(collect_list(struct(day, c))), s -> s.c)")
         .alias("xs")
@@ -3107,11 +3094,7 @@ def almgren_chriss_schedule(
     Scale: volatility is one day-cardinality rollup + one
     symbol-cardinality aggregate; the schedule explodes |symbol| rows
     by a constant n_slices -- metadata-sized end to end."""
-    key = F.struct(F.col("ts"), F.col("event_id"))
-    daily = events.filter(F.col("value") > 0).groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("day", F.col("ts")).alias("day"),
-    ).agg(F.max_by(F.col("value"), key).alias("c"))
+    daily = _daily_closes(events, positive_only=True)
     w = Window.partitionBy("symbol").orderBy("day")
     lr = daily.select(
         "symbol", F.log(F.col("c") / F.lag("c").over(w)).alias("lr")
@@ -3156,11 +3139,7 @@ def spearman_ic_daily(events: DataFrame) -> DataFrame:
     shuffles at (day) granularity over |symbols| rows per group --
     bar-sized, never tick-sized; the correlation is the covar/var
     closed form at day cardinality."""
-    key = F.struct(F.col("ts"), F.col("event_id"))
-    daily = events.filter(F.col("value") > 0).groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("day", F.col("ts")).alias("day"),
-    ).agg(F.max_by(F.col("value"), key).alias("c"))
+    daily = _daily_closes(events, positive_only=True)
     w = Window.partitionBy("symbol").orderBy("day")
     staged = daily.select(
         "symbol", "day", F.log(F.col("c") / F.lag("c").over(w)).alias("fwd")
@@ -3310,11 +3289,7 @@ def sortino_ratio(events: DataFrame, periods: int = 252) -> DataFrame:
     quantized at 12 dp at the aggregate boundary before the sqrt (the
     repo's quantize-before-sqrt convention), so both engines compose the
     ratio from identical doubles."""
-    key = F.struct(F.col("ts"), F.col("event_id"))
-    daily = events.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("day", F.col("ts")).alias("day"),
-    ).agg(F.max_by(F.col("value"), key).alias("c"))
+    daily = _daily_closes(events)
     w = Window.partitionBy("symbol").orderBy("day")
     prev = F.lag("c").over(w)
     r = F.when(prev != 0, F.col("c") / prev - 1.0).alias("r")
@@ -3613,11 +3588,7 @@ def omega_ratio(events: DataFrame) -> DataFrame:
     symbol-cardinality aggregate (same ladder as ``sortino_ratio``).
     Determinism: both partial moments are quantized at the aggregate
     boundary before the ratio."""
-    key = F.struct(F.col("ts"), F.col("event_id"))
-    daily = events.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("day", F.col("ts")).alias("day"),
-    ).agg(F.max_by(F.col("value"), key).alias("c"))
+    daily = _daily_closes(events)
     w = Window.partitionBy("symbol").orderBy("day")
     prev = F.lag("c").over(w)
     r = F.when(prev != 0, F.col("c") / prev - 1.0).alias("r")
@@ -3659,11 +3630,7 @@ def calmar_ratio(events: DataFrame) -> DataFrame:
     ``max_drawdown`` ladder with the ratio fused in.  Determinism: the
     drawdown is exact selections; the annualized log return is
     quantized at 12 dp before the ratio on both engines."""
-    key = F.struct(F.col("ts"), F.col("event_id"))
-    daily = events.filter(F.col("value") > 0).groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("day", F.col("ts")).alias("day"),
-    ).agg(F.max_by(F.col("value"), key).alias("c"))
+    daily = _daily_closes(events, positive_only=True)
     w = Window.partitionBy("symbol").orderBy("day").rowsBetween(
         Window.unboundedPreceding, 0
     )
@@ -3706,11 +3673,7 @@ def updown_capture(events: DataFrame) -> DataFrame:
     frame broadcast back, one symbol-cardinality conditional aggregate.
     Determinism: each conditional mean is quantized at the aggregate
     boundary before the capture ratios."""
-    key = F.struct(F.col("ts"), F.col("event_id"))
-    daily = events.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("day", F.col("ts")).alias("day"),
-    ).agg(F.max_by(F.col("value"), key).alias("c"))
+    daily = _daily_closes(events)
     w = Window.partitionBy("symbol").orderBy("day")
     prev = F.lag("c").over(w)
     rets = daily.select(
@@ -3814,26 +3777,6 @@ def gap_fill_probability(events: DataFrame) -> DataFrame:
 
 _HALF_PI = 1.5707963267948966  # pi/2 as a shared literal (both engines
 # compose the bipower scaling from this exact double, no engine pi())
-
-
-def _daily_close_dv(events: DataFrame) -> DataFrame:
-    """Internal (symbol, day) frame with the deterministic last-tick
-    close (max_by over the (ts, event_id) key -- exact selection, no
-    float aggregation) and the day's dollar volume sum(value * qty),
-    qty from ``props.$.k`` (NULL qty contributes nothing, SQL sum
-    semantics).  Positive ticks only -- every consumer takes a log or a
-    ratio of the close.  One partial-aggregable shuffle at day
-    granularity."""
-    src = events.filter(F.col("value") > 0)
-    key = F.struct(F.col("ts"), F.col("event_id"))
-    qty = F.get_json_object(F.col("props"), "$.k").cast("double")
-    return src.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("day", F.col("ts")).alias("day"),
-    ).agg(
-        F.max_by(F.col("value"), key).alias("c"),
-        F.sum(F.col("value") * qty).alias("dv_raw"),
-    )
 
 
 def bipower_variation_jumps(events: DataFrame) -> DataFrame:
@@ -3951,12 +3894,7 @@ def variance_ratio(events: DataFrame) -> DataFrame:
     12 dp at the aggregate boundary; each VR is a bounded-derivative
     ratio of quantized moments (the safe class in the VERIFICATION.md
     float audit)."""
-    src = events.filter(F.col("value") > 0)
-    key = F.struct(F.col("ts"), F.col("event_id"))
-    dclose = src.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("day", F.col("ts")).alias("day"),
-    ).agg(F.max_by(F.col("value"), key).alias("c"))
+    dclose = _daily_closes(events, positive_only=True)
     w = Window.partitionBy("symbol").orderBy("day")
     prev = F.lag("c").over(w)
     lr = dclose.select(
@@ -4068,12 +4006,7 @@ def drawdown_episodes(events: DataFrame) -> DataFrame:
     running max is an exact selection over exact close doubles; the
     depth ratio divides identical doubles on both engines before the
     output quantization."""
-    src = events.filter(F.col("value") > 0)
-    key = F.struct(F.col("ts"), F.col("event_id"))
-    dclose = src.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("day", F.col("ts")).alias("day"),
-    ).agg(F.max_by(F.col("value"), key).alias("c"))
+    dclose = _daily_closes(events, positive_only=True)
     wcum = (
         Window.partitionBy("symbol")
         .orderBy("day")
@@ -4138,20 +4071,7 @@ def historical_var_cvar(events: DataFrame) -> DataFrame:
     any cross-engine libm ulp in ln onto a shared grid) and the
     interpolated quantile is quantized again before it becomes the
     tail threshold, so both engines cut the identical tail set."""
-    src = events.filter(F.col("value") > 0)
-    key = F.struct(F.col("ts"), F.col("event_id"))
-    dclose = src.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("day", F.col("ts")).alias("day"),
-    ).agg(F.max_by(F.col("value"), key).alias("c"))
-    w = Window.partitionBy("symbol").orderBy("day")
-    prev = F.lag("c").over(w)
-    rets = dclose.select(
-        "symbol",
-        F.when(prev.isNotNull(), qround(F.log(F.col("c") / prev), 12)).alias(
-            "lr"
-        ),
-    ).filter(F.col("lr").isNotNull())
+    rets = _daily_log_returns(events)
     stats = rets.groupBy("symbol").agg(
         F.count(F.lit(1)).alias("n_days"),
         qround(F.expr("percentile(lr, 0.05D)"), 12).alias("q05"),
@@ -4197,20 +4117,7 @@ def return_moments_profile(events: DataFrame) -> DataFrame:
     an identical double on both engines; skew/kurtosis are bounded
     ratios of quantized moments; JB composes from the already-quantized
     outputs."""
-    src = events.filter(F.col("value") > 0)
-    key = F.struct(F.col("ts"), F.col("event_id"))
-    dclose = src.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("day", F.col("ts")).alias("day"),
-    ).agg(F.max_by(F.col("value"), key).alias("c"))
-    w = Window.partitionBy("symbol").orderBy("day")
-    prev = F.lag("c").over(w)
-    rets = dclose.select(
-        "symbol",
-        F.when(prev.isNotNull(), qround(F.log(F.col("c") / prev), 12)).alias(
-            "lr"
-        ),
-    ).filter(F.col("lr").isNotNull())
+    rets = _daily_log_returns(events)
     means = rets.groupBy("symbol").agg(
         F.count(F.lit(1)).alias("n_days"),
         qround(F.avg("lr"), 12).alias("mean_q"),
@@ -4271,12 +4178,7 @@ def cross_sectional_momentum(events: DataFrame, lookback: int = 5) -> DataFrame:
     never row counts), and the final aggregate is 3 rows.  Determinism:
     returns divide exact close selections; ntile ordering tie-breaks on
     symbol; tercile means quantize last."""
-    src = events.filter(F.col("value") > 0)
-    key = F.struct(F.col("ts"), F.col("event_id"))
-    dclose = src.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("day", F.col("ts")).alias("day"),
-    ).agg(F.max_by(F.col("value"), key).alias("c"))
+    dclose = _daily_closes(events, positive_only=True)
     w = Window.partitionBy("symbol").orderBy("day")
     lagn = F.lag("c", lookback).over(w)
     nxt = F.lead("c").over(w)
@@ -4431,11 +4333,10 @@ def implied_vol_newton(
     evaluated on the same doubles through the binding."""
     from ..functions.hashing import md5_long
 
-    key = F.struct(F.col("ts"), F.col("event_id"))
     per_sym = (
         events.filter(F.col("value") > 0)
         .groupBy(F.col("event_type").alias("symbol"))
-        .agg(F.max_by(F.col("value"), key).alias("spot"))
+        .agg(_close().alias("spot"))
         .filter(F.col("spot") > 0)
     )
     sigma_true = (
@@ -4521,21 +4422,7 @@ def ljung_box_autocorr(events: DataFrame, max_lag: int = 5) -> DataFrame:
     groupBy sums are order-independent and the ACF ratios reaching the
     final qround are bit-identical on both engines (the
     drawdown_episodes integer-grid discipline, applied at creation)."""
-    src = events.filter(F.col("value") > 0)
-    key = F.struct(F.col("ts"), F.col("event_id"))
-    dclose = src.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("day", F.col("ts")).alias("day"),
-    ).agg(F.max_by(F.col("value"), key).alias("c"))
-    w = Window.partitionBy("symbol").orderBy("day")
-    prev = F.lag("c").over(w)
-    rets = dclose.select(
-        "symbol",
-        "day",
-        F.when(prev.isNotNull(), qround(F.log(F.col("c") / prev), 12)).alias(
-            "lr"
-        ),
-    ).filter(F.col("lr").isNotNull())
+    rets = _daily_log_returns(events)
     means = (
         rets.groupBy("symbol")
         .agg(
@@ -4554,6 +4441,7 @@ def ljung_box_autocorr(events: DataFrame, max_lag: int = 5) -> DataFrame:
         .cast("long")
         .alias("d0_u")
     ]
+    w = Window.partitionBy("symbol").orderBy("day")
     for k in range(1, max_lag + 1):
         lagdev = F.lag("dev", k).over(w)
         prod_cols.append(
@@ -4629,20 +4517,7 @@ def kupiec_var_backtest(events: DataFrame, p: float = 0.05) -> DataFrame:
     every ln() the LR consumes is quantized at 12 dp before the
     products (libm-ulp isolation); breach counts are exact BIGINTs so
     pi_hat is the identical double on both engines."""
-    src = events.filter(F.col("value") > 0)
-    key = F.struct(F.col("ts"), F.col("event_id"))
-    dclose = src.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("day", F.col("ts")).alias("day"),
-    ).agg(F.max_by(F.col("value"), key).alias("c"))
-    w = Window.partitionBy("symbol").orderBy("day")
-    prev = F.lag("c").over(w)
-    rets = dclose.select(
-        "symbol",
-        F.when(prev.isNotNull(), qround(F.log(F.col("c") / prev), 12)).alias(
-            "lr"
-        ),
-    ).filter(F.col("lr").isNotNull())
+    rets = _daily_log_returns(events)
     stats = (
         rets.groupBy("symbol")
         .agg(
@@ -4712,21 +4587,7 @@ def tail_dependence_matrix(events: DataFrame, q: float = 0.2) -> DataFrame:
     Determinism: returns and thresholds quantized at 12 dp so both
     engines flag identical tail sets; every reported ratio is a ratio
     of exact BIGINT counts."""
-    src = events.filter(F.col("value") > 0)
-    key = F.struct(F.col("ts"), F.col("event_id"))
-    dclose = src.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("day", F.col("ts")).alias("day"),
-    ).agg(F.max_by(F.col("value"), key).alias("c"))
-    w = Window.partitionBy("symbol").orderBy("day")
-    prev = F.lag("c").over(w)
-    rets = dclose.select(
-        "symbol",
-        "day",
-        F.when(prev.isNotNull(), qround(F.log(F.col("c") / prev), 12)).alias(
-            "lr"
-        ),
-    ).filter(F.col("lr").isNotNull())
+    rets = _daily_log_returns(events)
     th = (
         rets.groupBy("symbol")
         .agg(
@@ -4798,17 +4659,11 @@ def tail_dependence_matrix(events: DataFrame, q: float = 0.2) -> DataFrame:
 
 
 def _daily_log_returns(events: DataFrame) -> DataFrame:
-    """Internal (symbol, day, lr) frame: deterministic last-tick daily
-    closes (max_by over the (ts, event_id) key) on positive ticks, then
-    the 12-dp-quantized log return -- the shared first stage of every
+    """Internal (symbol, day, lr) frame: positive-tick ``_daily_closes``,
+    then the 12-dp-quantized log return -- the shared first stage of every
     daily-bar risk diagnostic in this module.  One day-granularity
     partial agg + one symbol-partitioned window pass."""
-    src = events.filter(F.col("value") > 0)
-    key = F.struct(F.col("ts"), F.col("event_id"))
-    dclose = src.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("day", F.col("ts")).alias("day"),
-    ).agg(F.max_by(F.col("value"), key).alias("c"))
+    dclose = _daily_closes(events, positive_only=True)
     w = Window.partitionBy("symbol").orderBy("day")
     prev = F.lag("c").over(w)
     return dclose.select(
@@ -4980,12 +4835,7 @@ def cdar_conditional_drawdown(events: DataFrame, tail: float = 0.05) -> DataFram
     tail mean is a ratio of an exact integer sum over an exact integer
     count; k = ceil(n/ (1/tail)) is evaluated as ceil(n * tail) on the
     same doubles by both engines."""
-    src = events.filter(F.col("value") > 0)
-    key = F.struct(F.col("ts"), F.col("event_id"))
-    dclose = src.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("day", F.col("ts")).alias("day"),
-    ).agg(F.max_by(F.col("value"), key).alias("c"))
+    dclose = _daily_closes(events, positive_only=True)
     w = Window.partitionBy("symbol").orderBy("day")
     runmax = F.max("c").over(w.rowsBetween(Window.unboundedPreceding, 0))
     dd = qround(F.lit(1.0) - F.col("c") / runmax, 12)
@@ -5656,24 +5506,6 @@ def newey_west_tstat(events: DataFrame, max_lag: int = 5) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _daily_ohlc(events: DataFrame) -> DataFrame:
-    """Internal (symbol, day, o, h, l, c) frame from positive ticks:
-    deterministic first/last by the (ts, event_id) key, exact min/max.
-    One day-granularity partial agg -- the shared first stage of the
-    range-based volatility estimators."""
-    src = events.filter(F.col("value") > 0)
-    key = F.struct(F.col("ts"), F.col("event_id"))
-    return src.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("day", F.col("ts")).alias("day"),
-    ).agg(
-        F.min_by(F.col("value"), key).alias("o"),
-        F.max("value").alias("h"),
-        F.min("value").alias("l"),
-        F.max_by(F.col("value"), key).alias("c"),
-    )
-
-
 def range_vol_estimators(events: DataFrame) -> DataFrame:
     """Range-based daily volatility per symbol: Parkinson (1980),
     Garman-Klass (1980), and Rogers-Satchell (1991) estimators from the
@@ -5696,7 +5528,10 @@ def range_vol_estimators(events: DataFrame) -> DataFrame:
     12 dp (libm-ulp isolation) before the pure-arithmetic terms; the
     ln-2 constants are fixed 17-digit literals shared with the oracle;
     per-day terms re-quantize at 12 dp before the avg."""
-    return _range_vol_from_ohlc(_daily_ohlc(events))
+    bars = _daily_bars(events, positive_only=True).withColumnsRenamed(
+        {"open": "o", "high": "h", "low": "l", "close": "c"}
+    )
+    return _range_vol_from_ohlc(bars)
 
 
 def _range_vol_from_ohlc(bars: DataFrame) -> DataFrame:
@@ -6057,12 +5892,7 @@ def _pair_residual_arrays(events: DataFrame) -> DataFrame:
     over ONE day-ordered (pa, pb) array, and the day-ordered quantized
     residual spread array ``es``.  Two tick-wide scans, pair-cardinality
     rows, calendar-bounded arrays."""
-    src = events.filter(F.col("value") > 0)
-    key = F.struct(F.col("ts"), F.col("event_id"))
-    dclose = src.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("day", F.col("ts")).alias("day"),
-    ).agg(F.max_by(F.col("value"), key).alias("c"))
+    dclose = _daily_closes(events, positive_only=True)
     lp = dclose.select(
         "symbol", "day", qround(F.log(F.col("c")), 12).alias("p")
     )
@@ -6451,14 +6281,13 @@ def epps_effect_curve(
     interval frames -- no per-row fan-out beyond the |intervals|
     constant."""
     src = events.filter(F.col("value") > 0)
-    key = F.struct(F.col("ts"), F.col("event_id"))
     parts = []
     for m in intervals:
         sec = 60 * int(m)
         bars = src.groupBy(
             F.col("event_type").alias("symbol"),
             F.expr(f"unix_timestamp(ts) div {sec}").alias("bucket"),
-        ).agg(F.max_by(F.col("value"), key).alias("c"))
+        ).agg(_close().alias("c"))
         w = Window.partitionBy("symbol").orderBy("bucket")
         prev = F.lag("c").over(w)
         lr = bars.select(
@@ -6569,12 +6398,7 @@ def permutation_entropy(events: DataFrame) -> DataFrame:
     engine); counts are BIGINTs; the entropy uses the count identity
     H = ln N - sum(c ln c)/N so one grouped pass suffices, and the only
     doubles are the final identically-written expressions."""
-    src = events.filter(F.col("value") > 0)
-    key = F.struct(F.col("ts"), F.col("event_id"))
-    dclose = src.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("day", F.col("ts")).alias("day"),
-    ).agg(F.max_by(F.col("value"), key).alias("c"))
+    dclose = _daily_closes(events, positive_only=True)
     w = Window.partitionBy("symbol").orderBy("day")
     tri = dclose.select(
         "symbol",

@@ -8747,7 +8747,7 @@ def q_streaming_session_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Round-12 additions (batch 1): range-based volatility, Cornish-Fisher
 # VaR, sign Markov chain, downside beta, trade durations, price
 # clustering.  Shared daily-OHLC / daily-return CTEs mirror the engine's
-# _daily_ohlc / _daily_log_returns stages exactly.
+# positive-tick _daily_bars / _daily_log_returns stages exactly.
 # ---------------------------------------------------------------------------
 
 _DOHLC_SQL = """
@@ -9031,8 +9031,8 @@ def q_streaming_mode_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Streaming twin of the range-vol report: daily OHLC state is a
 # commutative per-key fold (keyed open/close re-picks, min/max range),
-# so the drained bars are row-identical to the batch _daily_ohlc stage
-# and the report shares the batch oracle verbatim.
+# so the drained bars are row-identical to the batch positive-tick
+# _daily_bars stage and the report shares the batch oracle verbatim.
 @register("streaming_range_vol", ORACLE_SQL["range_vol_estimators"])
 def q_streaming_range_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .streaming.silver import streaming_range_vol

@@ -38,18 +38,12 @@ def main() -> int:
     from real_time_financial_lakehouse_spark import registry
     from real_time_financial_lakehouse_spark.session import get_spark
 
+    from bench import warm_up
+
     spark = get_spark(app_name="micro-bench")
     spark.sparkContext.setLogLevel("ERROR")
     # Same one-time warm-up as bench.py so rep medians measure the plan.
-    from pyspark.sql import functions as F
-
-    from real_time_financial_lakehouse_spark.catalog import load_tables
-
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    for df in load_tables(spark, args.sf).values():
-        df.count()
-    small = spark.range(100).withColumnRenamed("id", "k")
-    spark.range(10_000).join(F.broadcast(small), F.col("id") == F.col("k")).count()
+    warm_up(spark, args.sf)
 
     out = {}
     for name in args.names:

@@ -253,6 +253,22 @@ def test_transform_with_state_gate_reports_env():
 # simhash_near_pairs
 # ---------------------------------------------------------------------------
 
+def test_min_label_components_raises_instead_of_returning_upper_bounds(spark):
+    """A 6-node chain needs 5 passes plus a quiet one: too few passes and
+    a non-positive budget both raise; the default converges to one
+    cluster labelled with the minimum id."""
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 6)], "doc_a long, doc_b long"
+    )
+    universe = spark.range(1, 7).withColumnRenamed("id", "doc_id")
+    with pytest.raises(RuntimeError, match="not converged after 2 passes"):
+        dedup.min_label_components(edges, universe, max_iter=2)
+    with pytest.raises(ValueError, match="max_iter"):
+        dedup.min_label_components(edges, universe, max_iter=0)
+    out = dedup.min_label_components(edges, universe).collect()
+    assert [(r.doc_id, r.cluster_id) for r in out] == [(i, 1) for i in range(1, 7)]
+
+
 def test_simhash_near_pairs_finds_token_level_near_dups(spark):
     base = "alpha beta gamma delta epsilon zeta eta theta " * 4
     rows = [
