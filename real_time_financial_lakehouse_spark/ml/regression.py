@@ -12,6 +12,8 @@ slope = covar_pop(x,y)/var_pop(x), intercept = avg(y) - slope*avg(x)).
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -21,6 +23,8 @@ from ..scratch import scratch_dir
 FEATURE_COL = "volatility"
 LABEL_COL = "average_price"
 MIN_TRAINING_ROWS = 5  # train_model.py:34-36 guard
+
+log = logging.getLogger(__name__)
 
 def training_frame(silver: DataFrame) -> DataFrame:
     """train_model.py:30,43: positivity filter + feature/label projection."""
@@ -74,25 +78,41 @@ def load_model(path: str):
     return LinearRegressionModel.load(path)
 
 def infer(model, batch: DataFrame) -> DataFrame:
-    """M3: VectorAssembler + transform -> ``predicted_price``
-    (process_silver.py:72-76)."""
-    from pyspark.ml.feature import VectorAssembler
+    """M3: ``predicted_price`` from the fitted model (process_silver.py:72-76),
+    applied in-plan as one column, ``coef * volatility + intercept``.
 
-    assembler = VectorAssembler(inputCols=[FEATURE_COL], outputCol="features")
-    scored = model.transform(assembler.transform(batch))
-    return scored.withColumn("predicted_price", F.col("prediction")).drop(
-        "features", "prediction"
+    ``LinearRegressionModel.transform`` through a ``VectorAssembler``
+    computes ``dot(features, coefficients) + intercept``; the one-feature
+    dot is ``0.0 + coef * x``, so this column is bit-identical to it and
+    skips the per-batch assembler, the Py4J param copy and the predict
+    UDF.  A null or NaN feature raises at execution, as the assembler's
+    default ``handleInvalid="error"`` does, instead of scoring NaN."""
+    (coef,) = model.coefficients.toArray()
+    x = F.col(FEATURE_COL)
+    return batch.withColumn(
+        "predicted_price",
+        F.when(
+            x.isNull() | F.isnan(x),
+            F.raise_error(F.lit(f"invalid {FEATURE_COL} value for the price model")),
+        ).otherwise(F.lit(coef) * x + F.lit(model.intercept)),
     )
 
 def infer_with_fallback(model, batch: DataFrame) -> DataFrame:
     """M4: the reference's defensive wrapper -- lit(0.0) when the model is
-    absent or transform fails (process_silver.py:64-80)."""
+    absent or transform fails (process_silver.py:64-80).  Every fallback
+    logs a WARNING that names its cause, so a stream scoring zeros is
+    visible."""
     if model is None:
-        return batch.withColumn("predicted_price", F.lit(0.0))
+        return fallback(batch, "no model loaded")
     try:
         return infer(model, batch)
-    except Exception:
-        return batch.withColumn("predicted_price", F.lit(0.0))
+    except Exception as exc:
+        return fallback(batch, repr(exc))
+
+def fallback(batch: DataFrame, cause: str) -> DataFrame:
+    """The reference's ``lit(0.0)`` prediction, logged with its cause."""
+    log.warning("predicted_price falls back to 0.0: %s", cause)
+    return batch.withColumn("predicted_price", F.lit(0.0))
 
 def ols_closed_form(silver: DataFrame, by_symbol: bool = True) -> DataFrame:
     """Closed-form 1-feature OLS per symbol -- the SQL-expressible twin of

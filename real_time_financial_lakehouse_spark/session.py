@@ -16,6 +16,16 @@ a scale-aware configuration:
 * ``spark.sql.legacy.parquet.nanosAsLong`` -- the ``events`` fixture stores
   TIMESTAMP(NANOS) which Spark's parquet reader otherwise rejects
   (PARQUET_TYPE_ILLEGAL); we read nanos as long and convert in the catalog.
+* Streaming checkpoints (offsets, commits, source logs, state files) go
+  through Spark's ``FileSystemBasedCheckpointFileManager``.  The default
+  ``FileContext`` manager stats every atomic rename with
+  ``getFileLinkStatus``, which Hadoop's local filesystem answers by
+  forking ``readlink`` when libhadoop is absent -- hundreds of forks per
+  drain.  The ``FileSystem`` manager's no-overwrite rename is the same
+  check-then-rename on a local disk, and ``FileSystem.rename`` fails
+  atomically on an existing destination on HDFS.  Set when the session
+  starts, it reaches every ``newSession()`` child (the streaming drains
+  run there).
 """
 
 from __future__ import annotations
@@ -23,6 +33,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+)
 
 def default_parallelism() -> int:
     env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -56,6 +70,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))

@@ -5,8 +5,9 @@ Plan shape (identical to the reference):
     readStream(bronze) -> cast projection -> withWatermark(1 minute)
     -> groupBy(window(ts, 1 min, 30 s), symbol)
        .agg(stddev_pop -> volatility, avg -> average_price)
-    -> foreachBatch: na.fill(0, volatility) -> ML transform (or lit(0.0)
-       fallback) -> batch append to silver table
+    -> foreachBatch: na.fill(0, volatility) -> in-plan model score (or
+       logged lit(0.0) fallback) -> batch append to silver table, the
+       batch's one action (no count / isEmpty guard)
     -> outputMode("update"), 10 s trigger, checkpointed
 
 The aggregation expression is the SAME builder the batch path uses
@@ -36,6 +37,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..ml.regression import fallback
 from ..operators.silver import sliding_window_agg
 from ..scratch import scratch_dir
 from . import drain, drain_merge, shard_stream
@@ -66,19 +68,23 @@ def make_batch_processor(
     out_dir: str,
     infer: Callable[[DataFrame], DataFrame] | None = None,
 ) -> Callable[[DataFrame, int], None]:
-    """The foreachBatch callback (process_silver.py:60-85): count guard,
-    na.fill on volatility, model inference with lit(0.0) fallback, batch
-    append to the silver table."""
+    """The foreachBatch callback (process_silver.py:60-85): na.fill on
+    volatility, model inference with a logged lit(0.0) fallback, batch
+    append to the silver table.
+
+    The write is the batch's only action: any other (``isEmpty()``,
+    ``count()``) would run the stateful window aggregate and the scoring
+    again, and double the watermark's drop count.  So a no-data batch is
+    written too: it appends no rows, though Spark may write one
+    schema-only parquet file for it, which readers see as zero rows."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         filled = batch_df.na.fill(0.0, subset=["volatility"])
         if infer is not None:
             try:
                 scored = infer(filled)
-            except Exception:
-                scored = filled.withColumn("predicted_price", F.lit(0.0))
+            except Exception as exc:
+                scored = fallback(filled, repr(exc))
         else:
             scored = filled.withColumn("predicted_price", F.lit(0.0))
         scored.write.mode("append").parquet(out_dir)

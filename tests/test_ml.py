@@ -47,6 +47,57 @@ def test_infer_fallback_on_bad_model(spark, silver_df):
     out = R.infer_with_fallback(Broken(), silver_df)
     assert out.filter(F.col("predicted_price") != 0.0).count() == 0
 
+def test_infer_fallback_logs_a_warning_naming_the_cause(spark, silver_df, caplog):
+    class Broken:
+        def __getattr__(self, name):
+            raise RuntimeError("boom")
+
+    with caplog.at_level("WARNING", logger=R.__name__):
+        R.infer_with_fallback(Broken(), silver_df)
+    (record,) = [r for r in caplog.records if r.name == R.__name__]
+    assert record.levelname == "WARNING"
+    assert "RuntimeError('boom')" in record.getMessage()
+
+def _fitted_frame(spark):
+    """120 rows with a non-degenerate feature, so the fit is not singular."""
+    rows = [(0.37 * (i % 23) + 0.011 * i, 2.9 * (i % 23) + 7.0 + 0.13 * (i % 5)) for i in range(120)]
+    return spark.createDataFrame(rows, ["volatility", "average_price"])
+
+def test_in_plan_score_equals_mllib_transform(spark):
+    """``infer`` scores with a column expression; every prediction must be
+    bit-identical to ``model.transform`` through a VectorAssembler."""
+    from pyspark.ml.feature import VectorAssembler
+
+    df = _fitted_frame(spark).withColumn("i", F.monotonically_increasing_id())
+    model = R.train(df)
+    mllib = model.transform(
+        VectorAssembler(inputCols=["volatility"], outputCol="features").transform(df)
+    )
+    want = {r["i"]: r["prediction"] for r in mllib.select("i", "prediction").collect()}
+    got = {r["i"]: r["predicted_price"] for r in R.infer(model, df).select("i", "predicted_price").collect()}
+    assert len(got) == len(want) == 120
+    assert got == want
+
+@pytest.mark.parametrize("bad", [None, float("nan")])
+def test_in_plan_score_raises_on_an_invalid_feature(spark, bad):
+    """A null or NaN feature fails the score, as the assembler's default
+    ``handleInvalid="error"`` does; it is never scored as NaN.  The silver
+    callback's na.fill makes both 0.0 before scoring."""
+    from pyspark.ml.feature import VectorAssembler
+    from pyspark.sql import types as T
+
+    model = R.train(_fitted_frame(spark))
+    schema = T.StructType([T.StructField("volatility", T.DoubleType())])
+    df = spark.createDataFrame([(1.0,), (bad,)], schema)
+    with pytest.raises(Exception, match="invalid volatility"):
+        R.infer(model, df).collect()
+    with pytest.raises(Exception):  # the reference path refuses it too
+        model.transform(
+            VectorAssembler(inputCols=["volatility"], outputCol="features").transform(df)
+        ).collect()
+    filled = R.infer(model, df.na.fill(0.0, subset=["volatility"])).collect()
+    assert [r["predicted_price"] for r in filled][1] == model.intercept
+
 def test_closed_form_matches_mllib(spark):
     """The SQL-expressible OLS twin must agree with pyspark.ml's solver on
     a non-degenerate frame (the sf0.001 sliding windows are mostly

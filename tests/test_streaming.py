@@ -116,6 +116,57 @@ def test_late_data_dropped_with_watermark(spark, tmp_path):
     )
     assert late_window_rows.count() == 0
 
+def test_watermark_drops_each_late_event_once_per_window(spark, tmp_path):
+    """The silver stream runs each micro-batch's stateful plan once: a
+    late event that lands alone in its two sliding windows is dropped
+    exactly twice, summed over the drains' progress.  A callback that
+    also probes the batch (``isEmpty()`` before the write) runs the plan
+    again and reports four."""
+    src = tmp_path / "wm_src"
+    src.mkdir()
+    on_time = [
+        {"symbol": "X", "price": 10.0, "quantity": 1.0, "timestamp": "2024-01-01T10:00:00"},
+        {"symbol": "X", "price": 20.0, "quantity": 1.0, "timestamp": "2024-01-01T10:30:00"},
+    ]
+    # the second file: one event 29.5 minutes behind the max event time,
+    # far past the 1-minute delay, next to an on-time one, so the batch
+    # has a row to write and an extra action before the write would run
+    # the plan again
+    later = [
+        {"symbol": "X", "price": 99.0, "quantity": 1.0, "timestamp": "2024-01-01T10:00:30"},
+        {"symbol": "X", "price": 21.0, "quantity": 1.0, "timestamp": "2024-01-01T10:30:20"},
+    ]
+    trades = bronze.json_file_source(spark, str(src), max_files_per_trigger=1).select(
+        F.col("symbol").alias("event_type"),
+        F.col("price").alias("value"),
+        F.col("timestamp").cast("timestamp").alias("ts"),
+    )
+    progress = []
+    # Spark filters late rows against the previous batch's watermark, so
+    # the late file arrives after the first drain has advanced it
+    for name, rows in (("b1.json", on_time), ("b2.json", later)):
+        with open(src / name, "w") as f:
+            f.write("\n".join(json.dumps(r) for r in rows) + "\n")
+        q = silver.run_silver_stream(
+            trades, str(tmp_path / "wm_out"), str(tmp_path / "wm_ckpt"), available_now=True
+        )
+        q.awaitTermination()
+        progress += q.recentProgress
+    assert sum(p["numInputRows"] for p in progress) == 4
+    dropped = sum(o["numRowsDroppedByWatermark"] for p in progress for o in p["stateOperators"])
+    assert dropped == 2
+
+def test_sessions_carry_the_filesystem_checkpoint_manager(spark):
+    """get_spark routes streaming checkpoints through the FileSystem-based
+    manager (no forked ``readlink`` per rename), and the child sessions
+    the drains run on inherit it."""
+    from real_time_financial_lakehouse_spark.session import CHECKPOINT_FILE_MANAGER
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    assert CHECKPOINT_FILE_MANAGER.endswith(".FileSystemBasedCheckpointFileManager")
+    assert spark.conf.get(key) == CHECKPOINT_FILE_MANAGER
+    assert spark.newSession().conf.get(key) == CHECKPOINT_FILE_MANAGER
+
 def test_kafka_source_builder_shape(spark):
     """S1: builder constructs without a broker (plan-only check).  The
     Kafka connector jar isn't bundled with plain pyspark; skip if the data

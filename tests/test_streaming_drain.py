@@ -1,6 +1,7 @@
-"""One way to drain a streaming twin, and scratch space that does not leak.
+"""One way to drain a streaming twin, one action per micro-batch, and
+scratch space that does not leak.
 
-No Spark session is needed: the guard reads the source, and the scratch
+No Spark session is needed: the guards read the source, and the scratch
 check runs in a child interpreter.
 """
 
@@ -76,3 +77,31 @@ def test_scratch_dirs_are_removed_at_interpreter_exit(tmp_path):
     assert alive_after_fork == "True"
     assert not os.path.exists(made)
     assert list(tmp_path.iterdir()) == []
+
+
+# actions that run a micro-batch's plan: a foreachBatch callback's write
+# is its one action, and any of these would run the stateful plan again
+BATCH_ACTIONS = {"isEmpty", "count", "collect", "first", "take", "head"}
+
+
+def test_foreach_batch_callbacks_run_no_extra_action():
+    callbacks, offenders = [], {}
+    for module in ("silver.py", "__init__.py"):
+        tree = ast.parse((STREAMING / module).read_text())
+        for fn in ast.walk(tree):
+            args = [a.arg for a in fn.args.args] if isinstance(fn, ast.FunctionDef) else []
+            if args[-1:] != ["batch_id"]:
+                continue
+            callbacks.append(fn.name)
+            hits = {
+                n.func.attr
+                for n in ast.walk(fn)
+                if isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr in BATCH_ACTIONS
+            }
+            if hits:
+                offenders[f"{module}::{fn.name}"] = sorted(hits)
+    # make_batch_processor's process_batch, drain_merge's commit, drain_latest's append
+    assert len(callbacks) >= 3, callbacks
+    assert not offenders, f"foreachBatch callbacks that run the batch twice: {offenders}"
