@@ -23,15 +23,21 @@ trigger(availableNow) so each window refines exactly once.
 
 Scale notes: watermark bounds state (windows older than
 max(event_time) - 1 min are evicted); state store per (window, symbol)
-group; sliding windows multiply state by window/slide = 2.  For 100 TB/day
-streams, shuffle partitions should match executor cores and the state
-store should be RocksDB
+group; sliding windows multiply state by window/slide = 2.  The state
+partition count is fixed at the checkpoint's first batch, and
+``run_silver_stream`` takes it from the same rule as every drained twin
+(``streaming.state_partitions``): an availableNow start over file
+sources gets one partition per advisory-partition-size of input, capped
+at the session's parallelism; a live start keeps the session's shuffle
+partitions, which for 100 TB/day streams should be ~2-3x executor cores.
+The state store there should be RocksDB
 (spark.sql.streaming.stateStore.providerClass) -- config, not code.
 """
 
 from __future__ import annotations
 
 import os
+import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,7 +46,7 @@ from pyspark.sql import functions as F
 from ..ml.regression import fallback
 from ..operators.silver import sliding_window_agg
 from ..scratch import scratch_dir
-from . import drain, drain_merge, shard_stream
+from . import drain, drain_merge, pinned_state_partitions, shard_stream
 
 def silver_query(
     bronze: DataFrame,
@@ -99,18 +105,31 @@ def run_silver_stream(
     trigger_seconds: int | None = None,
     available_now: bool = False,
 ):
-    """S6/T1-T5: update-mode foreachBatch stream over the silver query."""
-    query = silver_query(bronze)
-    writer = (
-        query.writeStream.foreachBatch(make_batch_processor(out_dir, infer))
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    """S6/T1-T5: update-mode foreachBatch stream over the silver query.
+
+    The query starts on a child session of ``bronze``'s, with its state
+    partitions set by ``streaming.state_partitions``, so the caller's
+    session conf is never written.  The plan moves there through a
+    uniquely named global temp view, dropped once the query has
+    started (or failed to)."""
+    spark = bronze.sparkSession
+    view = f"rtfl_silver_{uuid.uuid4().hex}"
+    table = f"{spark.conf.get('spark.sql.globalTempDatabase')}.{view}"
+    silver_query(bronze).createGlobalTempView(view)
+    try:
+        query = pinned_state_partitions(spark, lambda ss: ss.table(table), available_now)
+        writer = (
+            query.writeStream.foreachBatch(make_batch_processor(out_dir, infer))
+            .outputMode("update")
+            .option("checkpointLocation", checkpoint_dir)
+        )
+        if available_now:
+            writer = writer.trigger(availableNow=True)
+        elif trigger_seconds:
+            writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+        return writer.start()
+    finally:
+        spark.catalog.dropGlobalTempView(view)
 
 def _events_ts_is_nanos(sf_dir: str) -> bool:
     """True when the events fixture stores TIMESTAMP(NANOS) (rounds 1-2

@@ -376,24 +376,26 @@ def test_streaming_ema_state_carries_across_micro_batches(spark, tmp_path):
     ).write.partitionBy("part").mode("overwrite").parquet(src)
 
     out = str(tmp_path / "out"); ck = str(tmp_path / "ck")
-    with pinned_state_partitions(spark) as ss:
-        stream = (
+    stream = pinned_state_partitions(
+        spark,
+        lambda ss: ema_stream(
             ss.readStream.schema(events.schema)
             .option("maxFilesPerTrigger", "1")
             .option("recursiveFileLookup", "true")
             .parquet(src)
+        ),
+        available_now=True,
+    )
+    q = (
+        stream.writeStream.foreachBatch(
+            lambda b, _i: b.write.mode("append").parquet(out)
         )
-        q = (
-            ema_stream(stream)
-            .writeStream.foreachBatch(
-                lambda b, _i: b.write.mode("append").parquet(out)
-            )
-            .outputMode("update")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        .outputMode("update")
+        .option("checkpointLocation", ck)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     raw = spark.read.parquet(out)
     n_batches = raw.groupBy("symbol").count().agg(F2.max("count")).collect()[0][0]
     assert n_batches >= 4, "stream must have run multiple micro-batches"

@@ -9,14 +9,21 @@ from __future__ import annotations
 
 import json
 import os
+from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
-from conftest import SF_SMOKE
+from conftest import SF_ORACLE, SF_SMOKE
 
+from real_time_financial_lakehouse_spark import streaming
 from real_time_financial_lakehouse_spark.operators.silver import sliding_window_agg
 from real_time_financial_lakehouse_spark.oracle import compare_frames
-from real_time_financial_lakehouse_spark.streaming import bronze, silver
+from real_time_financial_lakehouse_spark.scratch import scratch_dir
+from real_time_financial_lakehouse_spark.session import session_parallelism
+from real_time_financial_lakehouse_spark.streaming import bronze, silver, state_partitions
+
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 
 TRADES = [
     {"symbol": "BTCUSDT", "price": 60000.0, "quantity": 0.5, "timestamp": "2024-01-01T00:00:05"},
@@ -84,17 +91,11 @@ def test_late_data_dropped_with_watermark(spark, tmp_path):
     out = str(tmp_path / "late_out")
     ckpt = str(tmp_path / "late_ckpt")
 
-    def run_once():
-        parsed = bronze.json_file_source(spark, str(src), max_files_per_trigger=1)
-        trades = parsed.select(
-            F.col("symbol").alias("event_type"),
-            F.col("price").alias("value"),
-            F.col("timestamp").cast("timestamp").alias("ts"),
-        )
-        q = silver.run_silver_stream(trades, out, ckpt, available_now=True)
+    def run_once(session):
+        q = silver.run_silver_stream(_trades(session, src), out, ckpt, available_now=True)
         q.awaitTermination()
 
-    run_once()
+    run_once(spark)
     n_windows_first = spark.read.parquet(out).count()
     assert n_windows_first > 0
 
@@ -107,7 +108,14 @@ def test_late_data_dropped_with_watermark(spark, tmp_path):
             )
             + "\n"
         )
-    run_once()
+    # the restart's caller sizes partitions at 64 bytes, so the rule alone
+    # would pick more than the one partition the first run recorded
+    restart = spark.newSession()
+    restart.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64b")
+    assert state_partitions(_trades(restart, src), available_now=True) > 1 or (
+        session_parallelism(spark) == 1
+    )
+    run_once(restart)
     got = spark.read.parquet(out)
     # late event's windows start at 10:00:00 / 10:00:30; its value 99 must
     # not be reflected in any window emitted by the second run
@@ -115,6 +123,10 @@ def test_late_data_dropped_with_watermark(spark, tmp_path):
         (F.col("window_start") == "2024-01-01 10:00:30") & (F.col("average_price") == 99.0)
     )
     assert late_window_rows.count() == 0
+    # Spark restores the count recorded at the checkpoint's first batch
+    batches = [b for b in os.listdir(os.path.join(ckpt, "offsets")) if b.isdigit()]
+    assert len(batches) > 2
+    assert {_recorded_partitions(ckpt, b) for b in batches} == {"1"}
 
 def test_watermark_drops_each_late_event_once_per_window(spark, tmp_path):
     """The silver stream runs each micro-batch's stateful plan once: a
@@ -136,11 +148,7 @@ def test_watermark_drops_each_late_event_once_per_window(spark, tmp_path):
         {"symbol": "X", "price": 99.0, "quantity": 1.0, "timestamp": "2024-01-01T10:00:30"},
         {"symbol": "X", "price": 21.0, "quantity": 1.0, "timestamp": "2024-01-01T10:30:20"},
     ]
-    trades = bronze.json_file_source(spark, str(src), max_files_per_trigger=1).select(
-        F.col("symbol").alias("event_type"),
-        F.col("price").alias("value"),
-        F.col("timestamp").cast("timestamp").alias("ts"),
-    )
+    trades = _trades(spark, src)
     progress = []
     # Spark filters late rows against the previous batch's watermark, so
     # the late file arrives after the first drain has advanced it
@@ -155,6 +163,125 @@ def test_watermark_drops_each_late_event_once_per_window(spark, tmp_path):
     assert sum(p["numInputRows"] for p in progress) == 4
     dropped = sum(o["numRowsDroppedByWatermark"] for p in progress for o in p["stateOperators"])
     assert dropped == 2
+
+def _trades(session, src):
+    """The JSON tape under ``src`` as the silver stream's input columns,
+    one file per micro-batch."""
+    return bronze.json_file_source(session, str(src), max_files_per_trigger=1).select(
+        F.col("symbol").alias("event_type"),
+        F.col("price").alias("value"),
+        F.col("timestamp").cast("timestamp").alias("ts"),
+    )
+
+def _recorded_partitions(ckpt: str, batch="0") -> str:
+    """The shuffle (= state) partition count a checkpoint's offsets log
+    records for ``batch``: line 2 of the entry is its metadata JSON."""
+    with open(os.path.join(ckpt, "offsets", str(batch))) as f:
+        return json.loads(f.read().splitlines()[1])["conf"][SHUFFLE_PARTITIONS]
+
+def _drained_partitions(monkeypatch, caller, build) -> str:
+    """Drain ``build`` from ``caller`` through ``streaming.drain`` and
+    return the partition count its scratch checkpoint recorded."""
+    made = []
+
+    def spy(prefix):
+        made.append(scratch_dir(prefix))
+        return made[-1]
+
+    monkeypatch.setattr(streaming, "scratch_dir", spy)
+    streaming.drain(caller, build, _consume, output_mode="update")
+    (ckpt,) = [d for d in made if os.path.basename(d).startswith("rtfl_drain_ckpt_")]
+    return _recorded_partitions(ckpt)
+
+def _consume(batch_df, _batch_id):
+    batch_df.write.format("noop").mode("overwrite").save()
+
+def test_silver_stream_state_is_sized_to_its_input(spark, tmp_path):
+    """An availableNow silver run over a two-file tape (a few hundred
+    bytes, under one advisory partition) records one state partition,
+    whatever the caller's shuffle partitions, and writes one state store."""
+    src = tmp_path / "tape"
+    src.mkdir()
+    for name, t in (("b1.json", TRADES[:2]), ("b2.json", TRADES[2:])):
+        with open(src / name, "w") as f:
+            f.write("\n".join(json.dumps(r) for r in t) + "\n")
+    ckpt = str(tmp_path / "ckpt")
+    q = silver.run_silver_stream(_trades(spark, src), str(tmp_path / "out"), ckpt, available_now=True)
+    q.awaitTermination()
+    assert spark.conf.get(SHUFFLE_PARTITIONS) != "1"
+    assert _recorded_partitions(ckpt) == "1"
+    assert [d for d in os.listdir(os.path.join(ckpt, "state", "0")) if d.isdigit()] == ["0"]
+
+def test_drain_state_grows_with_input_up_to_session_parallelism(spark, monkeypatch):
+    """At a 1 KiB advisory partition size the sf0.01 events (megabytes)
+    ask for more partitions than the session has cores: the rule caps
+    the count at session_parallelism."""
+    caller = spark.newSession()
+    caller.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1k")
+    got = _drained_partitions(
+        monkeypatch,
+        caller,
+        lambda ss: silver.events_stream(ss, SF_ORACLE).groupBy("event_type").count(),
+    )
+    assert got == str(session_parallelism(caller))
+
+def test_drain_of_a_pathless_source_keeps_the_session_partitions(spark, monkeypatch):
+    """A rate source has no path to size, so its start keeps the caller's
+    spark.sql.shuffle.partitions."""
+    caller = spark.newSession()
+    caller.conf.set(SHUFFLE_PARTITIONS, "3")
+    got = _drained_partitions(
+        monkeypatch,
+        caller,
+        lambda ss: ss.readStream.format("rate-micro-batch")
+        .option("rowsPerBatch", 10)
+        .load()
+        .groupBy((F.col("value") % 3).alias("k"))
+        .count(),
+    )
+    assert got == "3"
+
+def test_streams_leave_the_caller_session_as_it_was(spark, tmp_path):
+    """Both stream starts size state on a child session: the caller's
+    shuffle partitions do not move, no global temp view outlives a start
+    (even one that raises), and a runtime conf the caller set reaches the
+    session the stream runs on."""
+    caller = spark.newSession()
+    caller.conf.set("spark.sql.ansi.enabled", "false")
+    before = caller.conf.get(SHUFFLE_PARTITIONS)
+    seen = []
+
+    def infer(df):
+        seen.append(df.sparkSession.conf.get("spark.sql.ansi.enabled"))
+        return df.withColumn("predicted_price", F.lit(0.0))
+
+    q = silver.run_silver_stream(
+        silver.events_stream(caller, SF_SMOKE),
+        str(tmp_path / "out"),
+        str(tmp_path / "ckpt"),
+        infer=infer,
+        available_now=True,
+    )
+    q.awaitTermination()
+
+    def build(ss):
+        seen.append(ss.conf.get("spark.sql.ansi.enabled"))
+        return silver.events_stream(ss, SF_SMOKE).groupBy("event_type").count()
+
+    streaming.drain(caller, build, _consume, output_mode="update")
+    assert seen and set(seen) == {"false"}
+    assert caller.conf.get(SHUFFLE_PARTITIONS) == before
+    assert caller.catalog.listTables("global_temp") == []
+
+    not_a_stream = caller.createDataFrame(
+        [("X", 1.0, datetime(2024, 1, 1))], "event_type string, value double, ts timestamp"
+    )
+    with pytest.raises(Exception, match="writeStream"):
+        silver.run_silver_stream(
+            not_a_stream, str(tmp_path / "out2"), str(tmp_path / "ckpt2"), available_now=True
+        )
+    assert caller.catalog.listTables("global_temp") == []
+    assert caller.conf.get(SHUFFLE_PARTITIONS) == before
 
 def test_sessions_carry_the_filesystem_checkpoint_manager(spark):
     """get_spark routes streaming checkpoints through the FileSystem-based

@@ -105,3 +105,52 @@ def test_foreach_batch_callbacks_run_no_extra_action():
     # make_batch_processor's process_batch, drain_merge's commit, drain_latest's append
     assert len(callbacks) >= 3, callbacks
     assert not offenders, f"foreachBatch callbacks that run the batch twice: {offenders}"
+
+
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
+
+def _calls_with_key(tree: ast.AST, method: str) -> list[ast.Call]:
+    return [
+        n
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == method
+        and n.args
+        and isinstance(n.args[0], ast.Constant)
+        and n.args[0].value == SHUFFLE_PARTITIONS
+    ]
+
+
+def test_state_partitions_are_set_by_one_rule():
+    """Every stream under streaming/ gets its state partition count from
+    one rule: the shuffle-partition key is set by exactly one call, whose
+    value comes from ``state_partitions``, the key appears nowhere but in
+    that call and in reads, and no function keeps a constant partition
+    count as a default."""
+    sets, reads, uses, int_defaults = [], [], 0, []
+    for path in sorted(STREAMING.glob("*.py")):
+        tree = ast.parse(path.read_text())
+        sets += [(path.name, c) for c in _calls_with_key(tree, "set")]
+        reads += _calls_with_key(tree, "get")
+        uses += sum(
+            isinstance(n, ast.Constant) and n.value == SHUFFLE_PARTITIONS for n in ast.walk(tree)
+        )
+        for fn in ast.walk(tree):
+            if isinstance(fn, ast.FunctionDef) and fn.name in {
+                "state_partitions",
+                "pinned_state_partitions",
+                "drain",
+            }:
+                int_defaults += [
+                    f"{path.name}::{fn.name}"
+                    for d in fn.args.defaults + fn.args.kw_defaults
+                    if isinstance(d, ast.Constant) and type(d.value) is int
+                ]
+    assert len(sets) == 1, [f"{name}:{c.lineno}" for name, c in sets]
+    ((name, call),) = sets
+    assert name == "__init__.py"
+    assert "state_partitions" in _words(call.args[1])
+    assert uses == len(sets) + len(reads), "the key is aliased or set some other way"
+    assert not int_defaults, int_defaults
