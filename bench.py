@@ -64,6 +64,9 @@ STDOUT_LINE_CAP = 1600
 # medians).
 CANARY_INTERVAL = 25
 
+# {query: family}, derived by scripts/query_traits.py
+TRAITS_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)), "QUERY_TRAITS.json")
+
 
 def shrink_to_fit(payload: dict, cap: int = STDOUT_LINE_CAP) -> str:
     """Serialize ``payload`` for stdout, dropping optional keys in a
@@ -256,37 +259,15 @@ def main() -> None:
     # (streaming micro-batch setup, checkpoint fsync, table-version IO --
     # near-constant cost regardless of data size) with DATA-bound batch
     # queries.  Reporting them separately keeps real per-family
-    # regressions visible as the registry grows.
+    # regressions visible as the registry grows.  Each query's family is
+    # measured from what its build does (scripts/query_traits.py writes
+    # QUERY_TRAITS.json; tests/test_plan_coverage.py re-checks a sample),
+    # never read off its name.
+    with open(TRAITS_PATH) as f:
+        traits = json.load(f)
+
     def family(name: str) -> str:
-        if name.startswith("streaming_"):
-            return "streaming"
-        if name.startswith("versioned_") or name in (
-            "zorder_events_layout", "gold_ctas", "gold_csv_roundtrip",
-            "json_roundtrip", "sorted_export_events", "merge_upsert",
-        ):
-            return "table_io"
-        if name.startswith(("dedup_", "minhash", "lsh_", "simhash",
-                            "fuzzy_", "bloom_", "edit_distance",
-                            "ngram_jaccard", "incremental_dedup",
-                            "semantic_dedup", "source_overlap",
-                            "contamination")):
-            return "dedup"
-        if name.startswith(("ann_", "cosine_", "embedding_", "pca_",
-                            "quantize_", "label_centroids", "cluster_",
-                            "retrieve_", "hybrid_", "knn_", "centroid_",
-                            "kmeans_")):
-            return "ann"
-        if name.startswith(("bm25", "token_", "text_", "lang_", "bpe_",
-                            "winnow", "doc_fingerprints", "top_terms",
-                            "tf_idf", "repetition", "quality_", "vocab_",
-                            "word_entropy", "unigram", "bigram", "ngram_",
-                            "cross_entropy", "term_positions", "zipf",
-                            "heavy_hitters", "chunk_", "boilerplate",
-                            "redact_", "media_", "png_", "gif_", "jpeg_",
-                            "wav_", "nb_lang", "corpus_",
-                            "domain_temperature")):
-            return "text"
-        return "batch"
+        return traits.get(name, "batch")
 
     fam_totals: dict[str, float] = {}
     for name, t in timings.items():

@@ -630,8 +630,6 @@ def _cusum_update(
             n += 1
             sp = sp_sum - min(0.0, sp_min)
             sn = sn_sum - min(0.0, sn_min)
-            import math
-
             if math.floor(sp * 1e6 + 0.5) / 1e6 > CUSUM_H:
                 ap += 1
             if math.floor(sn * 1e6 + 0.5) / 1e6 > CUSUM_H:

@@ -1,24 +1,25 @@
-"""Automated physical-plan antipattern sweep over the registry.
+"""Automated physical-plan antipattern sweep over the whole registry.
 
-For every registered BATCH query (roundtrip-style queries that execute
-during DataFrame construction -- streaming, versioned-table, custom-sink
--- are skipped and listed as such), build the DataFrame lazily and audit
-the optimized + physical plan strings for the shapes that do not survive
-100x scale:
+Every registered query is built once through ``query_traits.build_traced``;
+its optimized + physical plan and the plan of every SQL execution its
+build ran (eager fits, sink writes, stream micro-batches) are audited for
+the shapes that do not survive 100x scale:
 
 * row-at-a-time Python UDFs in the hot path (``BatchEvalPython``) --
-  only the explicitly-named slow-path twin is allowed;
+  only the explicitly-named slow-path twins are allowed;
 * ``CartesianProduct`` (a non-broadcast cross join -- every intended
   cross join in the engine is a broadcast of a scalar/tiny frame);
-* scans that read every column (no ReadSchema pruning at all);
 * GLOBAL window functions (``windowspecdefinition`` with an empty
   partition spec -- WindowExec moves every row to ONE partition, the
   classic corpus-cardinality scale-killer).  Queries whose global
   window provably runs at bounded cardinality (vocabulary / cell /
   state / group-count frames, never per-row) are whitelisted by name
-  with the justification inline.
+  with the justification inline;
+* an empty output schema.
 
-Writes PLAN_AUDIT.json; exits non-zero on any flagged query.
+Writes PLAN_AUDIT.json (with each build's SQL executions and jobs);
+exits non-zero on any flagged query.  tests/test_plan_coverage.py runs
+``audit`` on every query.
 
     python scripts/plan_audit.py [sf_dir]
 """
@@ -29,26 +30,9 @@ import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from real_time_financial_lakehouse_spark import registry  # noqa: E402
-from real_time_financial_lakehouse_spark.session import get_spark  # noqa: E402
-
-# queries that EXECUTE work while the DataFrame is being built (sink
-# roundtrips, versioned-table cycles, streaming drains, ML/codebook
-# fits): auditing them would run the whole pipeline, and their plan
-# shapes are pinned individually in tests/test_scale_plans.py
-_EXECUTES_ON_BUILD = (
-    "streaming_", "versioned_", "custom_", "gold_ctas", "gold_csv",
-    "json_roundtrip", "sorted_export_events", "partitioned_day_rollup",
-    "zorder_events_layout", "merge_upsert", "tpch_refresh_cycle",
-    "ml_price_prediction", "ann_ivf_kmeans_topk", "pca_embeddings",
-    "bpe_train_merges", "bpe_encode_report", "dedup_clusters",
-    "fuzzy_dedup_keep", "semantic_dedup_keep", "minhash_jaccard_estimate",
-    "incremental_dedup", "bloom_incremental_dedup", "dedup_funnel",
-    "user_zscores", "pack_sequences", "file_skipping_report",
-    "lsh_banding_efficiency",  # eager signature checkpoint shared by configs
-)
+from query_traits import ROOT, Trace, build_traced  # noqa: E402
 
 # the one named slow-path twin allowed to cross the Python boundary
 _PYTHON_ALLOWED = {"term_positions_udtf", "media_feature_summary",
@@ -126,56 +110,58 @@ def _global_window_specs(plan: str) -> int:
             n_global += 1
 
 
+def audit(name: str, trace: Trace) -> dict:
+    """Scale flags for one traced build: its build-time plans and its
+    final optimized + physical plan."""
+    qe = trace.df._jdf.queryExecution()
+    optimized = qe.optimizedPlan().toString()
+    executed = qe.executedPlan().toString()
+    plans = [optimized + executed, *trace.plans]
+    flags = []
+    if not trace.df.columns:
+        flags.append("empty-schema")
+    if any("CartesianProduct" in p for p in plans):
+        flags.append("cartesian-product")
+    # ArrowEvalPython / MapInPandas / mapInArrow are the blessed
+    # vectorized boundaries; BatchEvalPython is row-at-a-time
+    if name not in _PYTHON_ALLOWED and any("BatchEvalPython" in p for p in plans):
+        flags.append("row-at-a-time-python")
+    n_glob = _global_window_specs(optimized)
+    max_n = _GLOBAL_WINDOW_ALLOWED.get(name, (0, ""))[0]
+    if n_glob > max_n:
+        flags.append(f"global-window:{n_glob}>{max_n}")
+    return {
+        "build_executions": len(trace.plans),
+        "build_jobs": trace.jobs,
+        "exchanges": executed.count("Exchange "),
+        "flags": flags,
+    }
+
+
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    from __spark_entry__ import SMOKE_SF_DIR
+    from real_time_financial_lakehouse_spark import registry
+    from real_time_financial_lakehouse_spark.catalog import load_tables
+    from real_time_financial_lakehouse_spark.session import get_spark
+
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else SMOKE_SF_DIR
     spark = get_spark(app_name="plan-audit", shuffle_partitions=8)
+    for df in load_tables(spark, sf_dir).values():
+        df.count()
     report: dict[str, object] = {}
-    flagged = 0
-    for name, fn in registry.QUERIES.items():
-        if name.startswith(_EXECUTES_ON_BUILD) or name in _EXECUTES_ON_BUILD:
-            report[name] = "skipped:executes-on-build"
-            continue
+    for name in sorted(registry.QUERIES):
         try:
-            df = fn(spark, sf_dir)
-            qe = df._jdf.queryExecution()
-            plan = qe.optimizedPlan().toString() + qe.executedPlan().toString()
+            report[name] = audit(name, build_traced(spark, registry.QUERIES[name], sf_dir))
         except Exception as ex:  # noqa: BLE001
             report[name] = f"EXC: {type(ex).__name__}: {ex}"[:300]
-            flagged += 1
-            continue
-        flags = []
-        if "CartesianProduct" in plan:
-            flags.append("cartesian-product")
-        # ArrowEvalPython / MapInPandas / mapInArrow are the blessed
-        # vectorized boundaries; BatchEvalPython is row-at-a-time
-        if "BatchEvalPython" in plan and name not in _PYTHON_ALLOWED:
-            flags.append("row-at-a-time-python")
-        n_glob = _global_window_specs(qe.optimizedPlan().toString())
-        if name not in _GLOBAL_WINDOW_ALLOWED:
-            if n_glob:
-                flags.append(f"global-window:{n_glob}")
-        else:
-            max_n = _GLOBAL_WINDOW_ALLOWED[name][0]
-            if n_glob > max_n:
-                flags.append(
-                    f"global-window-exceeds-whitelist:{n_glob}>{max_n}"
-                )
-        n_exchanges = plan.count("Exchange ")
-        report[name] = {"exchanges": n_exchanges, "flags": flags}
-        if flags:
-            flagged += 1
-    out = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "PLAN_AUDIT.json",
-    )
-    json.dump({"sf_dir": sf_dir, "results": report}, open(out, "w"), indent=1)
-    audited = [k for k, v in report.items() if isinstance(v, dict)]
-    print(f"audited {len(audited)} plans; flagged {flagged}")
-    for k, v in report.items():
-        if isinstance(v, dict) and v["flags"]:
-            print(f"  {k}: {v['flags']}")
-        elif isinstance(v, str) and v.startswith("EXC"):
-            print(f"  {k}: {v}")
+    with open(os.path.join(ROOT, "PLAN_AUDIT.json"), "w") as f:
+        json.dump({"sf_dir": sf_dir, "results": report}, f, indent=1)
+    flagged = {k: v if isinstance(v, str) else v["flags"]
+               for k, v in report.items() if isinstance(v, str) or v["flags"]}
+    print(f"audited {len(report)} queries; flagged {len(flagged)}")
+    for k, v in flagged.items():
+        print(f"  {k}: {v}")
+    spark.stop()
     return 1 if flagged else 0
 
 

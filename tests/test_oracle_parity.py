@@ -7,10 +7,10 @@ Round-14 window split: the FULL 383-query parity run takes ~10 minutes
 and (with the rest of the suite) overflowed the driver's verify window
 in round 13, so it now carries the `slow` marker (run with ``-m slow``;
 the committed PARITY_SWEEP.json is the full-registry record at BOTH gate
-SFs).  The default run keeps a deterministic 1-in-8 sample plus an
-all-queries construction (analysis) pass, which catches registry breaks,
-unresolved columns and plan-construction errors across the whole
-inventory in well under a minute.
+SFs).  The default run keeps a deterministic 1-in-8 sample.  Building
+every query (registry breaks, unresolved columns, plan-construction
+errors, and the plans each build executes) is the one registry sweep in
+tests/test_plan_coverage.py.
 """
 
 from __future__ import annotations
@@ -50,23 +50,6 @@ def test_query_matches_oracle_sampled(spark, name):
 def test_every_query_has_rows(spark):
     for name, fn in registry.QUERIES.items():
         assert fn(spark, SF_SMOKE).count() >= 0, name
-
-
-def test_every_query_constructs(spark):
-    """Analysis sweep of the registry's data queries: building the
-    DataFrame resolves every column reference and analyzes the full
-    plan, so a broken query fails here without a full execution (a few
-    lineage-cut queries materialize their small checkpointed frames --
-    still far cheaper than running them).  Streaming and versioned-table
-    twins are excluded: their *construction* drains a real stream /
-    commits table versions, which is exactly the heavyweight work the
-    `slow` marker exists to fence; the sampled parity test above still
-    executes 1 in 8 of them."""
-    for name, fn in registry.QUERIES.items():
-        if name.startswith(("streaming_", "versioned_")):
-            continue
-        df = fn(spark, SF_SMOKE)
-        assert df.schema is not None and len(df.columns) > 0, name
 
 
 def test_entry_smoke(spark):

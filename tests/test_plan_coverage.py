@@ -1,29 +1,19 @@
-"""Plan-regression coverage map: every registered query sits in exactly
-one of two nets, and the second net is EXECUTED, not asserted by name.
-
-Net (a): the static plan audit (``scripts/plan_audit.py``) builds every
-lazily-constructible query and flags scale antipatterns in its optimized
-+ physical plan.
-
-Net (b): queries that EXECUTE work during DataFrame construction
-(streaming drains, sink roundtrips, versioned-table cycles, eager
-ML/codebook fits) cannot be audited statically.  The round-10 verdict
-found ~15 of them had no by-name plan pin either, so a plan regression
--- say a snapshot diff turning into a cartesian -- would have been
-invisible until the bench moved.  This module closes that gap
-structurally: it derives the SAME skip set the audit uses and runs
-every member end-to-end under Spark's SQL status store, asserting the
-scale invariants on every physical plan the query actually executed
-(including plans born inside ``foreachBatch`` and versioned-table
-merges, which no static audit can see).
-
-Because both nets derive from one predicate (``_EXECUTES_ON_BUILD``),
-the partition is total and disjoint BY CONSTRUCTION; the meta-test
-below re-asserts it against the live registry so a refactor that breaks
-the derivation fails loudly here, not silently in the audit.
+"""One registry sweep: every registered query is built once, and
+``plan_audit.audit`` checks its own plan and every plan its build ran
+(read from the SQL status store, stream micro-batches included): a
+non-empty schema, no non-broadcast ``CartesianProduct``, no
+``BatchEvalPython`` outside the named slow-path twins, no unjustified
+global window.  No name decides how a query is treated: a new query
+is swept the moment it is registered.  The 1-in-8 sample
+``sorted(QUERIES)[::8]`` is also profiled and must match
+QUERY_TRAITS.json (bench's families).
 """
 
 from __future__ import annotations
+
+import json
+import os
+import sys
 
 import pytest
 
@@ -31,81 +21,31 @@ from real_time_financial_lakehouse_spark import registry
 
 from conftest import SF_SMOKE
 
-import os
-import sys
-
 sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
 )
-from plan_audit import _EXECUTES_ON_BUILD  # noqa: E402
+from plan_audit import audit  # noqa: E402
+from query_traits import MODULE_FAMILY, TRAITS_PATH, build_traced  # noqa: E402
+
+NAMES = sorted(registry.QUERIES)
+FAMILY_SAMPLE = set(NAMES[::8])
+FAMILIES = {"streaming", "table_io", "batch", *MODULE_FAMILY.values()}
+
+with open(TRAITS_PATH) as _f:
+    TRAITS = json.load(_f)
 
 
-def _exec_on_build_names() -> list[str]:
-    return sorted(
-        n
-        for n in registry.QUERIES
-        if n.startswith(_EXECUTES_ON_BUILD) or n in _EXECUTES_ON_BUILD
-    )
+def test_every_query_has_a_measured_family():
+    """QUERY_TRAITS.json names exactly the registry, so a query added
+    without re-running scripts/query_traits.py fails here, at once."""
+    assert set(TRAITS) == set(registry.QUERIES)
+    assert set(TRAITS.values()) <= FAMILIES
 
 
-EXEC_ON_BUILD = _exec_on_build_names()
-
-
-def test_every_query_in_exactly_one_plan_net():
-    """The registry partitions exactly into the statically-audited set
-    and the executed-capture set below; a new query that matched
-    neither net (or both) fails here, before any round freeze."""
-    all_names = set(registry.QUERIES)
-    exec_set = set(EXEC_ON_BUILD)
-    audited = {n for n in all_names if n not in exec_set}
-    assert audited | exec_set == all_names
-    assert audited & exec_set == set()
-    # the capture test below parameterizes over EXEC_ON_BUILD verbatim,
-    # so every skip name is pinned by execution -- no third bucket.
-    assert exec_set == {
-        n
-        for n in all_names
-        if n.startswith(_EXECUTES_ON_BUILD) or n in _EXECUTES_ON_BUILD
-    }
-
-
-def _captured_plans(spark, fn) -> list[str]:
-    """Run a query end-to-end and return the physical-plan description
-    of every SQL execution it triggered (outer job, foreachBatch
-    micro-batches, versioned-table merge commits), via the SQL status
-    store that backs the Spark UI."""
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def _ids():
-        lst = store.executionsList()
-        return {lst.apply(i).executionId() for i in range(lst.size())}
-
-    before = _ids()
-    fn(spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
-    # the SQL listener consumes events asynchronously; drain the bus so
-    # the store has seen every execution the run produced
-    try:
-        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    except Exception:  # noqa: BLE001 - signature differs across versions
-        import time
-
-        time.sleep(1.0)
-    lst = store.executionsList()
-    return [
-        lst.apply(i).physicalPlanDescription()
-        for i in range(lst.size())
-        if lst.apply(i).executionId() not in before
-    ]
-
-
-@pytest.mark.parametrize("name", EXEC_ON_BUILD)
+@pytest.mark.parametrize("name", NAMES)
 def test_executed_plans_free_of_scale_antipatterns(spark, name):
-    """Every plan the query ACTUALLY executed is free of the two shapes
-    that never survive 100x scale: a non-broadcast cartesian product and
-    a row-at-a-time Python stage (Arrow-batched pandas stages and
-    stateful FlatMapGroupsInPandas are the blessed boundaries)."""
-    plans = _captured_plans(spark, registry.QUERIES[name])
-    assert plans, f"{name}: no SQL executions captured"
-    for p in plans:
-        assert "CartesianProduct" not in p, f"{name}: cartesian in executed plan"
-        assert "BatchEvalPython" not in p, f"{name}: row-at-a-time Python stage"
+    profile = name in FAMILY_SAMPLE
+    trace = build_traced(spark, registry.QUERIES[name], SF_SMOKE, profile=profile)
+    assert audit(name, trace)["flags"] == [], name
+    if profile:
+        assert trace.family == TRAITS[name], f"{name}: re-run scripts/query_traits.py"
