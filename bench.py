@@ -151,6 +151,18 @@ def warm_up(spark, sf_dir: str) -> None:
     spark.range(10_000).join(F.broadcast(small), F.col("id") == F.col("k")).count()
 
 
+def time_reps(spark, fn, sf_dir: str, reps: int) -> list[float]:
+    """Build ``fn(spark, sf_dir)`` afresh and force it end to end through
+    the ``noop`` writer, ``reps`` times: each run's wall seconds, to the
+    millisecond."""
+    runs = []
+    for _ in range(reps):
+        t0 = time.perf_counter()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        runs.append(round(time.perf_counter() - t0, 3))
+    return runs
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -194,9 +206,7 @@ def main() -> None:
     if sf == 0.1:
         for pin in CANARY_PINS_SF01:
             if pin in registry.QUERIES:
-                registry.QUERIES[pin](spark, sf_dir).write.format(
-                    "noop"
-                ).mode("overwrite").save()
+                time_reps(spark, registry.QUERIES[pin], sf_dir, 1)
     warmup_sec = round(time.perf_counter() - t_warm, 3)
 
     # N runs per query (default 3), report the MEDIAN: the first run pays
@@ -221,11 +231,7 @@ def main() -> None:
             pin_name = canary_names[
                 (qi // CANARY_INTERVAL) % len(canary_names)
             ]
-            t0 = time.perf_counter()
-            registry.QUERIES[pin_name](spark, sf_dir).write.format(
-                "noop"
-            ).mode("overwrite").save()
-            c_sec = round(time.perf_counter() - t0, 3)
+            (c_sec,) = time_reps(spark, registry.QUERIES[pin_name], sf_dir, 1)
             canary_timeline.append(
                 {
                     "at_query": qi,
@@ -234,12 +240,7 @@ def main() -> None:
                     "ratio": round(c_sec / CANARY_PINS_SF01[pin_name], 4),
                 }
             )
-        fn = registry.QUERIES[name]
-        runs: list[float] = []
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(round(time.perf_counter() - t0, 3))
+        runs = time_reps(spark, registry.QUERIES[name], sf_dir, reps)
         rep_times[name] = runs
         timings[name] = round(statistics.median(runs), 3)
         timings_min[name] = min(runs)

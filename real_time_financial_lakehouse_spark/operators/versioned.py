@@ -472,10 +472,9 @@ def changes_stream(
 
 
 def read_changes_feed(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Read everything ``changes_stream`` has emitted so far."""
-    return spark.read.option("basePath", out_dir).parquet(
-        os.path.join(out_dir, "batch=*")
-    ).drop("batch")
+    """Read everything ``changes_stream`` has emitted so far: ``out_dir``
+    itself, whose ``batch=N`` directories partition discovery finds."""
+    return spark.read.parquet(out_dir).drop("batch")
 
 
 def restore_version(table_dir: str, to_version: int) -> int:

@@ -377,35 +377,36 @@ def _shared_event_shards(spark: SparkSession, sf_dir: str, n: int = 4) -> str:
     process changes nothing a query can observe).  Checkpoints and
     output tables stay strictly per-query; only the immutable SOURCE
     directory is shared -- the same sharing discipline the dedup_funnel
-    ladder already uses for its candidate fixture.  Queries that shard
-    a DERIVED frame (doubled streams, documents) keep their own
-    ``_shard_fixture`` call."""
+    ladder already uses for its candidate fixture.  A query that shards
+    another frame (``streaming_label_centroids``'s embeddings) calls
+    ``_shard_fixture`` itself, with its own key."""
     key = (os.path.abspath(sf_dir), n)
     path = _SHARD_CACHE.get(key)
     if path and os.path.isdir(path):
         return path
     src_dir = scratch_dir("rtfl_shared_shards_")
-    _shard_fixture(_catalog_load(spark, sf_dir), src_dir, n)
+    _shard_fixture(_catalog_load(spark, sf_dir), "event_id", src_dir, n)
     _SHARD_CACHE[key] = src_dir
     return src_dir
 
 
-def _shard_fixture(events: DataFrame, src_dir: str, n: int = 4) -> None:
-    """Re-shard the batch fixture into ``n`` deterministic parquet parts
+def _shard_fixture(frame: DataFrame, key: str, src_dir: str, n: int = 4) -> None:
+    """Re-shard a batch fixture into ``n`` deterministic parquet parts
     so ``maxFilesPerTrigger=1`` drains it as n micro-batches.
 
-    The shard key is the repo's md5 split discipline (``md5(event_id) %
-    n`` -- row-local, shuffle-free, reproducible), NOT a global-window
+    The shard key is the repo's md5 split discipline (``md5(key) % n``
+    -- row-local, shuffle-free, reproducible), NOT a global-window
     ``ntile``: every consumer of these shards folds a COMMUTATIVE
     per-key aggregate (CMS cell sums, gold merge sums, dollar-volume
-    partials), so batch composition cannot affect the drained result,
-    and an empty-partition-spec WindowExec here would single-partition
-    the fixture write for no semantic gain (the exact anti-pattern
-    scripts/plan_audit.py flags in query plans)."""
+    partials, grid-snapped centroid sums), so batch composition cannot
+    affect the drained result, and an empty-partition-spec WindowExec
+    here would single-partition the fixture write for no semantic gain
+    (the exact anti-pattern scripts/plan_audit.py flags in query
+    plans)."""
     from ..functions.hashing import md5_long
 
-    events.withColumn(
-        "part", md5_long(F.col("event_id").cast("string")) % n
+    frame.withColumn(
+        "part", md5_long(F.col(key).cast("string")) % n
     ).write.partitionBy("part").mode("overwrite").parquet(src_dir)
 
 def streaming_user_cms(
@@ -999,18 +1000,12 @@ def streaming_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch contributes ONE partial-aggregated groupBy at state
     cardinality (the same distributed shape as the batch twin's
     centroid stage, which is itself fit_codebook's KMeans M-step)."""
-    from ..functions.hashing import md5_long
     from ..functions.numeric import qround
     from ..operators.similarity import _as_double
 
     src_dir = scratch_dir("rtfl_scent_src_")
-
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    # Own shard fixture (derived frame, not the shared events copy):
-    # md5(vec_id) % 4 -- row-local, shuffle-free, reproducible.
-    emb.withColumn(
-        "part", md5_long(F.col("vec_id").cast("string")) % 4
-    ).write.partitionBy("part").mode("overwrite").parquet(src_dir)
+    _shard_fixture(emb, "vec_id", src_dir)
 
     def _partial(df: DataFrame) -> DataFrame:
         dims = df.select(

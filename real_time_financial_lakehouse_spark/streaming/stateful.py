@@ -1,81 +1,103 @@
-"""Custom stateful streaming operator: per-symbol exponential moving
-average (EMA) via ``applyInPandasWithState``.
+"""Per-key stateful streaming operators and the other streaming twins.
 
-The reference's only streaming state is Spark's built-in windowed
-aggregation (process_silver.py:50-57).  A real indicator pipeline also
-needs *recursive* per-key state that no built-in aggregate expresses:
-``EMA_t = alpha * x_t + (1 - alpha) * EMA_{t-1}``.  This is the canonical
-applyInPandasWithState shape:
+One harness, ``keyed_fold``, owns the per-symbol ``GroupState`` fold
+that the EMA, CUSUM, Kalman, VPIN and running-stats twins share.  The
+reference's only streaming state is Spark's built-in windowed
+aggregation (process_silver.py:50-57); a real indicator pipeline also
+needs *recursive* per-key state that no built-in aggregate expresses,
+e.g. ``EMA_t = alpha * x_t + (1 - alpha) * EMA_{t-1}``.  The harness is
+the canonical ``applyInPandasWithState`` shape:
 
-* state per symbol = (ema, n) -- O(1), unbounded stream friendly (compare
-  the batch twin, which must materialize each symbol's full series);
-* each micro-batch's rows arrive as Arrow-backed pandas frames, get
-  sorted by event time, and fold into the carried state;
-* update-mode emission: one refreshed (symbol, n_events, ema) row per
-  batch.
+* state per symbol is a fixed tuple of scalars -- O(1), unbounded-stream
+  friendly (compare the batch twins, which materialize each symbol's
+  full series);
+* each micro-batch's rows for a symbol arrive as Arrow-backed pandas
+  chunks, are gathered, sorted by ``(ts, event_id)`` and folded into the
+  carried state by the twin's ``step``;
+* update-mode emission: at most one refreshed row per symbol per batch.
 
-The fold is plain float64 arithmetic in every engine (CPython, JVM,
-DuckDB all fold the same IEEE doubles in the same order), so the
-streaming result, the batch twin (operators-level ``ema_per_symbol``),
-and the DuckDB ``list_reduce`` oracle agree bit-for-bit.
+Each ``step`` is plain float64 arithmetic in the same order as its batch
+twin and DuckDB oracle (CPython, JVM and DuckDB fold the same IEEE
+doubles in the same order), so the EMA, CUSUM and Kalman streams agree
+with them bit-for-bit.
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions.numeric import qround
 from ..scratch import scratch_dir
 from . import drain, drain_latest
 from .silver import events_stream
 
+def keyed_fold(
+    events: DataFrame,
+    step: Callable[[tuple, pd.DataFrame], tuple[tuple, tuple | None]],
+    init: tuple,
+    output_schema: str,
+    state_schema: str,
+) -> DataFrame:
+    """groupBy(event_type) -> one ``GroupState`` fold per symbol, in
+    update mode with no timeout.
+
+    Per call the harness reads the symbol's state (``init`` on its first
+    batch), gathers the group's Arrow chunks and sorts them by
+    ``(ts, event_id)`` -- applyInPandasWithState gives no order ACROSS the
+    chunks of one group, and every fold here is order-sensitive -- then
+    runs ``step(state, pdf) -> (state, row)``, stores the new state, and
+    emits ``row`` (the output columns after the key, in schema order) as
+    one row with the symbol first.  ``row`` None emits nothing; the state
+    is stored either way."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    columns = StructType.fromDDL(output_schema).fieldNames()
+
+    def fold(
+        key: tuple[str], pdf_iter: Iterator[pd.DataFrame], state: Any
+    ) -> Iterator[pd.DataFrame]:
+        pdf = pd.concat(list(pdf_iter), ignore_index=True).sort_values(["ts", "event_id"])
+        new_state, row = step(state.get if state.exists else init, pdf)
+        state.update(new_state)
+        if row is not None:
+            yield pd.DataFrame([(key[0], *row)], columns=columns)
+
+    return events.groupBy(F.col("event_type")).applyInPandasWithState(
+        fold,
+        outputStructType=output_schema,
+        stateStructType=state_schema,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
 EMA_ALPHA = 0.1
 
 OUTPUT_SCHEMA = "symbol string, n_events bigint, ema_raw double"
 STATE_SCHEMA = "ema double, n bigint"
 
-def _ema_update(
-    key: tuple[str],
-    pdf_iter: Iterator[pd.DataFrame],
-    state: Any,
-    alpha: float = EMA_ALPHA,
-) -> Iterator[pd.DataFrame]:
-    """GroupState fold: carry (ema, n) across micro-batches."""
-    ema, n = state.get if state.exists else (None, 0)
-    # The EMA fold is order-sensitive and applyInPandasWithState gives no
-    # (ts, event_id) ordering ACROSS Arrow chunks of one group: gather the
-    # group's whole micro-batch (state spans it anyway) and sort once.
-    chunks = [pdf for pdf in pdf_iter if len(pdf)]
-    if chunks:
-        pdf = pd.concat(chunks, ignore_index=True).sort_values(["ts", "event_id"])
-        for x in pdf["value"]:
-            ema = float(x) if ema is None else alpha * float(x) + (1.0 - alpha) * ema
-            n += 1
-    state.update((ema, n))
-    yield pd.DataFrame([{"symbol": key[0], "n_events": n, "ema_raw": ema}])
+
+def _ema_step(state: tuple, pdf: pd.DataFrame) -> tuple[tuple, tuple]:
+    """Carry (ema, n); the first value seeds the average."""
+    ema, n = state
+    for x in pdf["value"]:
+        ema = float(x) if ema is None else EMA_ALPHA * float(x) + (1.0 - EMA_ALPHA) * ema
+        n += 1
+    return (ema, n), (n, ema)
+
 
 def ema_stream(events: DataFrame) -> DataFrame:
-    """The stateful streaming plan: groupBy(symbol) -> custom GroupState
-    fold.  Works on any streaming DataFrame with (ts, event_id,
-    event_type, value)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return (
-        events.groupBy(F.col("event_type"))
-        .applyInPandasWithState(
-            _ema_update,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    """The stateful streaming EMA: groupBy(symbol) -> ``keyed_fold``.
+    Works on any streaming DataFrame with (ts, event_id, event_type,
+    value)."""
+    return keyed_fold(events, _ema_step, (None, 0), OUTPUT_SCHEMA, STATE_SCHEMA)
 
 def streaming_ema_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the stateful EMA over the events fixture as a genuine stream
@@ -239,140 +261,47 @@ def streaming_click_purchase_outer(spark: SparkSession, sf_dir: str) -> DataFram
         .orderBy("user_id")
     )
 
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas (Spark 4 arbitrary-state API)
-# ---------------------------------------------------------------------------
 
-TWS_OUTPUT_SCHEMA = (
+STATS_OUTPUT_SCHEMA = (
     "symbol string, n_events bigint, total_value double, min_value double, max_value double"
 )
-TWS_STATE_SCHEMA = "n bigint, s double, mn double, mx double"
+STATS_STATE_SCHEMA = "n bigint, s double, mn double, mx double"
 
-def has_transform_with_state_support() -> bool:
-    """The transformWithState state protocol speaks protobuf between the
-    JVM and the Python driver worker; without ``google.protobuf`` the
-    driver worker crashes at schema negotiation.  The sandbox image lacks
-    protobuf (and pip installs are off), so the operator degrades to the
-    legacy applyInPandasWithState fold with identical semantics."""
-    try:
-        import google.protobuf  # noqa: F401
 
-        return True
-    except ImportError:
-        return False
+def _stats_step(state: tuple, pdf: pd.DataFrame) -> tuple[tuple, tuple]:
+    """Running (count, sum, min, max).  The non-null values fold left in
+    event order, so any micro-batch split yields the same doubles."""
+    n, s, mn, mx = state
+    n += len(pdf)
+    for x in pdf["value"].dropna():
+        x = float(x)
+        s += x
+        mn = x if mn is None else min(mn, x)
+        mx = x if mx is None else max(mx, x)
+    return (n, s, mn, mx), (n, s, mn, mx)
 
-def _make_symbol_stats_processor():
-    """Factory so the StatefulProcessor subclass is only constructed when
-    the operator runs (keeps module import side-effect free for UDF
-    workers that re-import this module)."""
-    import pandas as pd  # local: the worker deserializes the class
 
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class _SymbolStats(StatefulProcessor):
-        """Per-symbol running (count, sum, min, max) in a ValueState --
-        the canonical shape of the NEW arbitrary-state API
-        (transformWithStateInPandas), which supersedes
-        applyInPandasWithState with typed state handles (value/list/map),
-        timers, and TTL.  The EMA operator keeps the legacy API covered;
-        this one pins the forward path."""
-
-        def init(self, handle):
-            self._state = handle.getValueState("stats", TWS_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            got = self._state.get()
-            n, s, mn, mx = got if got is not None else (0, 0.0, None, None)
-            for pdf in rows:
-                if len(pdf) == 0:
-                    continue
-                n += len(pdf)
-                s += float(pdf["value"].sum())
-                bmn = float(pdf["value"].min())
-                bmx = float(pdf["value"].max())
-                mn = bmn if mn is None else min(mn, bmn)
-                mx = bmx if mx is None else max(mx, bmx)
-            self._state.update((n, s, mn, mx))
-            yield pd.DataFrame(
-                [
-                    {
-                        "symbol": key[0],
-                        "n_events": n,
-                        "total_value": s,
-                        "min_value": mn,
-                        "max_value": mx,
-                    }
-                ]
-            )
-
-        def close(self):
-            pass
-
-    return _SymbolStats()
-
-def _stats_fold_legacy(key, pdf_iter, state):
-    """applyInPandasWithState twin of _SymbolStats -- same fold, same
-    emissions, used when the environment can't run the new API (see
-    has_transform_with_state_support)."""
-    n, s, mn, mx = state.get if state.exists else (0, 0.0, None, None)
-    for pdf in pdf_iter:
-        if len(pdf) == 0:
-            continue
-        n += len(pdf)
-        s += float(pdf["value"].sum())
-        bmn = float(pdf["value"].min())
-        bmx = float(pdf["value"].max())
-        mn = bmn if mn is None else min(mn, bmn)
-        mx = bmx if mx is None else max(mx, bmx)
-    state.update((n, s, mn, mx))
-    yield pd.DataFrame(
-        [{"symbol": key[0], "n_events": n, "total_value": s, "min_value": mn, "max_value": mx}]
+def stats_stream(events: DataFrame) -> DataFrame:
+    """Per-symbol running stats plan: ``keyed_fold`` over the values."""
+    return keyed_fold(
+        events.select("ts", "event_id", "event_type", "value"),
+        _stats_step,
+        (0, 0.0, None, None),
+        STATS_OUTPUT_SCHEMA,
+        STATS_STATE_SCHEMA,
     )
 
+
 def streaming_symbol_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Running per-symbol stats via ``transformWithStateInPandas`` -- the
-    Spark 4 arbitrary-state operator -- driven as a real stream
-    (availableNow) with update emissions appended per batch via
+    """Running per-symbol stats through ``keyed_fold``, driven as a real
+    stream (availableNow) with update emissions appended per batch via
     foreachBatch; returns the latest row per symbol, oracle-comparable to
     the batch groupBy.
 
-    Scale: state is O(1) per key (four scalars in a ValueState), keyed
-    shuffle on symbol, RocksDB-spillable on a real cluster; emission per
-    (batch, key) only.  The typed-state API also gives timers + TTL,
-    which is what a production feature pipeline needs for inactivity
-    flushes (handleExpiredTimer) -- not exercised here because the
-    fixture drain is a single batch."""
-
-    def build(ss: SparkSession) -> DataFrame:
-        ev = events_stream(ss, sf_dir).select(F.col("event_type"), F.col("value"))
-        if has_transform_with_state_support():
-            # the new-state-API operator requires the RocksDB state store
-            # (the HDFS-backed default doesn't implement the typed-state
-            # column families it uses); scoped to the child session
-            ss.conf.set(
-                "spark.sql.streaming.stateStore.providerClass",
-                "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-            )
-            return ev.groupBy("event_type").transformWithStateInPandas(
-                _make_symbol_stats_processor(),
-                outputStructType=TWS_OUTPUT_SCHEMA,
-                outputMode="Update",
-                timeMode="None",
-            )
-        else:
-            # identical fold through the legacy arbitrary-state API
-            from pyspark.sql.streaming.state import GroupStateTimeout
-
-        return ev.groupBy("event_type").applyInPandasWithState(
-            _stats_fold_legacy,
-            outputStructType=TWS_OUTPUT_SCHEMA,
-            stateStructType=TWS_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-
+    Scale: state is O(1) per key (four scalars), keyed shuffle on
+    symbol; emission per (batch, key) only."""
     return (
-        drain_latest(spark, build)
+        drain_latest(spark, lambda ss: stats_stream(events_stream(ss, sf_dir)))
         .select(
             "symbol",
             "n_events",
@@ -599,65 +528,37 @@ CUSUM_STATE_SCHEMA = (
 )
 
 
-def _cusum_update(
-    key: tuple[str],
-    pdf_iter: Iterator[pd.DataFrame],
-    state: Any,
-) -> Iterator[pd.DataFrame]:
-    """GroupState fold for the two-sided CUSUM.  The recursive statistic
-    s_t = max(0, s_{t-1} + y_t) is carried through the PREFIX-SUM
-    identity s_t = S_t - min(0, min_j S_j): state is (S, minS) per side
-    -- O(1), and the identical IEEE sequence as the oracle's window
-    formulation (a recursive max(0, .) fold would round differently)."""
-    if state.exists:
-        sp_sum, sp_min, sn_sum, sn_min, n, ap, an = state.get
-    else:
-        sp_sum = sp_min = sn_sum = sn_min = 0.0
-        n, ap, an = 0, 0, 0
-    # The prefix-sum fold is order-sensitive and applyInPandasWithState
-    # gives no (ts, event_id) ordering ACROSS Arrow chunks of one group:
-    # gather the group's whole micro-batch (state spans it anyway) and
-    # sort once on the full sequence.
-    chunks = [pdf for pdf in pdf_iter if len(pdf)]
-    if chunks:
-        pdf = pd.concat(chunks, ignore_index=True).sort_values(["ts", "event_id"])
-        for x in pdf["value"]:
-            x = float(x)
-            sp_sum += x - CUSUM_MU - CUSUM_SLACK
-            sp_min = min(sp_min, sp_sum)
-            sn_sum += CUSUM_MU - x - CUSUM_SLACK
-            sn_min = min(sn_min, sn_sum)
-            n += 1
-            sp = sp_sum - min(0.0, sp_min)
-            sn = sn_sum - min(0.0, sn_min)
-            if math.floor(sp * 1e6 + 0.5) / 1e6 > CUSUM_H:
-                ap += 1
-            if math.floor(sn * 1e6 + 0.5) / 1e6 > CUSUM_H:
-                an += 1
-    state.update((sp_sum, sp_min, sn_sum, sn_min, n, ap, an))
-    yield pd.DataFrame(
-        [
-            {
-                "symbol": key[0],
-                "n_events": n,
-                "sp_raw": sp_sum - min(0.0, sp_min),
-                "sn_raw": sn_sum - min(0.0, sn_min),
-                "n_alarms_pos": ap,
-                "n_alarms_neg": an,
-            }
-        ]
-    )
+def _cusum_step(state: tuple, pdf: pd.DataFrame) -> tuple[tuple, tuple]:
+    """Two-sided CUSUM.  The recursive statistic s_t = max(0, s_{t-1} +
+    y_t) is carried through the PREFIX-SUM identity s_t = S_t - min(0,
+    min_j S_j): state is (S, minS) per side -- O(1), and the identical
+    IEEE sequence as the oracle's window formulation (a recursive
+    max(0, .) fold would round differently)."""
+    sp_sum, sp_min, sn_sum, sn_min, n, ap, an = state
+    for x in pdf["value"]:
+        x = float(x)
+        sp_sum += x - CUSUM_MU - CUSUM_SLACK
+        sp_min = min(sp_min, sp_sum)
+        sn_sum += CUSUM_MU - x - CUSUM_SLACK
+        sn_min = min(sn_min, sn_sum)
+        n += 1
+        sp = sp_sum - min(0.0, sp_min)
+        sn = sn_sum - min(0.0, sn_min)
+        if math.floor(sp * 1e6 + 0.5) / 1e6 > CUSUM_H:
+            ap += 1
+        if math.floor(sn * 1e6 + 0.5) / 1e6 > CUSUM_H:
+            an += 1
+    row = (n, sp_sum - min(0.0, sp_min), sn_sum - min(0.0, sn_min), ap, an)
+    return (sp_sum, sp_min, sn_sum, sn_min, n, ap, an), row
 
 
 def cusum_stream(events: DataFrame) -> DataFrame:
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return events.groupBy(F.col("event_type")).applyInPandasWithState(
-        _cusum_update,
-        outputStructType=CUSUM_OUTPUT_SCHEMA,
-        stateStructType=CUSUM_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        events,
+        _cusum_step,
+        (0.0, 0.0, 0.0, 0.0, 0, 0, 0),
+        CUSUM_OUTPUT_SCHEMA,
+        CUSUM_STATE_SCHEMA,
     )
 
 
@@ -712,76 +613,50 @@ def _kalman_fold(x, p, k, z):
     return x, p, k
 
 
-def _kalman_update(
-    key: tuple[str],
-    pdf_iter: "Iterator[pd.DataFrame]",
-    state: Any,
-) -> "Iterator[pd.DataFrame]":
-    """GroupState fold over DAILY CLOSES with correct event-time bar
-    semantics under ANY micro-batch split: a day is folded into the
-    committed state only once a LATER day appears (its close is then
-    final); the newest day rides the state as a PENDING (day, close)
-    pair and is folded PROVISIONALLY at emission time only.  If the next
-    batch extends the same day, the provisional fold is simply
-    recomputed from the committed state -- nothing to retract."""
-    if state.exists:
-        x, p, k, n, pend_day, pend_close = state.get
-    else:
-        x, p, k, n, pend_day, pend_close = None, 1.0, 0.0, 0, None, None
-    chunks = [pdf for pdf in pdf_iter if len(pdf)]
-    if chunks:
-        pdf = pd.concat(chunks, ignore_index=True).sort_values(["ts", "event_id"])
-        days = pdf["ts"].dt.floor("D")
-        for day_val, grp in pdf.groupby(days, sort=True):
-            day_key = int(day_val.value)  # epoch ns of the day bucket
-            close = float(grp["value"].iloc[-1])
-            if pend_day is None:
-                pend_day, pend_close = day_key, close
-            elif day_key == pend_day:
-                pend_close = close  # same bar, fresher close
-            else:
-                # a later day arrived: the pending bar is final -- commit
-                x, p, k = _kalman_fold(x, p, k, pend_close)
-                n += 1
-                pend_day, pend_close = day_key, close
-    state.update((x, p, k, n, pend_day, pend_close))
-    if pend_day is None:
-        return iter(())
+def _kalman_step(state: tuple, pdf: pd.DataFrame) -> tuple[tuple, tuple | None]:
+    """Fold over DAILY CLOSES with correct event-time bar semantics under
+    ANY micro-batch split: a day is folded into the committed state only
+    once a LATER day appears (its close is then final); the newest day
+    rides the state as a PENDING (day, close) pair and is folded
+    PROVISIONALLY at emission time only.  If the next batch extends the
+    same day, the provisional fold is simply recomputed from the
+    committed state -- nothing to retract."""
+    x, p, k, n, pend_day, pend_close = state
+    for day_val, grp in pdf.groupby(pdf["ts"].dt.floor("D"), sort=True):
+        day_key = int(day_val.value)  # epoch ns of the day bucket
+        close = float(grp["value"].iloc[-1])
+        if pend_day is None:
+            pend_day, pend_close = day_key, close
+        elif day_key == pend_day:
+            pend_close = close  # same bar, fresher close
+        else:
+            # a later day arrived: the pending bar is final -- commit
+            x, p, k = _kalman_fold(x, p, k, pend_close)
+            n += 1
+            pend_day, pend_close = day_key, close
+    state = (x, p, k, n, pend_day, pend_close)
     # Suppress single-day emissions: the batch twin and the shared
     # recursive-CTE oracle both filter to count(*) >= 2 days, so a
     # symbol whose stream has produced only one trading day so far must
     # not surface a seeded provisional row (it would hash-fail parity).
-    if n + 1 < 2:
-        return iter(())
+    if pend_day is None or n + 1 < 2:
+        return state, None
     # provisional fold of the still-open day (NOT stored)
     xe, pe, ke = _kalman_fold(x, p, k, pend_close)
-    yield pd.DataFrame(
-        [
-            {
-                "symbol": key[0],
-                "n_days": n + 1,
-                "last_close": pend_close,
-                "x_raw": xe,
-                "p_raw": pe,
-                "k_raw": ke,
-            }
-        ]
-    )
+    return state, (n + 1, pend_close, xe, pe, ke)
 
 
 def kalman_stream(events: DataFrame) -> DataFrame:
-    """Per-symbol streaming Kalman plan: groupBy(symbol) -> GroupState
-    fold over finalized daily closes.  State is O(1) per symbol
-    regardless of stream length -- the unbounded-scale path the batch
-    twin (full-array fold) is not."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return events.groupBy(F.col("event_type")).applyInPandasWithState(
-        _kalman_update,
-        outputStructType=KALMAN_OUTPUT_SCHEMA,
-        stateStructType=KALMAN_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    """Per-symbol streaming Kalman plan: ``keyed_fold`` over finalized
+    daily closes.  State is O(1) per symbol regardless of stream length
+    -- the unbounded-scale path the batch twin (full-array fold) is
+    not."""
+    return keyed_fold(
+        events,
+        _kalman_step,
+        (None, 1.0, 0.0, 0, None, None),
+        KALMAN_OUTPUT_SCHEMA,
+        KALMAN_STATE_SCHEMA,
     )
 
 
@@ -822,66 +697,53 @@ VPIN_STATE_SCHEMA = (
 )
 
 
-def _vpin_update(
-    key: tuple[str],
-    pdf_iter: "Iterator[pd.DataFrame]",
-    state: Any,
-) -> "Iterator[pd.DataFrame]":
-    """GroupState VPIN: ticks sign by the carried tick rule, volume
-    accumulates into floor(cum/V) buckets; a bucket's |b-s|/v folds into
-    the summary the moment the running quantity crosses its boundary.
-    State is O(1) per symbol no matter how long the stream runs -- the
-    batch twin's groupBy over all buckets is the bounded-backfill path.
-    The trailing OPEN bucket is folded provisionally at emission and
-    recomputed if the next batch extends it (the kalman pending-bar
-    discipline)."""
-    if state.exists:
-        (n_closed, sum_imb, max_imb, closed_qty,
-         open_b, open_s, open_v, last_px, last_sgn, cum_qty) = state.get
-    else:
-        n_closed, sum_imb, max_imb, closed_qty = 0, 0.0, 0.0, 0.0
-        open_b, open_s, open_v = 0.0, 0.0, 0.0
-        last_px, last_sgn, cum_qty = None, None, 0.0
-    chunks = [pdf for pdf in pdf_iter if len(pdf)]
-    if chunks:
-        pdf = pd.concat(chunks, ignore_index=True).sort_values(["ts", "event_id"])
-        open_id = int(cum_qty // VPIN_BUCKET_QTY) if cum_qty > 0 else 0
-        for px, q in zip(pdf["value"], pdf["qty"]):
-            px, q = float(px), float(q)
-            # A tick missing props.$.k arrives as NaN; the batch twin
-            # and the DuckDB oracle both SKIP NULL qty in their sums, so
-            # treat it as zero quantity (the price still advances the
-            # tick-rule sign carry, exactly as in the batch lag).
-            if not math.isfinite(q):
-                q = 0.0
-            if last_px is not None:
-                if px > last_px:
-                    last_sgn = 1.0
-                elif px < last_px:
-                    last_sgn = -1.0
-            last_px = px
-            cum_qty += q
-            bucket_id = int(cum_qty // VPIN_BUCKET_QTY)
-            if bucket_id != open_id:
-                # the tick that crosses the boundary belongs to the NEW
-                # bucket (batch twin: bucket = floor(cum including self))
-                if open_v > 0:
-                    imb = abs(open_b - open_s) / open_v
-                    n_closed += 1
-                    sum_imb += imb
-                    max_imb = max(max_imb, imb)
-                closed_qty += open_v
-                open_b, open_s, open_v = 0.0, 0.0, 0.0
-                open_id = bucket_id
-            open_v += q
-            if last_sgn == 1.0:
-                open_b += q
-            elif last_sgn == -1.0:
-                open_s += q
-    state.update((n_closed, sum_imb, max_imb, closed_qty,
-                  open_b, open_s, open_v, last_px, last_sgn, cum_qty))
+def _vpin_step(state: tuple, pdf: pd.DataFrame) -> tuple[tuple, tuple | None]:
+    """VPIN: ticks sign by the carried tick rule, volume accumulates into
+    floor(cum/V) buckets; a bucket's |b-s|/v folds into the summary the
+    moment the running quantity crosses its boundary.  State is O(1) per
+    symbol no matter how long the stream runs -- the batch twin's
+    groupBy over all buckets is the bounded-backfill path.  The trailing
+    OPEN bucket is folded provisionally at emission and recomputed if
+    the next batch extends it (the kalman pending-bar discipline)."""
+    (n_closed, sum_imb, max_imb, closed_qty,
+     open_b, open_s, open_v, last_px, last_sgn, cum_qty) = state
+    open_id = int(cum_qty // VPIN_BUCKET_QTY) if cum_qty > 0 else 0
+    for px, q in zip(pdf["value"], pdf["qty"]):
+        px, q = float(px), float(q)
+        # A tick missing props.$.k arrives as NaN; the batch twin
+        # and the DuckDB oracle both SKIP NULL qty in their sums, so
+        # treat it as zero quantity (the price still advances the
+        # tick-rule sign carry, exactly as in the batch lag).
+        if not math.isfinite(q):
+            q = 0.0
+        if last_px is not None:
+            if px > last_px:
+                last_sgn = 1.0
+            elif px < last_px:
+                last_sgn = -1.0
+        last_px = px
+        cum_qty += q
+        bucket_id = int(cum_qty // VPIN_BUCKET_QTY)
+        if bucket_id != open_id:
+            # the tick that crosses the boundary belongs to the NEW
+            # bucket (batch twin: bucket = floor(cum including self))
+            if open_v > 0:
+                imb = abs(open_b - open_s) / open_v
+                n_closed += 1
+                sum_imb += imb
+                max_imb = max(max_imb, imb)
+            closed_qty += open_v
+            open_b, open_s, open_v = 0.0, 0.0, 0.0
+            open_id = bucket_id
+        open_v += q
+        if last_sgn == 1.0:
+            open_b += q
+        elif last_sgn == -1.0:
+            open_s += q
+    state = (n_closed, sum_imb, max_imb, closed_qty,
+             open_b, open_s, open_v, last_px, last_sgn, cum_qty)
     if cum_qty == 0.0 and last_px is None:
-        return iter(())
+        return state, None
     # provisional close of the open bucket (NOT stored)
     n, s_i, m_i = n_closed, sum_imb, max_imb
     if open_v > 0:
@@ -889,24 +751,12 @@ def _vpin_update(
         n += 1
         s_i += imb
         m_i = max(m_i, imb)
-    yield pd.DataFrame(
-        [
-            {
-                "symbol": key[0],
-                "n_buckets": n,
-                "vpin_raw": (s_i / n) if n else None,
-                "max_imb_raw": m_i if n else None,
-                "total_qty_raw": closed_qty + open_v,
-            }
-        ]
-    )
+    return state, (n, (s_i / n) if n else None, m_i if n else None, closed_qty + open_v)
 
 
 def vpin_stream(events: DataFrame) -> DataFrame:
-    """Per-symbol streaming VPIN plan: groupBy(symbol) -> GroupState
-    bucket fold over tick-rule-signed volume."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
+    """Per-symbol streaming VPIN plan: ``keyed_fold`` bucket fold over
+    tick-rule-signed volume."""
     prepped = events.select(
         "ts",
         "event_id",
@@ -914,12 +764,12 @@ def vpin_stream(events: DataFrame) -> DataFrame:
         "value",
         F.get_json_object(F.col("props"), "$.k").cast("double").alias("qty"),
     )
-    return prepped.groupBy(F.col("event_type")).applyInPandasWithState(
-        _vpin_update,
-        outputStructType=VPIN_OUTPUT_SCHEMA,
-        stateStructType=VPIN_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        prepped,
+        _vpin_step,
+        (0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, None, None, 0.0),
+        VPIN_OUTPUT_SCHEMA,
+        VPIN_STATE_SCHEMA,
     )
 
 

@@ -31,7 +31,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -128,19 +127,15 @@ def main() -> int:
     from real_time_financial_lakehouse_spark import registry
     from real_time_financial_lakehouse_spark.session import get_spark
 
+    from bench import time_reps
+
     spark = get_spark(app_name="rtfl-bench-scaling")
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
 
     times: dict[str, dict[str, float]] = {name: {} for name in names}
     for sf_dir, sf_key in zip(SF_DIRS, SF_KEYS):
         for name in names:
-            fn = registry.QUERIES[name]
-            runs = []
-            for _ in range(reps):
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                runs.append(time.perf_counter() - t0)
-            times[name][sf_key] = round(min(runs), 3)
+            times[name][sf_key] = min(time_reps(spark, registry.QUERIES[name], sf_dir, reps))
             print(f"{sf_key} {name}: {times[name][sf_key]}s", flush=True)
 
     report = {}

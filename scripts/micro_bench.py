@@ -19,7 +19,6 @@ import json
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -38,7 +37,7 @@ def main() -> int:
     from real_time_financial_lakehouse_spark import registry
     from real_time_financial_lakehouse_spark.session import get_spark
 
-    from bench import warm_up
+    from bench import time_reps, warm_up
 
     spark = get_spark(app_name="micro-bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -49,11 +48,7 @@ def main() -> int:
     for name in args.names:
         fn = registry.QUERIES[name]
         spark.sparkContext.setJobDescription(f"micro-bench: {name}")
-        runs = []
-        for _ in range(args.reps):
-            t0 = time.perf_counter()
-            fn(spark, args.sf).write.format("noop").mode("overwrite").save()
-            runs.append(round(time.perf_counter() - t0, 3))
+        runs = time_reps(spark, fn, args.sf, args.reps)
         out[name] = {
             "median": round(statistics.median(runs), 3),
             "min": min(runs),

@@ -6,6 +6,7 @@ check can't express."""
 from __future__ import annotations
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from real_time_financial_lakehouse_spark.catalog import load_table
@@ -204,7 +205,7 @@ def test_sorted_export_files_are_range_disjoint_and_internally_sorted(spark):
 
 
 # ---------------------------------------------------------------------------
-# transformWithStateInPandas (new arbitrary-state API, env-gated)
+# running per-symbol stats (streaming.stateful.keyed_fold)
 # ---------------------------------------------------------------------------
 
 def test_streaming_symbol_stats_matches_batch_agg(spark):
@@ -231,22 +232,6 @@ def test_streaming_symbol_stats_matches_batch_agg(spark):
         assert out[sym]["total_value"] == pytest.approx(ref[sym]["s"], abs=1e-5)
         assert out[sym]["min_value"] == ref[sym]["mn"]
         assert out[sym]["max_value"] == ref[sym]["mx"]
-
-
-def test_transform_with_state_gate_reports_env():
-    """The new-state API needs google.protobuf for its state protocol;
-    this sandbox lacks it, so the operator must take the legacy fold.  If
-    protobuf ever appears, the gate flips and the new API is exercised."""
-    from real_time_financial_lakehouse_spark.streaming.stateful import (
-        has_transform_with_state_support,
-    )
-
-    try:
-        import google.protobuf  # noqa: F401
-
-        assert has_transform_with_state_support()
-    except ImportError:
-        assert not has_transform_with_state_support()
 
 
 # ---------------------------------------------------------------------------
@@ -702,6 +687,8 @@ def test_changes_stream_is_exactly_once_across_restarts(spark, tmp_path):
     def df(rows):
         return spark.createDataFrame(rows, "k long, v string")
 
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        versioned.read_changes_feed(spark, out)  # nothing emitted yet
     versioned.commit_version(df([(1, "a"), (2, "b")]), table)          # v0
     versioned.commit_version(df([(1, "a"), (2, "B"), (3, "c")]), table)  # v1
     versioned.changes_stream(spark, table, ["k"], out, ckpt)

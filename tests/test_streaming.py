@@ -212,6 +212,63 @@ def test_silver_stream_state_is_sized_to_its_input(spark, tmp_path):
     assert _recorded_partitions(ckpt) == "1"
     assert [d for d in os.listdir(os.path.join(ckpt, "state", "0")) if d.isdigit()] == ["0"]
 
+KEYED_FOLDS = ["ema_stream", "cusum_stream", "kalman_stream", "vpin_stream", "stats_stream"]
+
+
+@pytest.mark.parametrize("fold", KEYED_FOLDS)
+def test_keyed_fold_restart_matches_one_shot(spark, tmp_path, fold):
+    """Drain the first half (by event time) of the sf0.001 events, stop,
+    add the second half and drain again on the same checkpoint: the latest
+    row per symbol equals a one-shot drain of both halves, so each fold's
+    stored state carries everything the next batch needs."""
+    from pyspark.sql import Window
+
+    from real_time_financial_lakehouse_spark.catalog import load_table
+    from real_time_financial_lakehouse_spark.streaming import stateful
+
+    events = load_table(spark, SF_SMOKE, "events")
+    halves = events.withColumn("half", F.ntile(2).over(Window.orderBy("ts", "event_id")))
+    src = tmp_path / "src"
+
+    def add_half(half: int, mtime: int) -> None:
+        sub = src / f"h{half}"
+        halves.filter(F.col("half") == half).drop("half").coalesce(1).write.parquet(str(sub))
+        for f in sub.glob("*.parquet"):
+            os.utime(f, (mtime, mtime))
+
+    def drain_into(rows: list, ckpt: str) -> None:
+        stream = streaming.pinned_state_partitions(
+            spark,
+            lambda ss: getattr(stateful, fold)(
+                ss.readStream.schema(events.schema).parquet(str(src / "*"))
+            ),
+            available_now=True,
+        )
+        (
+            stream.writeStream.foreachBatch(
+                lambda b, i: rows.extend((i, r.asDict()) for r in b.collect())
+            )
+            .outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+
+    def latest(rows: list) -> dict:
+        return {r["symbol"]: r for _, r in sorted(rows, key=lambda t: t[0])}
+
+    restarted, one_shot = [], []
+    add_half(1, 1_000_000_000)
+    drain_into(restarted, str(tmp_path / "ck_restart"))
+    add_half(2, 2_000_000_000)
+    drain_into(restarted, str(tmp_path / "ck_restart"))
+    drain_into(one_shot, str(tmp_path / "ck_one_shot"))
+    assert {i for i, _ in restarted} == {0, 1}, "expected one micro-batch per drain"
+    assert latest(restarted) == latest(one_shot)
+    assert len(latest(one_shot)) == 5
+
+
 def test_drain_state_grows_with_input_up_to_session_parallelism(spark, monkeypatch):
     """At a 1 KiB advisory partition size the sf0.01 events (megabytes)
     ask for more partitions than the session has cores: the rule caps

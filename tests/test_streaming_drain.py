@@ -1,5 +1,6 @@
-"""One way to drain a streaming twin, one action per micro-batch, and
-scratch space that does not leak.
+"""One way to drain a streaming twin, one action per micro-batch, one
+harness for the per-symbol state folds, and scratch space that does not
+leak.
 
 No Spark session is needed: the guards read the source, and the scratch
 check runs in a child interpreter.
@@ -154,3 +155,34 @@ def test_state_partitions_are_set_by_one_rule():
     assert "state_partitions" in _words(call.args[1])
     assert uses == len(sets) + len(reads), "the key is aliased or set some other way"
     assert not int_defaults, int_defaults
+
+
+def _method_calls(tree: ast.AST, method: str) -> list[ast.Call]:
+    return [
+        n
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute) and n.func.attr == method
+    ]
+
+
+def test_keyed_folds_share_one_harness():
+    """Every per-symbol GroupState fold under streaming/ goes through one
+    harness: one ``applyInPandasWithState`` call, one event-order chunk
+    sort, and no second state API beside it."""
+    group_state, event_sorts, tws = [], [], []
+    for path in sorted(STREAMING.glob("*.py")):
+        text = path.read_text()
+        tree = ast.parse(text)
+        group_state += [path.name for _ in _method_calls(tree, "applyInPandasWithState")]
+        event_sorts += [
+            path.name
+            for c in _method_calls(tree, "sort_values")
+            if c.args
+            and isinstance(c.args[0], ast.List)
+            and [getattr(e, "value", None) for e in c.args[0].elts] == ["ts", "event_id"]
+        ]
+        if "transformWithStateInPandas" in text:
+            tws.append(path.name)
+    assert group_state == ["stateful.py"], group_state
+    assert event_sorts == ["stateful.py"], event_sorts
+    assert not tws, tws
