@@ -64,14 +64,9 @@ def shingles_sql(text_col: str, n: int = 3) -> str:
         f" i -> concat_ws(' ', {parts}))"
     )
 
-def minhash_expr(shingles: str, k: int) -> str:
-    """Spark SQL expression: k-th MinHash over a shingle-array expression."""
-    a, b = perm_params(k)
-    h = "cast(conv(substring(md5(s),1,7),16,10) as bigint)"
-    return f"array_min(transform({shingles}, s -> ({a} * {h} + {b}) % {MINHASH_PRIME}))"
-
 def minhash_sql(shingles: str, k: int) -> str:
-    """DuckDB twin of minhash_expr."""
+    """DuckDB twin of ``operators.dedup._minhash_min_expr`` (the Spark
+    side that runs): k-th MinHash over a shingle-list expression."""
     a, b = perm_params(k)
     h = "(('0x' || substr(md5(s),1,7))::BIGINT)"
     return f"list_min(list_transform({shingles}, s -> ({a} * {h} + {b}) % {MINHASH_PRIME}))"

@@ -17,8 +17,8 @@ first-class:
   right side's columns, so the shuffle carries keys only.
 * **As-of join** (trade time to latest quote/order at-or-before) -- Spark
   has no native as-of; expressed as a key-equi join + per-left-row
-  ``row_number`` keep-latest.  See ``asof_join`` docstring for the
-  100 TB variant.
+  ``row_number`` keep-latest, and as the zero-fan-out union-sort
+  ``asof_join_sorted`` that the registered as-of queries run.
 """
 
 from __future__ import annotations
@@ -183,10 +183,7 @@ def asof_join(
     Scale: this naive form materializes every (left, right<=t) match
     before pruning -- fine when key cardinality bounds matches (quotes per
     symbol-minute), quadratic when one key holds a day of ticks.  The
-    100 TB mitigation is time-bucketing: truncate both sides to a bucket,
-    equi-join on (key, bucket) unioned with (key, bucket-1), then the same
-    keep-latest -- which bounds the fan-out to two buckets per row.  See
-    ``asof_join_bucketed``.
+    100 TB form is ``asof_join_sorted`` (union-sort, zero fan-out).
     """
     lt, rt = F.col(left_time), F.col(right_time)
     joined = left.join(right, (left[left_on] == right[right_on]) & (rt <= lt), how)
@@ -194,64 +191,6 @@ def asof_join(
         F.col(right_time).desc_nulls_last(), F.col(right_tiebreak).desc_nulls_last()
     )
     return joined.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
-
-def asof_join_bucketed(
-    left: DataFrame,
-    right: DataFrame,
-    left_on: str,
-    right_on: str,
-    left_time: str,
-    right_time: str,
-    left_id: str,
-    right_tiebreak: str,
-    bucket: str = "1 hour",
-) -> DataFrame:
-    """Scale path for as-of: bound join fan-out with time buckets.
-
-    Each left row probes at most two (key, bucket) cells: its own bucket
-    and the previous one; rows whose prevailing right row is older than
-    one bucket fall back to the latest-per-(key,bucket) "carry" table,
-    which is aggregated (small) and broadcastable.  This keeps the shuffle
-    proportional to rows, not to rows x matches.
-
-    The bucket term is a true EQUI-key: each left row is exploded into two
-    probe rows (its own bucket and the previous one) and the join condition
-    is ``(key, probe_bucket) == (key, right_bucket)`` -- so the shuffle
-    hash-partitions on (key, bucket), hot keys spread across buckets, and
-    the per-task candidate set is bounded by two buckets of one key, never
-    the key's full history.  ``tests/test_scale_plans.py`` asserts the
-    bucket columns appear in the join keys.
-
-    Rows whose prevailing right row is older than one bucket come back
-    NULL -- the documented approximation of the windowed form.  The exact
-    full-history operator is ``asof_join_sorted`` (union-sort, zero
-    fan-out); compose the two (sort within (key, bucket) + carry the last
-    row of each bucket forward) when a single key's history outgrows one
-    task's sort budget.
-    """
-    dur = F.expr(f"INTERVAL {bucket}")
-    lb = F.date_trunc("hour", F.col(left_time))
-    rb = F.date_trunc("hour", F.col(right_time))
-    lhs = left.withColumn("__pb", F.explode(F.array(lb, lb - dur)))
-    rhs = right.withColumn("__rb", rb)
-    probe = lhs.join(
-        rhs,
-        (lhs[left_on] == rhs[right_on])
-        & (F.col("__pb") == F.col("__rb"))
-        & (F.col(right_time) <= F.col(left_time)),
-        "left",
-    )
-    # one output row per left row: the latest match across both probe
-    # buckets wins; a fully-unmatched left row survives as its null row
-    w = Window.partitionBy(left_id).orderBy(
-        F.col(right_time).desc_nulls_last(), F.col(right_tiebreak).desc_nulls_last()
-    )
-    matched = (
-        probe.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__pb", "__rb")
-    )
-    return matched
 
 def asof_join_sorted(
     left: DataFrame,
@@ -274,13 +213,11 @@ def asof_join_sorted(
     per-key sort (external, spills), and a linear running-window pass.
     No (left x matching-right) intermediate ever materializes, so a key
     holding a year of ticks costs O(n log n), not O(n^2) -- this replaces
-    the naive ``asof_join`` (kept as the differential cross-check) and the
-    two-bucket probe (kept for the case where the timeline must stay
-    partitioned by time as well as key).  A single pathologically hot key
-    still lands on one task; the mitigation is composing this with the
-    time-bucket split of ``asof_join_bucketed`` (sort within (key, bucket),
-    carry the last right row of each bucket forward), worth it only past
-    ~10^8 rows per key.
+    the naive ``asof_join`` (kept as the differential cross-check).  A
+    single pathologically hot key still lands on one task; the mitigation
+    is a time-bucket split (sort within (key, bucket), carry the last
+    right row of each bucket forward), worth it only past ~10^8 rows per
+    key.
 
     Semantics match ``asof_join(how="left")`` exactly: inclusive
     ``right_time <= left_time`` (right rows sort before left rows at equal
@@ -595,8 +532,8 @@ def value_band_summary(events: DataFrame) -> DataFrame:
     defined by [lo, hi) intervals.  Spark plans an inequality-only join
     as BroadcastNestedLoopJoin -- fine here because the band table is a
     handful of rows broadcast everywhere, and each probe row scans 5
-    intervals.  (A MILLION-interval band table would need the bucketed
-    as-of pattern instead -- see asof_join_bucketed.)
+    intervals.  (A MILLION-interval band table would need a sorted
+    as-of pattern instead -- see asof_join_sorted.)
 
     Scale: the fact side never shuffles for the join itself; the single
     groupBy(band) afterwards is the only exchange."""
@@ -1107,9 +1044,7 @@ def asof_join_tolerance(
 
     Scale: identical to ``asof_join_sorted`` (one shuffle, union-sort,
     zero fan-out) -- the tolerance is a row-local projection on top, no
-    extra join or window.  The bucketed variant gets the same bound for
-    free when ``tolerance <= bucket`` (stale rows fall outside the two
-    probed buckets); this exact form works at any tolerance."""
+    extra join or window, exact at any tolerance."""
     out = asof_join_sorted(
         left, right, left_on, right_on, left_time, right_time, right_tiebreak
     )

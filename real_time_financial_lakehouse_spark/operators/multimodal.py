@@ -6,16 +6,18 @@ reads it unless projected), while typed metadata columns (media_type,
 width, height, duration, codec) drive partition pruning and filtering so
 decode UDFs only touch the rows they must.
 
-Decode/feature-extraction runs as ``mapInPandas``: Arrow-batched, one
-Python process per task, payload bytes streamed batch-wise -- the only
-sane Python boundary shape at scale (row-at-a-time UDFs would serialize
-every payload individually).
+Every encode and decode pass crosses into Python through ONE harness,
+``_map_rows``: a 1-to-1 ``mapInPandas`` that is Arrow-batched, one Python
+process per task, payload bytes streamed batch-wise -- the only sane
+Python boundary shape at scale (row-at-a-time UDFs would serialize every
+payload individually).  A pass supplies only its per-row function and
+its output schema; ``_decode_rows`` and ``_encode_docs`` are the two
+shapes every codec pipeline uses.
 
 Media decode is REAL where a container format permits a stdlib codec:
 PNG (zlib inflate + full filter set), baseline JPEG (Huffman entropy
 decode + IDCT, standard Annex K tables), GIF89a (LZW), RIFF/PCM WAV,
-and YUV4MPEG2 (Y4M) video (header parse + per-frame plane walk), plus a
-real nearest-neighbor image resize over the decoded raster.  Compressed
+and YUV4MPEG2 (Y4M) video (header parse + per-frame plane walk).  Compressed
 audio/video codecs (mp3/h264/...) are NOT in this environment, so
 ``decode_payload`` raises NotImplementedError for unknown formats under
 ``fake=False`` and provides a deterministic byte-level fake that keeps
@@ -65,13 +67,76 @@ def attach_media(documents: DataFrame) -> DataFrame:
         F.lit("raw").alias("codec"),
     )
 
+
+def _map_rows(df: DataFrame, fn, schema: T.StructType) -> DataFrame:
+    """The module's one Python boundary: a 1-to-1 ``mapInPandas`` over
+    ``df``.  Each Arrow batch is zipped over ``df``'s columns, ``fn(*row)``
+    returns one output tuple in ``schema`` order, and the batch's frame
+    takes ``schema``'s field names.  Arrow casts each pandas column to its
+    declared field type (int64 -> int, empty batches included), so no
+    pass carries its own dtype fix-ups."""
+    names = schema.fieldNames()
+
+    def frames(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        import pandas as pd
+
+        for pdf in batches:
+            rows = [fn(*row) for row in zip(*(pdf[c] for c in pdf.columns))]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.mapInPandas(frames, schema=schema)
+
+
+MEDIA_SCHEMA = T.StructType(
+    [
+        T.StructField("asset_id", T.LongType()),
+        T.StructField("payload", T.BinaryType()),
+    ]
+)
+
+
+def _encode_docs(docs: DataFrame, encode) -> DataFrame:
+    """Media table from a (doc_id, text) frame: ``(doc_id, encode(text))``
+    per row.  The caller decides whether ``docs`` is spread first."""
+    return _map_rows(docs, lambda did, txt: (did, encode(txt)), MEDIA_SCHEMA)
+
+
+def _decode_rows(media: DataFrame, decode, schema: T.StructType) -> DataFrame:
+    """Feature extraction through a real decoder: ``(asset_id, payload)``
+    -> ``(asset_id, *decode(payload)[f])`` for every other field ``f`` of
+    ``schema``.  Only (asset_id, payload) are projected into Python."""
+    fields = schema.fieldNames()[1:]
+
+    def row(aid, payload):
+        decoded = decode(bytes(payload))
+        return (aid, *(decoded[f] for f in fields))
+
+    return _map_rows(media.select("asset_id", "payload"), row, schema)
+
+
+def _round6(col: str):
+    """Half-up rounding at 1e-6, the grid every oracle compares means on."""
+    return (F.floor(F.col(col) * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(col)
+
+
+def _decoded_report(media: DataFrame, decode, schema: T.StructType) -> DataFrame:
+    """``_decode_rows`` output as a query: every field of ``schema`` in
+    order, the double-typed mean rounded by ``_round6``, ordered by
+    asset."""
+    return _decode_rows(media, decode, schema).select(
+        *(
+            _round6(f.name) if isinstance(f.dataType, T.DoubleType) else f.name
+            for f in schema
+        )
+    ).orderBy("asset_id")
+
 # ---------------------------------------------------------------------------
 # Real PNG codec (pure stdlib: zlib + struct).  A genuinely real decode
 # path so a user with actual image columns exercises true parsing --
 # signature, chunk walk, IHDR, zlib inflate, per-scanline unfiltering --
-# not a byte-stat fake.  The baseline JPEG codec follows further down;
-# audio/video still require external codec libraries and keep the
-# explicit NotImplementedError stub.
+# not a byte-stat fake.  The baseline JPEG, WAV, GIF and Y4M codecs
+# follow further down; compressed audio/video codecs still require
+# external libraries and keep the explicit NotImplementedError stub.
 # ---------------------------------------------------------------------------
 
 PNG_SIGNATURE = b"\x89PNG\r\n\x1a\n"
@@ -191,9 +256,7 @@ def decode_png(payload: bytes) -> dict:
         "sample_sum": sample_sum,
         "mean_value": (sample_sum / n_samples) if n_samples else 0.0,
         "pixel_crc": zlib.crc32(bytes(recon)) & 0xFFFFFFFF,
-        # reconstructed raster, row-major -- the real-resize path
-        # resamples these bytes directly
-        "pixels": bytes(recon),
+        "pixels": bytes(recon),  # reconstructed raster, row-major
     }
 
 
@@ -679,34 +742,33 @@ def decode_wav(payload: bytes) -> dict:
     }
 
 
+WAV_FEATURE_SCHEMA = T.StructType(
+    [
+        T.StructField("asset_id", T.LongType()),
+        T.StructField("sample_rate", T.LongType()),
+        T.StructField("n_samples", T.LongType()),
+        T.StructField("duration_ms", T.LongType()),
+        T.StructField("peak", T.LongType()),
+        T.StructField("mean_abs", T.DoubleType()),
+    ]
+)
+
+
+def _wav_clip(txt: str | None) -> bytes:
+    """A doc's utf-8 bytes as int16 samples ((byte - 64) * 256 -- spans
+    negative and positive amplitudes), tiled n_bytes % 3 + 1 times,
+    encoded with the real RIFF writer."""
+    import numpy as np
+
+    data = (txt or "").encode("utf-8") or b"\x40"
+    base = (np.frombuffer(data, dtype=np.uint8).astype(np.int64) - 64) * 256
+    return encode_wav(np.tile(base, len(data) % 3 + 1))
+
+
 def attach_wav_media(documents: DataFrame) -> DataFrame:
-    """Build a media table of REAL WAV clips from the documents fixture:
-    each doc's utf-8 bytes become int16 samples ((byte - 64) * 256 --
-    spans negative and positive amplitudes), n_chars % 3 + 1 tiled
-    repeats, encoded with the real RIFF writer.  mapInPandas,
-    Arrow-batched, (doc_id, text) only."""
-
-    def process(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for did, txt in zip(pdf["doc_id"], pdf["text"]):
-                data = (txt or "").encode("utf-8") or b"\x40"
-                reps = len(data) % 3 + 1
-                base = (
-                    np.frombuffer(data, dtype=np.uint8).astype(np.int64) - 64
-                ) * 256
-                rows.append(
-                    {"asset_id": did, "payload": encode_wav(np.tile(base, reps))}
-                )
-            yield pd.DataFrame(rows, columns=["asset_id", "payload"])
-
-    return documents.select("doc_id", "text").mapInPandas(
-        process, schema="asset_id long, payload binary"
-    )
+    """Build a media table of REAL WAV clips from the documents fixture
+    (``_wav_clip`` per doc)."""
+    return _encode_docs(documents.select("doc_id", "text"), _wav_clip)
 
 
 def wav_media_features(documents: DataFrame) -> DataFrame:
@@ -715,50 +777,9 @@ def wav_media_features(documents: DataFrame) -> DataFrame:
     amplitude stats.  PCM is lossless, so every output column is exactly
     recomputable by the oracle from the doc's text bytes (unlike the
     JPEG path, no rate-distortion certificate is needed)."""
-
-    def process(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for aid, pl in zip(pdf["asset_id"], pdf["payload"]):
-                d = decode_wav(bytes(pl))
-                rows.append(
-                    {
-                        "asset_id": aid,
-                        "sample_rate": d["sample_rate"],
-                        "n_samples": d["n_samples"],
-                        "duration_ms": d["duration_ms"],
-                        "peak": d["peak"],
-                        "mean_abs": d["mean_abs"],
-                    }
-                )
-            out = pd.DataFrame(
-                rows,
-                columns=["asset_id", "sample_rate", "n_samples",
-                         "duration_ms", "peak", "mean_abs"],
-            )
-            for c in ("sample_rate", "peak"):
-                out[c] = out[c].astype("int64")
-            yield out
-
-    feats = attach_wav_media(documents).select("asset_id", "payload").mapInPandas(
-        process,
-        schema=(
-            "asset_id long, sample_rate long, n_samples long,"
-            " duration_ms long, peak long, mean_abs double"
-        ),
+    return _decoded_report(
+        attach_wav_media(documents), decode_wav, WAV_FEATURE_SCHEMA
     )
-    return feats.select(
-        "asset_id",
-        "sample_rate",
-        "n_samples",
-        "duration_ms",
-        "peak",
-        (F.floor(F.col("mean_abs") * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
-            "mean_abs"
-        ),
-    ).orderBy("asset_id")
 
 
 def decode_payload(media_type: str, payload: bytes, fake: bool = True) -> dict:
@@ -825,158 +846,19 @@ def decode_payload(media_type: str, payload: bytes, fake: bool = True) -> dict:
     }
 
 def extract_features(media: DataFrame) -> DataFrame:
-    """mapInPandas feature extraction over binary payloads.
+    """Feature extraction over binary payloads through ``decode_payload``.
+    Only (asset_id, media_type, payload) are projected into Python --
+    column pruning keeps the rest of the row JVM-side."""
+    fields = FEATURE_SCHEMA.fieldNames()[2:]
 
-    Arrow delivers payload bytes in columnar batches; each batch is
-    processed vectorized-ish in Python and emitted with an explicit
-    result schema.  Only (asset_id, media_type, payload) are projected
-    into Python -- column pruning keeps the rest of the row JVM-side."""
+    def row(aid, media_type, payload):
+        decoded = decode_payload(media_type, bytes(payload))
+        return (aid, media_type, *(decoded[f] for f in fields))
 
-    def process(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            feats = [
-                {"asset_id": aid, "media_type": mt, **decode_payload(mt, bytes(pl))}
-                for aid, mt, pl in zip(pdf["asset_id"], pdf["media_type"], pdf["payload"])
-            ]
-            yield pd.DataFrame(feats)
-
-    pruned = media.select("asset_id", "media_type", "payload")
-    return pruned.mapInPandas(process, schema=FEATURE_SCHEMA)
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType()),
-        T.StructField("media_type", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
-
-def _nn_resample(
-    pixels: bytes, w: int, h: int, channels: int, tw: int, th: int
-) -> bytes:
-    """Nearest-neighbor resample of a row-major raster: target pixel
-    (tx, ty) reads source pixel (tx*w//tw, ty*h//th) -- the standard
-    floor mapping, all channels copied together."""
-    out = bytearray(tw * th * channels)
-    for ty in range(th):
-        sy = ty * h // th
-        src_row = sy * w * channels
-        dst_row = ty * tw * channels
-        for tx in range(tw):
-            sx = tx * w // tw
-            s = src_row + sx * channels
-            d = dst_row + tx * channels
-            out[d : d + channels] = pixels[s : s + channels]
-    return bytes(out)
-
-
-def resize_payload(payload: bytes, target_w: int, target_h: int, fake: bool = True) -> bytes:
-    """REAL resize for payloads this engine can actually decode: a PNG
-    payload is decoded (real chunk walk / inflate / unfilter),
-    nearest-neighbor resampled to target_w x target_h, and re-encoded as
-    a real PNG with the same color type.  Formats without an in-container
-    codec fall back to the deterministic byte-budget fake under
-    ``fake=True`` (truncate-or-tile to target_w*target_h bytes, keeping
-    output size coupled to the requested dimensions so partition-size
-    math stays realistic) and raise under ``fake=False``."""
-    if payload[:8] == PNG_SIGNATURE:
-        try:
-            d = decode_png(payload)
-        except Exception:
-            # magic-byte collision on non-PNG bytes: fake or strict
-            if not fake:
-                raise
-        else:
-            resampled = _nn_resample(
-                d["pixels"], d["width"], d["height"], d["channels"],
-                target_w, target_h,
-            )
-            return encode_png(target_w, target_h, resampled, d["color_type"])
-    if not fake:
-        raise NotImplementedError(
-            "real resize for non-PNG formats requires codec libraries"
-            " not in this environment"
-        )
-    budget = max(1, target_w * target_h)
-    if not payload:
-        return b"\x00" * budget
-    reps = -(-budget // len(payload))
-    return (payload * reps)[:budget]
-
-def resize_media(media: DataFrame, target_w: int = 64, target_h: int = 64) -> DataFrame:
-    """1-to-1 mapInPandas transform: re-encode every payload at target
-    dimensions.  Metadata columns update JVM-side; only the payload
-    crosses into Python, Arrow-batched."""
-
-    def process(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            out = pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "media_type": pdf["media_type"],
-                    "width": target_w,
-                    "height": target_h,
-                    "payload": [
-                        resize_payload(bytes(p), target_w, target_h) for p in pdf["payload"]
-                    ],
-                }
-            )
-            out["width"] = out["width"].astype("int32")
-            out["height"] = out["height"].astype("int32")
-            yield out
-
-    return media.select("asset_id", "media_type", "payload").mapInPandas(
-        process, schema=RESIZED_SCHEMA
+    return _map_rows(
+        media.select("asset_id", "media_type", "payload"), row, FEATURE_SCHEMA
     )
 
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("offset_ms", T.LongType()),
-        T.StructField("frame_bytes", T.BinaryType()),
-    ]
-)
-
-def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
-    """1-to-N frame sampling for video assets: each video row expands to
-    ``n_frames`` evenly-spaced pseudo-frames (mapInPandas emitting more
-    rows than it receives -- the flatMap shape).  The stub slices the
-    payload evenly; a real build seeks/decodes keyframes.  Non-video rows
-    are filtered JVM-side BEFORE the Python boundary so decode only
-    touches the rows it must."""
-
-    def process(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for aid, pl, dur in zip(pdf["asset_id"], pdf["payload"], pdf["duration_ms"]):
-                payload = bytes(pl)
-                step = max(1, len(payload) // n_frames)
-                for i in range(n_frames):
-                    rows.append(
-                        {
-                            "asset_id": aid,
-                            "frame_idx": i,
-                            "offset_ms": int(dur) * i // n_frames,
-                            "frame_bytes": payload[i * step : (i + 1) * step],
-                        }
-                    )
-            out = pd.DataFrame(rows, columns=["asset_id", "frame_idx", "offset_ms", "frame_bytes"])
-            out["frame_idx"] = out["frame_idx"].astype("int32")
-            yield out
-
-    videos = media.filter(F.col("media_type") == "video").select(
-        "asset_id", "payload", "duration_ms"
-    )
-    return videos.mapInPandas(process, schema=FRAME_SCHEMA)
 
 PNG_FEATURE_SCHEMA = T.StructType(
     [
@@ -1014,151 +896,53 @@ def attach_png_media(documents: DataFrame) -> DataFrame:
     """Build a media table of REAL PNG images from the documents fixture:
     each doc's utf-8 text bytes are tiled into a (n_chars%13+1) x
     (n_chars%7+1) grayscale raster and encoded as an actual PNG (real
-    IHDR/IDAT/IEND, real CRCs, real deflate).  mapInPandas because PNG
-    encoding is inherently Python-side here; Arrow-batched, only
-    (doc_id, text) projected into the worker."""
-
-    def process(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did, txt in zip(pdf["doc_id"], pdf["text"]):
-                w, h, tiled = _tile_text_raster(txt)
-                rows.append({"asset_id": did, "payload": encode_png(w, h, tiled)})
-            yield pd.DataFrame(rows, columns=["asset_id", "payload"])
-
-    return documents.select("doc_id", "text").mapInPandas(
-        process, schema="asset_id long, payload binary"
-    )
-
-
-def png_features(media: DataFrame) -> DataFrame:
-    """Real-decoder feature extraction: every payload goes through
-    ``decode_png`` (signature check, chunk walk, inflate, unfilter) and
-    emits true decoded geometry + pixel statistics.  Same Python-boundary
-    discipline as extract_features: mapInPandas, Arrow batches, only
-    (asset_id, payload) projected."""
-
-    def process(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for aid, pl in zip(pdf["asset_id"], pdf["payload"]):
-                d = decode_png(bytes(pl))
-                rows.append(
-                    {
-                        "asset_id": aid,
-                        "width": d["width"],
-                        "height": d["height"],
-                        "channels": d["channels"],
-                        "n_pixels": d["n_pixels"],
-                        "mean_value": d["mean_value"],
-                        "pixel_crc": d["pixel_crc"],
-                    }
-                )
-            out = pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "width", "height", "channels",
-                    "n_pixels", "mean_value", "pixel_crc",
-                ],
-            )
-            for c in ("width", "height", "channels"):
-                out[c] = out[c].astype("int32")
-            yield out
-
-    return media.select("asset_id", "payload").mapInPandas(
-        process, schema=PNG_FEATURE_SCHEMA
+    IHDR/IDAT/IEND, real CRCs, real deflate)."""
+    return _encode_docs(
+        documents.select("doc_id", "text"),
+        lambda txt: encode_png(*_tile_text_raster(txt)),
     )
 
 
 def png_media_features(documents: DataFrame) -> DataFrame:
     """End-to-end REAL image pipeline: encode fixture docs as actual PNGs,
-    decode them with the real stdlib decoder, round the mean for stable
-    comparison, order by asset.  Deterministic end to end (deflate level
-    fixed, CRC exact), so the driver's rows-only check is stable and
-    pytest pins exact decoded values."""
-    feats = png_features(attach_png_media(documents))
-    return feats.select(
-        "asset_id",
-        "width",
-        "height",
-        "channels",
-        "n_pixels",
-        (F.floor(F.col("mean_value") * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
-            "mean_value"
-        ),
-        "pixel_crc",
-    ).orderBy("asset_id")
+    decode them with the real stdlib decoder (signature check, chunk
+    walk, inflate, unfilter), round the mean for stable comparison, order
+    by asset.  Deterministic end to end (deflate level fixed, CRC exact),
+    so the driver's rows-only check is stable and pytest pins exact
+    decoded values."""
+    return _decoded_report(
+        attach_png_media(documents), decode_png, PNG_FEATURE_SCHEMA
+    )
 
 
 def attach_jpeg_media(documents: DataFrame, quality: int = 90) -> DataFrame:
     """Build a media table of REAL baseline JPEGs from the documents
     fixture: the same (n_chars%13+1) x (n_chars%7+1) grayscale tiling as
     ``attach_png_media``, run through the real ``encode_jpeg`` (genuine
-    FDCT, Annex K tables, Huffman entropy coding).  mapInPandas,
-    Arrow-batched, (doc_id, text) only, ``_spread`` first -- the
-    pure-Python FDCT/Huffman encoder is the cost, and a one-file
+    FDCT, Annex K tables, Huffman entropy coding).  ``_spread`` first --
+    the pure-Python FDCT/Huffman encoder is the cost, and a one-file
     fixture scan would otherwise feed every document to a single task
     (one Python worker, cores-1 idle)."""
     from .dedup import _spread
 
-    def process(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did, txt in zip(pdf["doc_id"], pdf["text"]):
-                w, h, tiled = _tile_text_raster(txt)
-                rows.append(
-                    {"asset_id": did, "payload": encode_jpeg(w, h, tiled, quality)}
-                )
-            yield pd.DataFrame(rows, columns=["asset_id", "payload"])
-
-    return _spread(documents.select("doc_id", "text")).mapInPandas(
-        process, schema="asset_id long, payload binary"
+    return _encode_docs(
+        _spread(documents.select("doc_id", "text")),
+        lambda txt: encode_jpeg(*_tile_text_raster(txt), quality),
     )
 
 
-def jpeg_features(media: DataFrame) -> DataFrame:
-    """Real-JPEG feature extraction: every payload through ``decode_jpeg``
-    (marker walk, Huffman decode, dequant, IDCT).  Same Python-boundary
-    shape as png_features."""
+SRC_MEAN_SCHEMA = T.StructType(
+    [
+        T.StructField("asset_id", T.LongType()),
+        T.StructField("src_mean", T.DoubleType()),
+    ]
+)
 
-    def process(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
 
-        for pdf in batches:
-            rows = []
-            for aid, pl in zip(pdf["asset_id"], pdf["payload"]):
-                d = decode_jpeg(bytes(pl))
-                rows.append(
-                    {
-                        "asset_id": aid,
-                        "width": d["width"],
-                        "height": d["height"],
-                        "channels": d["channels"],
-                        "n_pixels": d["n_pixels"],
-                        "mean_value": d["mean_value"],
-                        "pixel_crc": d["pixel_crc"],
-                    }
-                )
-            out = pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "width", "height", "channels",
-                    "n_pixels", "mean_value", "pixel_crc",
-                ],
-            )
-            for c in ("width", "height", "channels"):
-                out[c] = out[c].astype("int32")
-            yield out
-
-    return media.select("asset_id", "payload").mapInPandas(
-        process, schema=PNG_FEATURE_SCHEMA
-    )
+def _src_mean(did, txt):
+    """(doc_id, mean of the raster ``_tile_text_raster`` feeds the encoder)."""
+    w, h, tiled = _tile_text_raster(txt)
+    return did, sum(tiled) / (w * h)
 
 
 def jpeg_media_features(documents: DataFrame, mean_tol: float = 1.5) -> DataFrame:
@@ -1177,29 +961,15 @@ def jpeg_media_features(documents: DataFrame, mean_tol: float = 1.5) -> DataFram
     well inside the 7.5-level small-raster bound.  The exact decoded
     mean and pixel_crc are pytest-pinned (lossy values are not
     SQL-recomputable)."""
-    feats = jpeg_features(attach_jpeg_media(documents))
-
-    # source mean from the same tiling rule the encoder used (Python-side,
-    # mirrored exactly by the oracle's text-byte SQL)
-    def process(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did, txt in zip(pdf["doc_id"], pdf["text"]):
-                w, h, tiled = _tile_text_raster(txt)
-                rows.append(
-                    {
-                        "asset_id": did,
-                        "src_mean": sum(tiled) / (w * h),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["asset_id", "src_mean"])
-
     from .dedup import _spread
 
-    src_means = _spread(documents.select("doc_id", "text")).mapInPandas(
-        process, schema="asset_id long, src_mean double"
+    feats = _decode_rows(
+        attach_jpeg_media(documents), decode_jpeg, PNG_FEATURE_SCHEMA
+    )
+    # source mean from the same tiling rule the encoder used (Python-side,
+    # mirrored exactly by the oracle's text-byte SQL)
+    src_means = _map_rows(
+        _spread(documents.select("doc_id", "text")), _src_mean, SRC_MEAN_SCHEMA
     )
     return (
         feats.join(src_means, "asset_id")
@@ -1208,9 +978,7 @@ def jpeg_media_features(documents: DataFrame, mean_tol: float = 1.5) -> DataFram
             "width",
             "height",
             "n_pixels",
-            (F.floor(F.col("src_mean") * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
-                "src_mean"
-            ),
+            _round6("src_mean"),
             (
                 F.abs(F.col("mean_value") - F.col("src_mean"))
                 <= F.lit(mean_tol)
@@ -1473,62 +1241,14 @@ def decode_gif(payload: bytes) -> dict:
 def attach_gif_media(documents: DataFrame) -> DataFrame:
     """REAL GIF media table from the documents fixture: the shared
     ``_tile_text_raster`` grayscale tiling, encoded through the real
-    LZW pipeline.  mapInPandas, Arrow-batched, (doc_id, text) only,
-    ``_spread`` first -- the pure-Python LZW encoder is the cost, and a
-    one-file fixture scan would otherwise feed every document to a
-    single task (one Python worker, cores-1 idle)."""
+    LZW pipeline.  ``_spread`` first -- the pure-Python LZW encoder is
+    the cost, and a one-file fixture scan would otherwise feed every
+    document to a single task (one Python worker, cores-1 idle)."""
     from .dedup import _spread
 
-    def process(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did, txt in zip(pdf["doc_id"], pdf["text"]):
-                w, h, tiled = _tile_text_raster(txt)
-                rows.append({"asset_id": did, "payload": encode_gif(w, h, tiled)})
-            yield pd.DataFrame(rows, columns=["asset_id", "payload"])
-
-    return _spread(documents.select("doc_id", "text")).mapInPandas(
-        process, schema="asset_id long, payload binary"
-    )
-
-
-def gif_features(media: DataFrame) -> DataFrame:
-    """Real-GIF feature extraction through ``decode_gif`` -- same
-    Python-boundary shape as png_features/jpeg_features."""
-
-    def process(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for aid, pl in zip(pdf["asset_id"], pdf["payload"]):
-                d = decode_gif(bytes(pl))
-                rows.append(
-                    {
-                        "asset_id": aid,
-                        "width": d["width"],
-                        "height": d["height"],
-                        "channels": d["channels"],
-                        "n_pixels": d["n_pixels"],
-                        "mean_value": d["mean_value"],
-                        "pixel_crc": d["pixel_crc"],
-                    }
-                )
-            out = pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "width", "height", "channels",
-                    "n_pixels", "mean_value", "pixel_crc",
-                ],
-            )
-            for c in ("width", "height", "channels"):
-                out[c] = out[c].astype("int32")
-            yield out
-
-    return media.select("asset_id", "payload").mapInPandas(
-        process, schema=PNG_FEATURE_SCHEMA
+    return _encode_docs(
+        _spread(documents.select("doc_id", "text")),
+        lambda txt: encode_gif(*_tile_text_raster(txt)),
     )
 
 
@@ -1537,18 +1257,9 @@ def gif_media_features(documents: DataFrame) -> DataFrame:
     (LZW) -> real decode (block walk, LZW, palette) -- lossless, so the
     decoded mean is EXACTLY recomputable from the text bytes (the same
     oracle as the PNG gate)."""
-    feats = gif_features(attach_gif_media(documents))
-    return feats.select(
-        "asset_id",
-        "width",
-        "height",
-        "channels",
-        "n_pixels",
-        (F.floor(F.col("mean_value") * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
-            "mean_value"
-        ),
-        "pixel_crc",
-    ).orderBy("asset_id")
+    return _decoded_report(
+        attach_gif_media(documents), decode_gif, PNG_FEATURE_SCHEMA
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1652,33 +1363,22 @@ def decode_y4m(payload: bytes) -> dict:
     }
 
 
+def _y4m_clip(txt: str | None) -> bytes:
+    """Frame 0 is the shared ``_tile_text_raster`` grayscale tiling;
+    frame k adds a constant brightness ramp of +k gray levels (clamped at
+    255 -- on the ASCII fixture the clamp never fires, the same
+    byte==ord assumption every image oracle documents); n_frames =
+    n_bytes % 4 + 1."""
+    w, h, tiled = _tile_text_raster(txt)
+    nf = len((txt or "").encode("utf-8")) % 4 + 1
+    frames = [bytes(min(b + k, 255) for b in tiled) for k in range(nf)]
+    return encode_y4m(w, h, frames)
+
+
 def attach_y4m_media(documents: DataFrame) -> DataFrame:
-    """Build a media table of REAL Y4M clips from the documents fixture:
-    frame 0 is the shared ``_tile_text_raster`` grayscale tiling; frame k
-    adds a constant brightness ramp of +k gray levels (clamped at 255 --
-    on the ASCII fixture the clamp never fires, the same byte==ord
-    assumption every image oracle documents); n_frames = n_bytes % 4 + 1.
-    mapInPandas, Arrow-batched, (doc_id, text) only."""
-
-    def process(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did, txt in zip(pdf["doc_id"], pdf["text"]):
-                w, h, tiled = _tile_text_raster(txt)
-                nf = len((txt or "").encode("utf-8")) % 4 + 1
-                frames = [
-                    bytes(min(b + k, 255) for b in tiled) for k in range(nf)
-                ]
-                rows.append(
-                    {"asset_id": did, "payload": encode_y4m(w, h, frames)}
-                )
-            yield pd.DataFrame(rows, columns=["asset_id", "payload"])
-
-    return documents.select("doc_id", "text").mapInPandas(
-        process, schema="asset_id long, payload binary"
-    )
+    """Build a media table of REAL Y4M clips from the documents fixture
+    (``_y4m_clip`` per doc)."""
+    return _encode_docs(documents.select("doc_id", "text"), _y4m_clip)
 
 
 Y4M_FEATURE_SCHEMA = T.StructType(
@@ -1695,39 +1395,6 @@ Y4M_FEATURE_SCHEMA = T.StructType(
 )
 
 
-def y4m_features(media: DataFrame) -> DataFrame:
-    """Real-Y4M feature extraction through ``decode_y4m`` -- same
-    Python-boundary shape as png_features/gif_features."""
-
-    def process(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for aid, pl in zip(pdf["asset_id"], pdf["payload"]):
-                d = decode_y4m(bytes(pl))
-                rows.append(
-                    {
-                        "asset_id": aid,
-                        "width": d["width"],
-                        "height": d["height"],
-                        "n_frames": d["n_frames"],
-                        "n_pixels": d["n_pixels"],
-                        "duration_ms": d["duration_ms"],
-                        "mean_value": d["mean_value"],
-                        "pixel_crc": d["pixel_crc"],
-                    }
-                )
-            out = pd.DataFrame(rows, columns=[f.name for f in Y4M_FEATURE_SCHEMA])
-            for c in ("width", "height", "n_frames"):
-                out[c] = out[c].astype("int32")
-            yield out
-
-    return media.select("asset_id", "payload").mapInPandas(
-        process, schema=Y4M_FEATURE_SCHEMA
-    )
-
-
 def video_media_features(documents: DataFrame) -> DataFrame:
     """End-to-end REAL video pipeline: docs -> real Y4M encode (stream
     header + per-frame Y planes) -> real decode (header tokenize, FRAME
@@ -1736,16 +1403,6 @@ def video_media_features(documents: DataFrame) -> DataFrame:
     text bytes: mean = tiled_mean + (n_frames - 1) / 2 (each frame k
     shifts every sample by +k).  pixel_crc is pinned in pytest (crc32 is
     not SQL-expressible), like the PNG gate."""
-    feats = y4m_features(attach_y4m_media(documents))
-    return feats.select(
-        "asset_id",
-        "width",
-        "height",
-        "n_frames",
-        "n_pixels",
-        "duration_ms",
-        (F.floor(F.col("mean_value") * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
-            "mean_value"
-        ),
-        "pixel_crc",
-    ).orderBy("asset_id")
+    return _decoded_report(
+        attach_y4m_media(documents), decode_y4m, Y4M_FEATURE_SCHEMA
+    )

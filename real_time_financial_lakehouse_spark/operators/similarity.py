@@ -147,17 +147,6 @@ def fit_codebook(embeddings: DataFrame, cache_key: str, n_cells: int = 16, seed:
         _CODEBOOK_CACHE[key] = model
     return model
 
-def assign_cells(model, embeddings: DataFrame) -> DataFrame:
-    """Cell assignment via ``model.transform`` -- Scala-side distance to
-    the broadcast centroid matrix, no Python boundary."""
-    from pyspark.ml.functions import array_to_vector
-
-    emb = embeddings.select("vec_id", _as_double("embedding").alias("v"))
-    emb = emb.withColumn("features", array_to_vector("v"))
-    return model.transform(emb).select(
-        "vec_id", "v", F.col("cell").cast("int").alias("cell")
-    )
-
 def ivf_topk_learned(
     embeddings: DataFrame,
     model,

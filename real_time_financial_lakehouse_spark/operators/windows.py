@@ -93,12 +93,6 @@ def with_rsi(
     )
     return series.withColumn("rsi", rsi)
 
-def indicator_frame(events: DataFrame) -> DataFrame:
-    """The dashboard's full derived frame (dashboard.py:42-48): ordered
-    series + SMA(5) + diff + RSI(14), one Window shuffle for everything."""
-    series = minute_series(events)
-    return with_rsi(with_diff(with_sma(series)))
-
 def last_prev_delta(
     series: DataFrame,
     symbol_col: str = "symbol",

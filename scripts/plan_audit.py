@@ -5,8 +5,7 @@ its optimized + physical plan and the plan of every SQL execution its
 build ran (eager fits, sink writes, stream micro-batches) are audited for
 the shapes that do not survive 100x scale:
 
-* row-at-a-time Python UDFs in the hot path (``BatchEvalPython``) --
-  only the explicitly-named slow-path twins are allowed;
+* row-at-a-time Python UDFs (``BatchEvalPython``) anywhere;
 * ``CartesianProduct`` (a non-broadcast cross join -- every intended
   cross join in the engine is a broadcast of a scalar/tiny frame);
 * GLOBAL window functions (``windowspecdefinition`` with an empty
@@ -33,11 +32,6 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from query_traits import ROOT, Trace, build_traced  # noqa: E402
-
-# the one named slow-path twin allowed to cross the Python boundary
-_PYTHON_ALLOWED = {"term_positions_udtf", "media_feature_summary",
-                   "png_media_features", "jpeg_media_features",
-                   "wav_media_features", "gif_media_features"}
 
 # queries whose empty-partition-spec window is justified: the frame
 # under the window is bounded (vocabulary / sketch-cell / group-count
@@ -124,7 +118,7 @@ def audit(name: str, trace: Trace) -> dict:
         flags.append("cartesian-product")
     # ArrowEvalPython / MapInPandas / mapInArrow are the blessed
     # vectorized boundaries; BatchEvalPython is row-at-a-time
-    if name not in _PYTHON_ALLOWED and any("BatchEvalPython" in p for p in plans):
+    if any("BatchEvalPython" in p for p in plans):
         flags.append("row-at-a-time-python")
     n_glob = _global_window_specs(optimized)
     max_n = _GLOBAL_WINDOW_ALLOWED.get(name, (0, ""))[0]

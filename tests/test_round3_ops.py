@@ -932,6 +932,8 @@ def test_queries_survive_fully_empty_tables(spark, tmp_path):
         "ann_index_delta_report", "streaming_psi_drift",
         "bipower_jump_stats", "ts_monotonicity_report",
         "wav_media_features", "ses_forecast", "event_pagerank",
+        "png_media_features", "gif_media_features", "video_media_features",
+        "media_feature_summary",
         "pairs_spread_zscore", "customer_rfm", "session_event_pmi",
         # every drained streaming twin but the expectation gate (below)
         "streaming_user_cms", "streaming_click_purchase",

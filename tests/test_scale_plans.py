@@ -147,31 +147,6 @@ def test_asof_sorted_matches_naive(spark):
     naive_rows = sorted(map(tuple, naive.collect()))
     assert fast_rows == naive_rows
 
-def test_asof_bucketed_carries_bucket_equikey(spark):
-    """The bucketed as-of must hash-partition on (key, bucket): the probe
-    bucket columns appear as JOIN KEYS (not a post-join range filter), so
-    a hot key's history spreads across bucket partitions."""
-    from real_time_financial_lakehouse_spark.operators import joins
-
-    ev = load_table(spark, SF_SMOKE, "events").select("event_id", "ts", "user_id")
-    orders = load_table(spark, SF_SMOKE, "orders").select(
-        "o_custkey", "o_orderkey", "o_orderdate", "o_totalprice"
-    )
-    out = joins.asof_join_bucketed(
-        ev,
-        orders,
-        left_on="user_id",
-        right_on="o_custkey",
-        left_time="ts",
-        right_time="o_orderdate",
-        left_id="event_id",
-        right_tiebreak="o_orderkey",
-    )
-    plan = _plan(out)
-    join_lines = [ln for ln in plan.splitlines() if "Join" in ln]
-    assert join_lines, plan
-    assert any("__pb" in ln and "__rb" in ln for ln in join_lines), join_lines
-
 def test_q6_every_predicate_pushes_into_scan(spark):
     """forecast_revenue (Q6) is the pushdown stress test: shipdate range,
     discount band, and quantity cap must ALL reach the parquet scan."""
