@@ -783,53 +783,45 @@ def wav_media_features(documents: DataFrame) -> DataFrame:
 
 
 def decode_payload(media_type: str, payload: bytes, fake: bool = True) -> dict:
-    """Decode dispatch: payloads carrying a real PNG or JPEG signature go
-    through the real stdlib decoders (``decode_png`` / ``decode_jpeg``);
-    other formats are stubbed -- the deterministic fake extracts
-    byte-level features, and ``fake=False`` raises for codecs genuinely
-    absent from this container (audio, video).  A real build replaces
-    only those bodies with torchaudio/pyav per media_type."""
-    # The try blocks wrap ONLY the decode calls (round-6 advisory): a
+    """Decode dispatch on the payload's signature: PNG, JPEG, GIF (87a and
+    89a), YUV4MPEG2 video and RIFF/WAVE audio go through the real stdlib
+    decoders in this module; the raster and video decoders report
+    ``byte_sum`` / ``byte_mean`` as the decoded samples' sum and mean, WAV
+    as its peak and mean absolute amplitude.  Any other payload is
+    stubbed -- the deterministic fake extracts byte-level features, and
+    ``fake=False`` raises for codecs genuinely absent from this container
+    (compressed audio and video).  A real build replaces only that stub
+    with torchaudio/pyav per media_type."""
+    # The try block wraps ONLY the decode call (round-6 advisory): a
     # parse failure on bytes that merely START with a codec's magic (the
     # 2-byte JPEG SOI especially) falls through to the byte-stat fake
     # under fake=True (contract: "deterministic features for any bytes")
     # and re-raises under fake=False.  Result-dict construction happens
     # OUTSIDE, so a decoder returning a malformed dict is a surfaced
     # programming error, never silently faked.
+    decoders = (
+        (PNG_SIGNATURE, decode_png),
+        (JPEG_SOI, decode_jpeg),
+        (b"GIF89a", decode_gif),
+        (b"GIF87a", decode_gif),
+        (Y4M_MAGIC, decode_y4m),
+    )
+    decode = next((d for magic, d in decoders if payload.startswith(magic)), None)
+    sum_key, mean_key = "sample_sum", "mean_value"
+    if payload[:4] == WAV_RIFF and payload[8:12] == b"WAVE":
+        decode, sum_key, mean_key = decode_wav, "peak", "mean_abs"
     decoded: dict | None = None
-    kind = None
-    if payload[:8] == PNG_SIGNATURE or payload[:2] == JPEG_SOI:
+    if decode is not None:
         try:
-            # real decode: byte stats over the DECODED raster, not the
-            # compressed container bytes
-            decoded = (
-                decode_png(payload)
-                if payload[:8] == PNG_SIGNATURE
-                else decode_jpeg(payload)
-            )
-            kind = "image"
+            decoded = decode(payload)
         except Exception:
             if not fake:
                 raise
-    elif payload[:4] == WAV_RIFF and payload[8:12] == b"WAVE":
-        try:
-            decoded = decode_wav(payload)
-            kind = "wav"
-        except Exception:
-            if not fake:
-                raise
-    if kind == "image":
+    if decoded is not None:
         return {
             "n_bytes": len(payload),
-            "byte_sum": decoded["sample_sum"],
-            "byte_mean": decoded["mean_value"],
-            "header_hex": payload[:4].hex(),
-        }
-    if kind == "wav":
-        return {
-            "n_bytes": len(payload),
-            "byte_sum": decoded["peak"],
-            "byte_mean": decoded["mean_abs"],
+            "byte_sum": decoded[sum_key],
+            "byte_mean": decoded[mean_key],
             "header_hex": payload[:4].hex(),
         }
     if not fake:
@@ -1228,12 +1220,14 @@ def decode_gif(payload: bytes) -> dict:
         (gct[3 * i] + gct[3 * i + 1] + gct[3 * i + 2]) // 3 for i in indices
     )
     n = width * height
+    sample_sum = sum(gray)
     return {
         "width": width,
         "height": height,
         "channels": 1,
         "n_pixels": n,
-        "mean_value": (sum(gray) / n) if n else 0.0,
+        "sample_sum": sample_sum,
+        "mean_value": (sample_sum / n) if n else 0.0,
         "pixel_crc": zlib.crc32(gray) & 0xFFFFFFFF,
     }
 
@@ -1358,6 +1352,7 @@ def decode_y4m(payload: bytes) -> dict:
         "fps_den": fps_den,
         "duration_ms": (n_frames * 1000 * fps_den) // fps_num,
         "n_pixels": n_pixels,
+        "sample_sum": y_sum,
         "mean_value": (y_sum / n_pixels) if n_pixels else 0.0,
         "pixel_crc": crc & 0xFFFFFFFF,
     }

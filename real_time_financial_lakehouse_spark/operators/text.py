@@ -13,6 +13,9 @@ backrefs/lookarounds -- both engines then match identically.
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -758,21 +761,19 @@ def bm25_search(
     lexical complement to the vector path (cosine/IVF/LSH): together
     they are the hybrid-retrieval pair a RAG stack actually deploys.
 
-    Scale: ONE corpus tokenize pass computes the per-doc length AND the
+    Scale: ONE lazy corpus tokenize computes the per-doc length AND the
     per-query-term counts in the same partial-aggregable groupBy(doc_id)
-    (conditional sums -- the query-term list is a compile-time constant,
-    so tf per term is a column, not a join); every other frame (N,
-    avgdl, df per term, the postings unpivot) is a marginal of that
-    doc-cardinality aggregate, which an eager ``localCheckpoint`` cuts
-    so all three read one materialized copy.  The former shape
-    re-tokenized the corpus once per consumer (4 scans in the plan) and
-    shuffle-joined postings back to the dl table; now nothing
-    corpus-sized is ever joined or re-read.  Top-N is
-    TakeOrderedAndProject, never a global sort.  ln() on both engines,
-    quantized at the boundary.  Repeated query terms count once; an
-    empty query returns no rows."""
-    from ..functions.numeric import qround
-
+    (conditional counts -- the query-term list is a compile-time constant,
+    so tf per term is a column, not a join).  Two frames read that
+    doc-cardinality aggregate: a one-row marginal (N, avgdl and df per
+    term as count(tf > 0)) broadcast-crossed back onto it, where each
+    doc's score is a fixed-order sum of per-term columns.  Both read
+    every per-doc column, so their exchange subtrees are canonically
+    equal and AQE reuses the one per-doc shuffle: nothing re-tokenizes,
+    nothing corpus-sized is joined, and no job runs at construction.
+    Top-N is TakeOrderedAndProject, never a global sort.  ln() on both
+    engines, quantized at the boundary.  Repeated query terms count once;
+    an empty query returns no rows."""
     qlist = list(dict.fromkeys(query_terms))
     if not qlist:
         return documents.select(
@@ -788,51 +789,37 @@ def bm25_search(
         )
         .filter(F.length("term") >= 3)
     )
-    # Eager lineage cut on the NARROW per-doc aggregate (doc_id + k + 1
-    # longs -- the guide-s8 "lightweight proxy", never text): its three
-    # consumers (stats, df marginal, postings unpivot) prune DIFFERENT
-    # column subsets, which makes their exchange subtrees canonically
-    # distinct, so without the cut neither static ReuseExchange nor AQE
-    # stage reuse fires and the corpus tokenize runs once per consumer
-    # (verified on the final adaptive plan: 3 Generate-explode stages).
+    tfs = [F.col(f"__tf_{i}") for i in range(len(qlist))]
+    dfs = [F.col(f"__df_{i}") for i in range(len(qlist))]
     per_doc = terms.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("dl"),
         *[
-            F.sum(F.when(F.col("term") == t, 1).otherwise(0)).alias(f"__tf_{i}")
+            F.count(F.when(F.col("term") == t, 1)).alias(f"__tf_{i}")
             for i, t in enumerate(qlist)
         ],
-    ).localCheckpoint(eager=True)
+    )
     stats = per_doc.agg(
         F.count(F.lit(1)).cast("double").alias("n_docs"),
         F.avg("dl").alias("avgdl"),
+        *[F.count(F.when(tf > 0, 1)).cast("double").alias(f"__df_{i}") for i, tf in enumerate(tfs)],
     )
-    stack_args = [
-        c for i, t in enumerate(qlist) for c in (F.lit(t), F.col(f"__tf_{i}"))
+    n_docs = F.col("n_docs")
+    norm = k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))
+    term_scores = [
+        F.when(
+            tf > 0,
+            F.log((n_docs - df + 0.5) / (df + 0.5) + 1.0) * (tf * (k1 + 1)) / (tf + norm),
+        ).otherwise(0.0)
+        for tf, df in zip(tfs, dfs)
     ]
-    tf_tbl = per_doc.select(
-        "doc_id",
-        "dl",
-        F.stack(F.lit(len(qlist)), *stack_args).alias("term", "tf"),
-    ).filter(F.col("tf") > 0)
-    df_tbl = tf_tbl.groupBy("term").agg(
-        F.count(F.lit(1)).cast("double").alias("df")
-    )
     scored = (
-        tf_tbl.join(F.broadcast(df_tbl), "term")
-        .crossJoin(F.broadcast(stats))
+        per_doc.crossJoin(F.broadcast(stats))
         .select(
             "doc_id",
-            (
-                F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
-                * (F.col("tf") * (k1 + 1))
-                / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl")))
-            ).alias("term_score"),
+            reduce(operator.add, [(tf > 0).cast("long") for tf in tfs]).alias("n_matched_terms"),
+            reduce(operator.add, term_scores).alias("score_raw"),
         )
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_matched_terms"),
-            F.sum("term_score").alias("score_raw"),
-        )
+        .filter(F.col("n_matched_terms") > 0)
     )
     return (
         scored.select(

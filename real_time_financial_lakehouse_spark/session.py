@@ -26,6 +26,11 @@ a scale-aware configuration:
   atomically on an existing destination on HDFS.  Set when the session
   starts, it reaches every ``newSession()`` child (the streaming drains
   run there).
+* ``spark.sql.codegen.cache.maxEntries`` sized to the engine's working set
+  of generated classes (``CODEGEN_CACHE_ENTRIES``).  The engine serves the
+  same plans over and over, and every cache miss is a Janino compile on
+  the driver plus a fresh class whose methods start back in the
+  interpreter on every executor thread.
 """
 
 from __future__ import annotations
@@ -37,6 +42,20 @@ from pyspark.sql import SparkSession
 CHECKPOINT_FILE_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
 )
+
+# Spark's default of 100 entries is smaller than one pass of perfbench's
+# four-query LLM mix (99 classes), so every steady-state pass recompiled
+# about 45 of them.  scripts/codegen_census.py measures the working set:
+# the 337 non-streaming, non-table_io queries at sf0.001 compile 4181
+# distinct classes on a first pass.  The cache is LRU, so a cap below
+# that thrashes a repeated sweep: its second pass recompiles 7536 classes
+# at 100 and 3150 at 4096, but 182 at 4608 and 218 at 16384 (those are
+# queries whose plans differ per build).  4608 leaves ~10% headroom.
+# Retained classes cost about 8.6 KB of metaspace each (222.8 -> 258.0
+# MB used after a GC, cap 100 -> 4608), so a full cache is at most
+# ~40 MB.  A static conf: it is read when the session starts.
+CODEGEN_CACHE_ENTRIES = 4608
+
 
 def default_parallelism() -> int:
     env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -72,6 +91,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # --- python boundary ----------------------------------------------

@@ -715,6 +715,41 @@ def test_wav_decode_payload_dispatches_to_real_decoder():
     assert feats["header_hex"] == wav[:4].hex()
 
 
+@pytest.mark.parametrize("magic", [b"GIF89a", b"GIF87a"])
+def test_gif_decode_payload_dispatches_to_real_decoder(magic):
+    """GIF payloads of either version decode for real under fake=False:
+    byte_sum / byte_mean are the decoded gray samples' sum and mean."""
+    pixels = b"\x00\x80\xff\x40\x10\x20"
+    gif = magic + multimodal.encode_gif(3, 2, pixels)[6:]
+    feats = multimodal.decode_payload("image", gif, fake=False)
+    assert feats["byte_sum"] == sum(pixels)
+    assert feats["byte_mean"] == sum(pixels) / 6
+    assert feats["header_hex"] == gif[:4].hex()
+
+
+def test_y4m_decode_payload_dispatches_to_real_decoder():
+    """A YUV4MPEG2 stream decodes for real under fake=False: byte_sum /
+    byte_mean cover the Y samples of every frame."""
+    frames = [b"abcd", b"\x00\x01\x02\x03"]
+    y4m = multimodal.encode_y4m(2, 2, frames)
+    feats = multimodal.decode_payload("video", y4m, fake=False)
+    total = sum(frames[0]) + sum(frames[1])
+    assert feats["byte_sum"] == total
+    assert feats["byte_mean"] == total / 8
+    assert feats["header_hex"] == y4m[:4].hex()
+
+
+@pytest.mark.parametrize("payload", [b"GIF89a\x00", b"YUV4MPEG2 W2\n"])
+def test_decode_payload_corrupt_gif_y4m_fall_back_only_when_fake(payload):
+    """Bytes that only start with the GIF or Y4M magic get the byte-stat
+    fake under fake=True and surface the parse error under fake=False,
+    the same rule as PNG and JPEG."""
+    feats = multimodal.decode_payload("image", payload, fake=True)
+    assert feats["byte_sum"] == sum(payload)
+    with pytest.raises((ValueError, IndexError)):
+        multimodal.decode_payload("image", payload, fake=False)
+
+
 def test_embedding_outliers_flags_planted_stray(spark):
     """A vector far from its label's centroid must be the flagged
     outlier; tight cluster members must not flag; a single-member label

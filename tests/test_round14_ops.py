@@ -115,10 +115,11 @@ def test_chunked_trailing_rejects_small_blocks():
 
 
 def test_bm25_one_pass_plan(spark, sf_dir):
-    """bm25_search's r14 rewrite: the corpus is tokenized once -- no
-    shuffle join of postings back to a second corpus-derived dl table
-    (the doc length rides the same aggregate), and df/stats are
-    marginals.  The only joins left are broadcasts of term/stat rows."""
+    """bm25_search tokenizes the corpus once, lazily: its two consumers
+    (the one-row N/avgdl/df marginal and the per-doc scoring) read every
+    column of the per-doc aggregate, so AQE reuses that one shuffle --
+    exactly one Generate explode in the final plan, no lineage cut, and
+    the only join is the broadcast of the marginal row."""
     from real_time_financial_lakehouse_spark.catalog import load_table
     from real_time_financial_lakehouse_spark.operators.text import bm25_search
 
@@ -129,11 +130,10 @@ def test_bm25_one_pass_plan(spark, sf_dir):
         df._jdf.queryExecution(), "simple"
     ).split("== Initial Plan ==")[0]
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
-    # one tokenize pass: it runs once at the per-doc proxy's eager
-    # lineage cut, so the queried plan re-tokenizes NOTHING (no
-    # Generate explode) and every consumer scans the cut RDD
-    assert plan.count("Generate explode") == 0
-    assert "ExistingRDD" in plan
+    assert plan.count("Generate explode") == 1
+    assert "ReusedExchange" in plan
+    assert "ExistingRDD" not in plan and "LogicalRDD" not in plan
+    assert "TakeOrderedAndProject" in plan
 
 
 def test_intra_label_dispersion_no_hof_fallback(spark, sf_dir):
